@@ -272,6 +272,30 @@ def test_dup_clusters_long_chain_converges(spark):
     assert got == {i: 100 for i in range(100, 113)}
 
 
+def test_dup_clusters_large_graphs_share_one_exit_handler(spark, monkeypatch):
+    """Label sets over 1024 nodes come back file-backed; their temp dirs
+    are removed at exit by ONE atexit handler, not one per call."""
+    import atexit
+    import os
+
+    from vastdb_sdk_spark.operators import dedup
+
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.append(fn))
+    monkeypatch.setattr(dedup, "_EXIT_TEMP_DIRS", [], raising=False)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1100)], "id_a LONG, id_b LONG"
+    )
+    for _ in range(2):
+        got = dedup.dup_clusters(pairs).collect()
+        assert len(got) == 1101 and {r.cluster_id for r in got} == {0}
+    assert len(registered) == 1
+    dirs = list(dedup._EXIT_TEMP_DIRS)
+    assert len(dirs) == 2 and all(os.path.isdir(d) for d in dirs)
+    registered[0]()
+    assert not any(os.path.exists(d) for d in dirs)
+
+
 def test_quality_percentile_filter(spark):
     from vastdb_sdk_spark.operators.sampling import quality_percentile_filter
 
@@ -546,6 +570,31 @@ def test_release_all_pins_spares_user_persisted_frames(spark):
     assert user.storageLevel.useMemory or user.storageLevel.useDisk
     assert user.count() == 50
     user.unpersist(True)
+
+
+def test_release_all_pins_spares_same_rdd_id_of_a_new_context(spark, monkeypatch):
+    """Pins are keyed by SparkContext as well as RDD id: ids restart with
+    every context, so an id pinned under a stopped context must not make
+    the sweep unpersist the RDD holding that id in the new context."""
+    from pyspark import SparkContext
+
+    from vastdb_sdk_spark.operators.pinning import (
+        _LIVE_PIN_IDS,
+        pin,
+        release,
+        release_all_pins,
+    )
+
+    release_all_pins(spark)
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "applicationId", property(lambda sc: "stopped-app"))
+        stale = pin(spark.range(10).selectExpr("id"))
+    # ``stale``'s RDD now stands for the new context's RDD with the id the
+    # stopped context pinned
+    assert release_all_pins(spark) == 0
+    assert not _LIVE_PIN_IDS
+    assert stale.count() == 10  # blocks still there: a released pin cannot recompute
+    release(stale)
 
 
 def test_operator_loop_pins_drain_without_harness_cleanup(spark):

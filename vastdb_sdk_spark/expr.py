@@ -1,4 +1,4 @@
-"""Predicate expression DSL + translation to Spark ``Column``.
+"""Predicate expression DSL + translation to Spark SQL text.
 
 The reference accepts **ibis** boolean expressions (including the deferred
 form ``ibis._.col > 2``) and compiles them to an Arrow Compute IR flatbuffer
@@ -6,23 +6,26 @@ form ``ibis._.col > 2``) and compiles them to an Arrow Compute IR flatbuffer
 operator surface — ``t['b'] < 2``, ``&``/``|``/``~``, ``between``, ``isin``,
 ``isnull``, ``contains``, ``startswith``, struct sub-field chains
 ``t['s']['q']['q1']`` (vastdb/tests/test_nested.py:103-160) — but compile to
-a Spark ``Column`` and let Catalyst do the pushdown.
+SQL text that Spark parses into one ``Column`` (``F.expr``), and let Catalyst
+do the pushdown. Like the reference's single IR blob, a predicate crosses
+the JVM boundary once; built node by node as ``Column`` objects, a 100-key
+``isin`` took ~430 py4j round trips. :func:`quote_ident` and
+:func:`sql_literal` are the shared renderer for plan-time SQL text.
 
 Deliberate superset (SURVEY.md §2.2 / Phase 1): the reference restricts
 predicates to AND-of-single-column-OR-groups (vastdb/_internal.py:280-283)
 and only supports NOT over isnull; Catalyst has no such restriction, so any
 boolean combination is accepted here.
-
-If the real ``ibis`` package is importable, ibis expressions are also
-accepted and translated by compiling them to SQL; the container does not ship
-ibis, so the DSL below is the primary path.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any, Iterable
+import decimal
+import math
+from typing import Any, Iterable, Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -75,7 +78,7 @@ class Expr:
     # The manifest pruner (plans/pruning.py) only understands bare
     # column-vs-literal comparisons; arithmetic anywhere in a predicate
     # makes extract_intervals return None (no pruning) — correct, never
-    # wrong-results. Covered by test_dsl_contracts.
+    # wrong-results. Covered by test_arithmetic_predicates_never_prune.
     def __add__(self, other: Any) -> "Expr":
         return BinOp("+", self, _wrap(other))
 
@@ -154,16 +157,14 @@ class Expr:
         return id(self)
 
     # -- compilation -------------------------------------------------------
-    def to_spark(self) -> Column:
+    def to_sql(self) -> str:
         raise NotImplementedError
 
-    def root_columns(self) -> set:
-        out: set = set()
-        self._collect_roots(out)
-        return out
+    def to_spark(self) -> Column:
+        return F.expr(self.to_sql())
 
-    def _collect_roots(self, out: set) -> None:
-        pass
+    def root_columns(self) -> set:
+        return {n.path[0] for n in _walk(self) if isinstance(n, ColumnRef)}
 
 
 class ColumnRef(Expr):
@@ -180,49 +181,26 @@ class ColumnRef(Expr):
             raise AttributeError(name)
         return ColumnRef(*self.path, name)
 
-    def to_spark(self) -> Column:
-        col = F.col(self.path[0])
-        for part in self.path[1:]:
-            col = col.getField(part)
-        return col
-
-    def _collect_roots(self, out: set) -> None:
-        out.add(self.path[0])
+    def to_sql(self) -> str:
+        # a subscript is what Column.getField builds; "a.b" names one column
+        return quote_ident(self.path[0]) + "".join(f"[{sql_literal(p)}]" for p in self.path[1:])
 
     def __repr__(self) -> str:
         return f"ColumnRef({'.'.join(self.path)})"
-
-    __hash__ = Expr.__hash__
 
 
 class Literal(Expr):
     def __init__(self, value: Any):
         self.value = value
 
-    def to_spark(self) -> Column:
-        return F.lit(_to_spark_literal(self.value))
+    def to_sql(self) -> str:
+        return sql_literal(self.value)
 
     def __repr__(self) -> str:
         return f"Literal({self.value!r})"
 
-    __hash__ = Expr.__hash__
 
-
-_SPARK_BINOPS = {
-    "==": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-    "and": lambda a, b: a & b,
-    "or": lambda a, b: a | b,
-    "+": lambda a, b: a + b,
-    "-": lambda a, b: a - b,
-    "*": lambda a, b: a * b,
-    "/": lambda a, b: a / b,
-    "%": lambda a, b: a % b,
-}
+_SQL_BINOPS = {"==": "=", "and": "AND", "or": "OR"}
 
 
 class BinOp(Expr):
@@ -231,79 +209,57 @@ class BinOp(Expr):
         self.left = left
         self.right = right
 
-    def to_spark(self) -> Column:
-        return _SPARK_BINOPS[self.op](self.left.to_spark(), self.right.to_spark())
-
-    def _collect_roots(self, out: set) -> None:
-        self.left._collect_roots(out)
-        self.right._collect_roots(out)
+    def to_sql(self) -> str:
+        # spaces around the operator: "a - -1" must never read as a comment
+        op = _SQL_BINOPS.get(self.op, self.op)
+        if self.op not in ("and", "or"):
+            return f"({self.left.to_sql()} {op} {self.right.to_sql()})"
+        # a chain renders flat: Spark's parser overflows its stack at ~150
+        # nested parentheses (it balances a flat chain of over three terms)
+        terms, node = [], self
+        while isinstance(node, BinOp) and node.op == self.op:
+            terms.append(node.right)
+            node = node.left
+        terms.append(node)
+        return "(" + f" {op} ".join(t.to_sql() for t in reversed(terms)) + ")"
 
     def __repr__(self) -> str:
         return f"({self.left!r} {self.op} {self.right!r})"
 
-    __hash__ = Expr.__hash__
 
-
-class Not(Expr):
+class _Unary(Expr):
     def __init__(self, inner: Expr):
         self.inner = inner
 
-    def to_spark(self) -> Column:
-        return ~self.inner.to_spark()
 
-    def _collect_roots(self, out: set) -> None:
-        self.inner._collect_roots(out)
-
-    __hash__ = Expr.__hash__
+class Not(_Unary):
+    def to_sql(self) -> str:
+        return f"(NOT {self.inner.to_sql()})"
 
 
-class IsNull(Expr):
-    def __init__(self, inner: Expr):
-        self.inner = inner
-
-    def to_spark(self) -> Column:
-        return self.inner.to_spark().isNull()
-
-    def _collect_roots(self, out: set) -> None:
-        self.inner._collect_roots(out)
-
-    __hash__ = Expr.__hash__
+class IsNull(_Unary):
+    def to_sql(self) -> str:
+        return f"({self.inner.to_sql()} IS NULL)"
 
 
-class Isin(Expr):
+class Isin(_Unary):
     def __init__(self, inner: Expr, values: list):
-        self.inner = inner
+        super().__init__(inner)
         self.values = [_to_spark_literal(v) for v in values]
 
-    def to_spark(self) -> Column:
-        return self.inner.to_spark().isin(self.values)
-
-    def _collect_roots(self, out: set) -> None:
-        self.inner._collect_roots(out)
-
-    __hash__ = Expr.__hash__
+    def to_sql(self) -> str:
+        vals = ", ".join(sql_literal(v) for v in self.values)
+        return f"({self.inner.to_sql()} IN ({vals}))"
 
 
-class StrOp(Expr):
+class StrOp(_Unary):
     def __init__(self, op: str, inner: Expr, arg: str):
+        super().__init__(inner)
         self.op = op
-        self.inner = inner
         self.arg = arg
 
-    def to_spark(self) -> Column:
-        col = self.inner.to_spark()
-        if self.op == "contains":
-            return col.contains(self.arg)
-        if self.op == "startswith":
-            return col.startswith(self.arg)
-        if self.op == "endswith":
-            return col.endswith(self.arg)
-        raise NotSupportedCommand(self.op)
-
-    def _collect_roots(self, out: set) -> None:
-        self.inner._collect_roots(out)
-
-    __hash__ = Expr.__hash__
+    def to_sql(self) -> str:  # contains / startswith / endswith are SQL functions too
+        return f"{self.op}({self.inner.to_sql()}, {sql_literal(self.arg)})"
 
 
 # ---------------------------------------------------------------------------
@@ -334,12 +290,49 @@ def _wrap(value: Any) -> Expr:
 
 
 def _to_spark_literal(value: Any) -> Any:
-    """Normalize Python/Arrow scalars to what F.lit accepts."""
+    """Normalize Arrow and NumPy scalars to plain Python values."""
     if isinstance(value, pa.Scalar):
-        value = value.as_py()
-    if isinstance(value, (_dt.datetime, _dt.date)):
-        return value
+        return value.as_py()
+    if isinstance(value, np.generic):
+        return value.item()
     return value
+
+
+def quote_ident(name: str) -> str:
+    """A backtick-quoted SQL identifier naming exactly ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(value: Any) -> str:
+    """SQL text of a Python value, typed as ``F.lit(value)`` types it (ints
+    INT or BIGINT by magnitude, floats DOUBLE, NumPy scalars as Python
+    values); a naive ``datetime`` is read in the process's local time zone."""
+    value = _to_spark_literal(value)
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        if not -(2**63) <= value < 2**63:
+            raise InvalidArgument(f"integer literal {value} is outside the BIGINT range")
+        return str(value)
+    if isinstance(value, float):
+        # Spark casts 'nan', 'inf' and '-inf' to the IEEE values
+        return repr(value) + "D" if math.isfinite(value) else f"CAST('{value}' AS DOUBLE)"
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(value, decimal.Decimal) and value.is_finite():
+        return f"{value}BD"
+    if isinstance(value, (bytes, bytearray)):
+        return f"X'{value.hex()}'"
+    if isinstance(value, _dt.datetime):
+        utc = value.astimezone(_dt.timezone.utc)
+        return f"TIMESTAMP'{utc.isoformat(sep=' ', timespec='microseconds')}'"
+    if isinstance(value, _dt.date):
+        return f"DATE'{value.isoformat()}'"
+    if isinstance(value, list):
+        return f"array({', '.join(map(sql_literal, value))})"
+    raise InvalidArgument(f"unsupported literal {value!r} of type {type(value).__name__}")
 
 
 def _validate_path(schema: pa.Schema, path: tuple) -> None:
@@ -357,19 +350,25 @@ def _validate_path(schema: pa.Schema, path: tuple) -> None:
         dt = dt.field(idx).type
 
 
+def _walk(pred: Expr) -> Iterator[Expr]:
+    """Every node of ``pred``, iteratively (trees can be deep chains)."""
+    stack = [pred]
+    while stack:
+        node = stack.pop()
+        yield node
+        if isinstance(node, BinOp):
+            stack += [node.left, node.right]
+        elif isinstance(node, _Unary):
+            stack.append(node.inner)
+
+
 def validate_predicate(pred: Expr, schema: pa.Schema) -> None:
     """The 'analyzer' step: resolve every column path against the table's
     Arrow schema (reference resolves Deferred/ibis expressions at select
     time — vastdb/table.py:491-493)."""
-    stack = [pred]
-    while stack:
-        node = stack.pop()
+    for node in _walk(pred):
         if isinstance(node, ColumnRef):
             _validate_path(schema, node.path)
-        elif isinstance(node, BinOp):
-            stack += [node.left, node.right]
-        elif isinstance(node, (Not, IsNull, Isin, StrOp)):
-            stack.append(node.inner)
 
 
 def to_spark_predicate(pred: Any, schema: pa.Schema | None = None) -> Column | None:

@@ -689,6 +689,31 @@ def simhash_near_pairs(
     )
 
 
+_EXIT_TEMP_DIRS: list[str] = []
+_EXIT_TEMP_DIRS_LOCK = threading.Lock()
+
+
+def _remove_exit_temp_dirs() -> None:
+    import shutil
+
+    for path in _EXIT_TEMP_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _exit_temp_dir(prefix: str) -> str:
+    """A fresh temp dir removed at process exit. One atexit handler covers
+    every such dir, however many calls make one."""
+    import atexit
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    with _EXIT_TEMP_DIRS_LOCK:
+        if not _EXIT_TEMP_DIRS:
+            atexit.register(_remove_exit_temp_dirs)
+        _EXIT_TEMP_DIRS.append(path)
+    return path
+
+
 def dup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -831,18 +856,13 @@ def dup_clusters(
             return local_df(spark, labels, "doc_id LONG, cluster_id LONG")
         # larger label sets go back file-backed (plan-size bounded).
         # The caller consumes the returned frame after we return, so the
-        # file cannot be removed here; register the dir for removal at
-        # process exit instead — without it a long session leaks one
-        # temp dir per large-graph call (VERDICT r14).
-        import atexit
-        import shutil
-        import tempfile
-
+        # file cannot be removed here; it is removed at process exit
+        # instead — without it a long session leaks one temp dir per
+        # large-graph call (VERDICT r14).
         import pyarrow as _pa
         import pyarrow.parquet as _pq
 
-        tmpdir = tempfile.mkdtemp(prefix="dupclusters_")
-        atexit.register(shutil.rmtree, tmpdir, ignore_errors=True)
+        tmpdir = _exit_temp_dir("dupclusters_")
         path = os.path.join(tmpdir, "labels.parquet")
         _pq.write_table(
             _pa.table(

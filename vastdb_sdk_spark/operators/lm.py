@@ -375,7 +375,7 @@ def hybrid_topk(
     return (
         # literal query norm computed at plan time (bit-identical values;
         # the generic form re-folds the O(d) literal norm per row)
-        joined.withColumn(out_col, cosine_similarity_to_lit(F.col(emb_col), query_vec))
+        joined.withColumn(out_col, cosine_similarity_to_lit(emb_col, query_vec))
         .orderBy(F.desc(out_col), F.asc("__sl_id"))
         .limit(int(k))
         .select(

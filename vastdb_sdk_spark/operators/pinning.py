@@ -29,18 +29,25 @@ _PIN_SINK: contextvars.ContextVar[list | None] = contextvars.ContextVar(
     "vastdb_pin_sink", default=None
 )
 
-# RDD ids of every live pin THIS library created (r15): the session
-# sweep below releases exactly these, so a user's own persist()ed or
-# checkpointed frames are never unpersisted out from under them.
-# Ids are removed on release; a released-by-GC pin's stale id is
-# harmless (the sweep looks ids up in the session's live-RDD map).
-_LIVE_PIN_IDS: set[int] = set()
+# (SparkContext application id, RDD id) of every live pin THIS library
+# created (r15): the session sweep below releases exactly these, so a
+# user's own persist()ed or checkpointed frames are never unpersisted out
+# from under them. RDD ids restart with each SparkContext, so a bare id
+# left by a stopped context could name a user's RDD in its successor;
+# the application id tells them apart. Keys are removed on release; a
+# released-by-GC pin's stale key is harmless (the sweep looks ids up in
+# the session's live-RDD map).
+_LIVE_PIN_IDS: set[tuple[str, int]] = set()
 
 
 def _pin_rdd(pinned: DataFrame):
     # the analyzed plan of a localCheckpoint result is a LogicalRDD
     # whose .rdd holds the persisted checkpoint blocks
     return pinned._jdf.queryExecution().analyzed().rdd()
+
+
+def _pin_key(pinned: DataFrame, rdd) -> tuple[str, int]:
+    return (pinned.sparkSession.sparkContext.applicationId, rdd.id())
 
 
 def pin(frame: DataFrame) -> DataFrame:
@@ -51,7 +58,7 @@ def pin(frame: DataFrame) -> DataFrame:
     :func:`release` / :func:`release_all_pins` sweep."""
     pinned = frame.localCheckpoint(eager=True)
     try:
-        _LIVE_PIN_IDS.add(_pin_rdd(pinned).id())
+        _LIVE_PIN_IDS.add(_pin_key(pinned, _pin_rdd(pinned)))
     except Exception:
         pass  # tracking is best-effort; GC still reclaims
     sink = _PIN_SINK.get()
@@ -66,7 +73,7 @@ def release(pinned: DataFrame) -> None:
     localCheckpoint's lineage is truncated, so there is no recompute."""
     try:
         rdd = _pin_rdd(pinned)
-        _LIVE_PIN_IDS.discard(rdd.id())
+        _LIVE_PIN_IDS.discard(_pin_key(pinned, rdd))
         rdd.unpersist(True)
     except Exception:
         pass  # session already stopped — nothing left to free
@@ -91,16 +98,19 @@ def release_all_pins(spark) -> int:
     dropped."""
     released = 0
     try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        sc = spark.sparkContext
+        app = sc.applicationId
+        jmap = sc._jsc.getPersistentRDDs()
         it = jmap.entrySet().iterator()
         while it.hasNext():
             kv = it.next()
-            if int(kv.getKey()) in _LIVE_PIN_IDS:
+            if (app, int(kv.getKey())) in _LIVE_PIN_IDS:
                 kv.getValue().unpersist(True)
                 released += 1
         # tracked ids absent from the live map were already reclaimed by
-        # the ContextCleaner — drop those stale entries too, so the
-        # registry never grows across a long session
+        # the ContextCleaner, and other contexts' ids died with them —
+        # drop those stale entries too, so the registry never grows
+        # across a long session
         _LIVE_PIN_IDS.clear()
     except Exception:
         pass  # session already stopped — nothing left to free

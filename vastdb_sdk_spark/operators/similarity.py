@@ -23,7 +23,15 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, distance_column, dot, norm
+from ..expr import quote_ident, sql_literal
+from ..functions.vector import (
+    cosine_similarity,
+    distance_column,
+    dot,
+    dot_sql,
+    norm,
+    vec_sql,
+)
 from .pinning import pin as _pin
 
 
@@ -36,7 +44,7 @@ def brute_force_topk(
     id_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors of one query vector."""
-    dist = distance_column(F.col(vec_col), query_vec, metric)
+    dist = distance_column(vec_col, query_vec, metric)
     out = df.withColumn("distance", dist)
     order = [F.col("distance").asc()]
     if id_col:
@@ -73,12 +81,14 @@ def rhp_signature_col(vec_col: str, planes: np.ndarray):
             "size is O(num_planes * dim). Split into bands "
             "(embedding_near_dup_pairs num_bands) instead of widening."
         )
-    sig = F.lit(0).cast("long")
+    # one parsed SQL expression: F.lit per plane element cost a few py4j
+    # round trips each, O(num_planes * dim) per call
+    v = quote_ident(vec_col)
+    sig = "CAST(0 AS BIGINT)"
     for i, plane in enumerate(planes):
-        d = dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in plane]))
-        bit = F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
+        d = dot_sql(v, vec_sql(plane))
+        sig = f"({sig} | shiftleft(CAST(CASE WHEN {d} >= 0 THEN 1 ELSE 0 END AS BIGINT), {i}))"
+    return F.expr(sig)
 
 
 def build_rhp_index(
@@ -1210,7 +1220,7 @@ def _topk_with_rerank(scored, q, k, rerank, id_col, dist_col, vec_col):
     if rerank < k:
         raise ValueError(f"rerank={rerank} must be >= k={k}")
     shortlist = scored.orderBy(*order).limit(int(rerank))
-    exact = distance_column(F.col(vec_col), [float(x) for x in q], "l2sq")
+    exact = distance_column(vec_col, [float(x) for x in q], "l2sq")
     return shortlist.withColumn(dist_col, exact).orderBy(*order).limit(k)
 
 
@@ -1800,29 +1810,23 @@ def matryoshka_topk(
     if len(query_vec) < dims:
         raise ValueError(f"query shorter than dims={dims}")
 
-    def _cos(vec, q):
-        qcol = F.array(*[F.lit(v) for v in q])
-        dot = F.aggregate(
-            F.zip_with(vec, qcol, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda a, x: a + x,
+    def _cos(vec: str, q):
+        # one parsed SQL expression over the array expression ``vec``
+        n1 = f"sqrt(aggregate({vec}, 0.0D, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+        n2 = sql_literal(sum(v * v for v in q) ** 0.5)
+        return F.expr(
+            f"({dot_sql(vec, vec_sql(q))} / (greatest({n1}, 1e-30D) * greatest({n2}, 1e-30D)))"
         )
-        n1 = F.sqrt(
-            F.aggregate(
-                vec, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
-            )
-        )
-        n2 = F.lit(sum(v * v for v in q) ** 0.5)
-        return dot / (F.greatest(n1, F.lit(1e-30)) * F.greatest(n2, F.lit(1e-30)))
 
-    trunc = F.slice(F.col(vec_col), 1, int(dims))
+    col = quote_ident(vec_col)
+    trunc = f"slice({col}, 1, {int(dims)})"
     stage1 = (
         df.withColumn("__cos_t", _cos(trunc, qt))
         .orderBy(F.col("__cos_t").desc(), F.col(id_col).asc())
         .limit(int(shortlist))
     )
     return (
-        stage1.withColumn("__cos_f", _cos(F.col(vec_col), qf))
+        stage1.withColumn("__cos_f", _cos(col, qf))
         .orderBy(F.col("__cos_f").desc(), F.col(id_col).asc())
         .limit(int(k))
         .select(

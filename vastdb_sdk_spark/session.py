@@ -20,7 +20,7 @@ from .errors import MissingBucket
 def build_spark(config: EngineConfig | None = None, app_name: str = "vastdb_sdk_spark") -> SparkSession:
     """Create (or get) a local SparkSession tuned for this engine."""
     config = config or EngineConfig()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -61,7 +61,7 @@ from .errors import (
     ProjectionExists,
     ViewExists,
 )
-from .expr import to_spark_predicate
+from .expr import quote_ident, sql_literal, to_spark_predicate
 from .types import (
     arrow_schema_to_spark,
     arrow_type_to_spark,
@@ -414,6 +414,14 @@ class Table:
             )
             groups.setdefault(key, []).append(fe)
 
+        out_names = [f.name for f in arrow]
+        if want_rid:
+            out_names.append(INTERNAL_ROW_ID)
+        if with_file_path:
+            out_names.append("__source_file")
+        if dv_paths:
+            out_names.append("__dv_fk")
+        rid_q = quote_ident(INTERNAL_ROW_ID)
         parts: list[DataFrame] = []
         for (has_phys_rid, cmap, part_items), fes in groups.items():
             cmap_d = dict(cmap) if cmap else {}
@@ -429,21 +437,21 @@ class Table:
                 fields.append(T.StructField(PHYSICAL_ROW_ID, T.LongType(), False))
             reader_schema = T.StructType(fields)
             df = self.spark.read.schema(reader_schema).parquet(*[fe.path for fe in fes])
-            # ONE projection straight to logical names (r15): the old
-            # withColumn/withColumnRenamed chains (source-file col, DV
-            # scope key, per-column renames, partition constants, rid) +
-            # a final physical->logical select cost ~330 py4j round
-            # trips / ~240 ms PER df() CALL in plan-rebuild chatter —
-            # and engine DML runs several df() scans per statement.
-            sel: list = []
+            # ONE projection straight to logical names, parsed from SQL
+            # text in a single round trip: withColumn chains cost ~330
+            # py4j round trips per df() call, a Column per output column
+            # still ~170 — and engine DML runs several df() scans per
+            # statement. Every part comes out in ``out_names`` order.
+            sel: list[str] = []
             for phys, (logical, st_type) in phys_fields.items():
                 if logical in part_d:
-                    sel.append(F.lit(part_d[logical]).cast(st_type).alias(logical))
+                    val = f"CAST({sql_literal(part_d[logical])} AS {st_type.simpleString()})"
                 else:
-                    sel.append(F.col(_file_col_for(phys, cmap_d)).alias(logical))
+                    val = quote_ident(_file_col_for(phys, cmap_d))
+                sel.append(f"{val} AS {quote_ident(logical)}")
             if want_rid:
                 if has_phys_rid:
-                    sel.append(F.col(PHYSICAL_ROW_ID).alias(INTERNAL_ROW_ID))
+                    sel.append(f"{quote_ident(PHYSICAL_ROW_ID)} AS {rid_q}")
                 elif len(fes) <= RID_LITERAL_MAP_MAX_FILES:
                     # keyed by full file path — basenames may collide across
                     # directories (e.g. zero-copy imports named alike).
@@ -459,28 +467,21 @@ class Table:
                     # GetMapValue on a literal map is a linear key scan
                     # per row, so this path is bounded to small file
                     # counts; larger scans take the join below.
-                    m = F.create_map(
-                        *[
-                            lit
-                            for fe in fes
-                            for lit in (
-                                F.lit("file:" + os.path.abspath(fe.path)),
-                                F.lit(fe.row_id_base),
-                            )
-                        ]
+                    kv = ", ".join(
+                        sql_literal("file:" + os.path.abspath(fe.path))
+                        + ", " + sql_literal(fe.row_id_base)
+                        for fe in fes
                     )
                     sel.append(
-                        (
-                            F.element_at(m, F.col("_metadata.file_path"))
-                            + F.col("_metadata.row_index")
-                        ).alias(INTERNAL_ROW_ID)
+                        f"(element_at(map({kv}), _metadata.file_path)"
+                        f" + _metadata.row_index) AS {rid_q}"
                     )
             if with_file_path:
-                sel.append(F.col("_metadata.file_path").alias("__source_file"))
+                sel.append("_metadata.file_path AS __source_file")
             if dv_paths:
                 # DV scope key: masks apply per owning file, so a
                 # replacement row reusing a masked id stays visible
-                sel.append(F.md5(F.col("_metadata.file_path")).alias("__dv_fk"))
+                sel.append("md5(_metadata.file_path) AS __dv_fk")
             rid_join = (
                 want_rid
                 and not has_phys_rid
@@ -490,9 +491,9 @@ class Table:
                 # the _metadata pseudo-column only resolves on the scan
                 # frame — carry what the rid join needs through the
                 # projection
-                sel.append(F.col("_metadata.file_path").alias("__file_path"))
-                sel.append(F.col("_metadata.row_index").alias("__row_index"))
-            df = df.select(*sel)
+                sel.append("_metadata.file_path AS __file_path")
+                sel.append("_metadata.row_index AS __row_index")
+            df = df.selectExpr(*sel)
             if rid_join:
                 base_map = [
                     ("file:" + os.path.abspath(fe.path), fe.row_id_base)
@@ -501,27 +502,16 @@ class Table:
                 base_df = self.spark.createDataFrame(
                     base_map, "__file_path STRING, __rid_base LONG"
                 )
-                df = (
-                    df.join(F.broadcast(base_df), "__file_path")
-                    .withColumn(
-                        INTERNAL_ROW_ID,
-                        F.col("__rid_base") + F.col("__row_index"),
-                    )
-                    .drop("__file_path", "__row_index", "__rid_base")
+                df = df.join(F.broadcast(base_df), "__file_path").selectExpr(
+                    *[
+                        f"__rid_base + __row_index AS {rid_q}"
+                        if n == INTERNAL_ROW_ID
+                        else quote_ident(n)
+                        for n in out_names
+                    ]
                 )
             parts.append(df)
 
-        out_names = [f.name for f in arrow]
-        if want_rid:
-            out_names.append(INTERNAL_ROW_ID)
-        if with_file_path:
-            out_names.append("__source_file")
-        if dv_paths:
-            out_names.append("__dv_fk")
-        parts = [
-            p if p.columns == out_names else p.select(*out_names)
-            for p in parts
-        ]
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -560,10 +550,8 @@ class Table:
         pred_col = to_spark_predicate(predicate, arrow)
         df = source if pred_col is None else source.filter(pred_col)
         if columns is not None:
-            cols = [F.col(c) for c in columns]
-            if internal_row_id:
-                cols.append(F.col(INTERNAL_ROW_ID))
-            df = df.select(*cols) if cols else df.select()
+            names = [*columns, INTERNAL_ROW_ID] if internal_row_id else columns
+            df = df.selectExpr(*map(quote_ident, names))
         if limit_rows is not None:
             df = df.limit(limit_rows)
         return df
@@ -3881,7 +3869,7 @@ class Table:
             df = df.filter(pred_col)
         from .functions.vector import distance_column
 
-        dist = distance_column(F.col(vcol), vec, metric)
+        dist = distance_column(vcol, vec, metric)
         out_cols = columns or [f.name for f in self.arrow_schema]
         df = (
             df.withColumn(VECTOR_DIST_COL, dist)
