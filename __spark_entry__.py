@@ -1513,25 +1513,23 @@ def q_dd_ngram_overlap(spark, sf):
     # pairs map-side — one corpus-sized exchange instead of two, no
     # eager materialization, and the pair aggregate gets map-side
     # partial aggregation. Bucket pair volume is IDENTICAL to the join's
-    # (sorted ids, a < b), so shared-gram counts are unchanged.
+    # (sorted ids, a < b), so shared-gram counts are unchanged. Pairs are
+    # STREAMED, two generators deep: posexplode gives one (i, a) row per
+    # bucket member, then each row explodes only its own tail ids[i+1:] —
+    # per-row state stays O(bucket), where one array of a bucket's k^2/2
+    # pairs could OOM a task on a hot gram (or pass Spark's 2^31-element
+    # array limit).
     g = d.select("doc_id", "source", F.explode(grams).alias("gram"))
     buckets = (
         g.groupBy("source", "gram")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    members = buckets.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+    tails = F.slice(F.col("ids"), F.col("i") + F.lit(2), F.size(F.col("ids")))
     pairs = (
-        buckets.select(F.explode(combos).alias("pr"))
-        .groupBy(F.col("pr.a").alias("doc_a"), F.col("pr.b").alias("doc_b"))
+        members.select("doc_a", F.explode(tails).alias("doc_b"))
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared_grams"))
         .filter(F.col("shared_grams") >= 40)
     )

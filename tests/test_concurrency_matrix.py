@@ -141,16 +141,22 @@ def test_drop_vs_dml_conflicts(two_tables):
 
 def test_noop_commit_does_not_conflict(two_tables):
     """Conflict detection is VALUE-based (object state at base vs tip), so
-    a commit whose net effect is nothing — here dedup_rows over a table
-    with no duplicates — does not invalidate a concurrent writer."""
-    tx1 = two_tables.transaction()
-    tx2 = two_tables.transaction()
-    tx1.bucket("bkt").schema("s").table("t1").dedup_rows()  # no dups -> no-op
-    _op("insert")(tx2, "t1")
-    tx1.commit()
-    tx2.commit()  # must NOT conflict
-    with two_tables.transaction() as tx:
-        assert tx.bucket("bkt").schema("s").table("t1").count_rows() == 6
+    a commit whose net effect is nothing — dedup_rows over a table with no
+    duplicates, or a delete_where matching no row — does not invalidate a
+    concurrent writer."""
+    noops = [
+        lambda t: t.dedup_rows(),
+        lambda t: t.delete_where(D.a > 100),
+    ]
+    for i, noop in enumerate(noops, start=2):
+        tx1 = two_tables.transaction()
+        tx2 = two_tables.transaction()
+        noop(tx1.bucket("bkt").schema("s").table("t1"))
+        _op("insert")(tx2, "t1")
+        tx1.commit()
+        tx2.commit()  # must NOT conflict
+        with two_tables.transaction() as tx:
+            assert tx.bucket("bkt").schema("s").table("t1").count_rows() == 3 * i
 
 
 def test_consume_changes_concurrent_commit_conflicts_then_redelivers(two_tables):

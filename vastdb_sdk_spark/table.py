@@ -1118,17 +1118,6 @@ class Table:
         return partition
 
     # -- update / delete by row id (reference: vastdb/table.py:779-843) ---
-    def _affected_split(self, ids: list[int]) -> tuple[list[FileEntry], list[FileEntry]]:
-        lo, hi = min(ids), max(ids)
-        affected, untouched = [], []
-        for fe in self.entry.files:
-            flo, fhi = fe.row_id_range()
-            if fhi < lo or flo > hi:
-                untouched.append(fe)
-            else:
-                affected.append(fe)
-        return affected, untouched
-
     def _rewrite_files(
         self, entry: TableEntry, affected: list[FileEntry], new_df: DataFrame, op: str
     ) -> None:
@@ -1143,8 +1132,10 @@ class Table:
             f"{op}-{os.getpid()}-{time.time_ns()}",
         )
         new_df.select(*cols).write.mode("overwrite").parquet(staging)
-        keep = [f for f in entry.files if f.path not in {a.path for a in affected}]
-        entry.files = keep
+        gone = {a.path for a in affected}
+        entry.files = [f for f in entry.files if f.path not in gone]
+        stat_cols = self._stat_columns(entry)
+        cmap = {pmap.get(c, c): c for c in stat_cols}
         for fn in sorted(os.listdir(staging)):
             if not fn.endswith(".parquet"):
                 continue
@@ -1161,8 +1152,6 @@ class Table:
             hi = max(
                 md.row_group(i).column(rid_idx).statistics.max for i in range(md.num_row_groups)
             )
-            stat_cols = self._stat_columns(entry)
-            cmap = {pmap.get(c, c): c for c in stat_cols}
             self._register_file(
                 entry, fpath, nrows, min_row_id=lo, max_row_id=hi,
                 col_stats=self._footer_col_stats(md, stat_cols, cmap),
@@ -1215,12 +1204,7 @@ class Table:
         if not ids:
             return
         entry = TableEntry.from_json(self.entry.to_json())
-        lo, hi = min(ids), max(ids)
-        affected = [
-            fe
-            for fe in entry.files
-            if not (fe.row_id_range()[1] < lo or fe.row_id_range()[0] > hi)
-        ]
+        affected = self._affected_files(entry, ids=ids)
         if not affected:
             return
         # merge-on-read: DV-mask the old row versions and append ONLY the
@@ -1255,24 +1239,19 @@ class Table:
             # fully distributed, like update_where: replacement rows and DV
             # sidecars are both written from executors — matched row ids
             # never land on the driver (a 100x-scale batch through this
-            # path used to materialize every id in driver memory). The DV
-            # write goes FIRST: its footer count doubles as the match
-            # detector, replacing the old limit(1).count() pre-job
-            if self._write_dvs_distributed(
-                affected, matched_df.select(INTERNAL_ROW_ID, "__source_file")
-            ):
-                self._rewrite_files(
-                    entry, [], matched_df.drop("__source_file"), "upd"
-                )
-                self._fold_heavy_dvs(entry, affected)
+            # path used to materialize every id in driver memory)
+            self._apply_dv_dml(
+                entry, "update", affected,
+                matched_df.select(INTERNAL_ROW_ID, "__source_file"),
+                matched_df.drop("__source_file"),
+                rows=len(ids),
+            )
         finally:
             matched_df.unpersist()
             try:
                 os.remove(upd_path)
             except OSError:
                 pass
-        self._mark_unsorted(entry)
-        self._mutate(entry, "update", rows=len(ids))
 
     # deletion-vector plumbing --------------------------------------------
     DV_REWRITE_FRACTION = 0.3  # fold DVs into a rewrite past this fraction
@@ -1305,7 +1284,6 @@ class Table:
             f"dv-{os.getpid()}-{time.time_ns()}",
         )
         out.write.partitionBy("__fk").mode("overwrite").parquet(staging)
-        self._state.staged_files.append(staging)
         by_key = {self._dv_owner_fk(fe): fe for fe in affected}
         total = 0
         for dirname in sorted(os.listdir(staging)):
@@ -1324,6 +1302,12 @@ class Table:
                 added += n
             fe.dv_rows += added
             total += added
+        if total:
+            self._state.staged_files.append(staging)
+        else:  # nothing masked: a no-op statement leaves no orphan dir
+            import shutil
+
+            shutil.rmtree(staging, ignore_errors=True)
         return total
 
     def _fold_heavy_dvs(self, entry: TableEntry, candidates: list[FileEntry]) -> None:
@@ -1342,6 +1326,65 @@ class Table:
         keep = self.df(internal_row_id=True, files=heavy)
         self._rewrite_files(entry, heavy, keep, "dvfold")
 
+    def _affected_files(
+        self, entry: TableEntry, *, predicate: Any = None, ids: list[int] | None = None
+    ) -> list[FileEntry]:
+        """Files of the statement's working copy ``entry`` that may hold a
+        target row: row-id range overlap with ``ids``, else manifest pruning
+        by ``predicate`` (no predicate: every file). Entries come from
+        ``entry`` so DV updates land on what the statement commits."""
+        if ids is not None:
+            lo, hi = min(ids), max(ids)
+            return [
+                fe
+                for fe in entry.files
+                if (r := fe.row_id_range())[0] <= hi and r[1] >= lo
+            ]
+        pruned = self._pruned_files(predicate)
+        if pruned is None:
+            return list(entry.files)
+        keep = {fe.path for fe in pruned}
+        return [fe for fe in entry.files if fe.path in keep]
+
+    def _apply_dv_dml(
+        self,
+        entry: TableEntry,
+        op: str,
+        affected: list[FileEntry],
+        masked: DataFrame | None,
+        replacement: DataFrame | None = None,
+        *,
+        replaces: list[FileEntry] = (),
+        changed: bool = False,
+        **audit,
+    ) -> int:
+        """The one commit order of a deletion-vector DML statement:
+
+        1. DV-mask the ``masked`` rows (``$row_id``, ``__source_file``) of
+           ``affected``; the written footers' row count is the match
+           detector (no pre-count job);
+        2. nothing masked, nothing in ``replaces`` and nothing ``changed``
+           earlier in the statement (merge's inserts): a TRUE no-op — no
+           manifest change or audit event, nothing goes stale, and a
+           concurrent writer does not conflict;
+        3. write ``replacement``: new versions of the masked rows, or the
+           survivors of ``replaces`` (delete's heavy route);
+        4. fold files whose DVs passed DV_REWRITE_FRACTION;
+        5. mark sort state, projections and indexes stale;
+        6. stage the commit; a callable ``audit`` value is called with the
+           masked-row count, which is also the return value."""
+        n = 0 if masked is None else self._write_dvs_distributed(affected, masked)
+        if not (n or replaces or changed):
+            return 0
+        if replacement is not None:
+            self._rewrite_files(entry, list(replaces), replacement, op)
+        self._fold_heavy_dvs(entry, affected)
+        self._mark_unsorted(entry)
+        self._mutate(
+            entry, op, **{k: v(n) if callable(v) else v for k, v in audit.items()}
+        )
+        return n
+
     def delete(self, rows: pa.RecordBatch | pa.Table) -> None:
         """Delete rows keyed by ``$row_id`` (reference: vastdb/table.py:819-843).
 
@@ -1359,14 +1402,9 @@ class Table:
         if not ids:
             return
         entry = TableEntry.from_json(self.entry.to_json())
-        # affected files computed on the WORKING COPY's entries so DV
-        # updates land on what _mutate commits
-        lo, hi = min(ids), max(ids)
-        affected = [
-            fe
-            for fe in entry.files
-            if not (fe.row_id_range()[1] < lo or fe.row_id_range()[0] > hi)
-        ]
+        affected = self._affected_files(entry, ids=ids)
+        if not affected:
+            return
         # Files that will certainly cross DV_REWRITE_FRACTION go STRAIGHT
         # to the fold rewrite, skipping the deletion-vector pass entirely:
         # the id batch is client-supplied, so a per-file UPPER BOUND on
@@ -1377,56 +1415,52 @@ class Table:
         # on a fold-triggering batch). The bound over-counts (dead ids,
         # replacement-file id gaps), so it only ever routes a file to the
         # rewrite a little early — both paths are exact.
-        heavy, light = [], []
-        if affected:
-            import bisect
+        import bisect
 
-            sorted_ids = sorted(ids)
-            for fe in affected:
-                flo, fhi = fe.row_id_range()
-                in_range = bisect.bisect_right(sorted_ids, fhi) - bisect.bisect_left(
-                    sorted_ids, flo
+        heavy, light = [], []
+        sorted_ids = sorted(ids)
+        for fe in affected:
+            flo, fhi = fe.row_id_range()
+            in_range = bisect.bisect_right(sorted_ids, fhi) - bisect.bisect_left(
+                sorted_ids, flo
+            )
+            if fe.rows and (fe.dv_rows + in_range) / fe.rows > self.DV_REWRITE_FRACTION:
+                heavy.append(fe)
+            else:
+                light.append(fe)
+        # one distributed job: which requested ids are live, and in which
+        # light file? (Catalyst prunes the scan to metadata columns); DV
+        # sidecars are written from executors like delete_where — matched
+        # ids never collect on the driver. The range bound is an
+        # over-count, so no light file can cross the fraction — the fold
+        # only ever re-checks light files already carrying earlier DVs
+        del_df, del_path = self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+        try:
+            matched = keep = None
+            if light:
+                base = self.df(
+                    internal_row_id=True, files=light, with_file_path=True
+                ).select(INTERNAL_ROW_ID, "__source_file")
+                matched = base.join(
+                    F.broadcast(del_df),
+                    base[INTERNAL_ROW_ID] == del_df["__update_row_id"],
+                    "left_semi",
                 )
-                if fe.rows and (fe.dv_rows + in_range) / fe.rows > self.DV_REWRITE_FRACTION:
-                    heavy.append(fe)
-                else:
-                    light.append(fe)
-        if affected:
-            # one distributed job: which requested ids are live, and in
-            # which file? (Catalyst prunes the scan to metadata columns);
-            # DV sidecars are written from executors like delete_where —
-            # matched ids never collect on the driver
-            del_df, del_path = self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+            if heavy:
+                keep = self.df(internal_row_id=True, files=heavy)
+                keep = keep.join(
+                    F.broadcast(del_df),
+                    keep[INTERNAL_ROW_ID] == del_df["__update_row_id"],
+                    "left_anti",
+                )
+            self._apply_dv_dml(
+                entry, "delete", light, matched, keep, replaces=heavy, rows=len(ids)
+            )
+        finally:
             try:
-                if light:
-                    base = self.df(
-                        internal_row_id=True, files=light, with_file_path=True
-                    ).select(INTERNAL_ROW_ID, "__source_file")
-                    matched = base.join(
-                        F.broadcast(del_df),
-                        base[INTERNAL_ROW_ID] == del_df["__update_row_id"],
-                        "left_semi",
-                    )
-                    self._write_dvs_distributed(light, matched)
-                    # the range bound is an over-count, so no light file can
-                    # cross the fraction — fold only ever re-checks `light`
-                    # files already carrying earlier DVs
-                    self._fold_heavy_dvs(entry, light)
-                if heavy:
-                    keep = self.df(internal_row_id=True, files=heavy)
-                    keep = keep.join(
-                        F.broadcast(del_df),
-                        keep[INTERNAL_ROW_ID] == del_df["__update_row_id"],
-                        "left_anti",
-                    )
-                    self._rewrite_files(entry, heavy, keep, "del")
-            finally:
-                try:
-                    os.remove(del_path)
-                except OSError:
-                    pass
-        self._mark_unsorted(entry)
-        self._mutate(entry, "delete", rows=len(ids))
+                os.remove(del_path)
+            except OSError:
+                pass
 
     def delete_where(self, predicate: Any) -> None:
         """Predicate DELETE (engine extension): fully distributed — no
@@ -1441,21 +1475,13 @@ class Table:
         if pred is None:
             raise InvalidArgument("delete_where requires a predicate")
         entry = TableEntry.from_json(self.entry.to_json())
-        pruned = self._pruned_files(predicate)
-        if pruned is None:
-            affected = list(entry.files)
-        else:
-            keep = {fe.path for fe in pruned}
-            affected = [fe for fe in entry.files if fe.path in keep]
+        affected = self._affected_files(entry, predicate=predicate)
         if not affected:
             return
         matching = self.df(
             internal_row_id=True, files=affected, with_file_path=True
         ).filter(pred)
-        self._write_dvs_distributed(affected, matching)
-        self._fold_heavy_dvs(entry, affected)
-        self._mark_unsorted(entry)
-        self._mutate(entry, "delete_where")
+        self._apply_dv_dml(entry, "delete_where", affected, matching)
 
     def dedup_rows(self, columns: list[str] | None = None) -> None:
         """Exact table dedup (engine extension): keep ONE row per distinct
@@ -1469,44 +1495,10 @@ class Table:
         semantics applied to a managed table in place. Near-dup cleanup
         composes: compute pairs with the operators tier, map losers to a
         predicate or rowid set, then delete."""
-        entry = TableEntry.from_json(self.entry.to_json())
-        cols = columns or [f.name for f in self.arrow_schema]
-        bad = [c for c in cols if c not in self.arrow_schema.names]
-        if bad:
-            raise InvalidArgument(f"unknown columns: {bad}")
-        unkeyable = [
-            c
-            for c in cols
-            if pa.types.is_map(self.arrow_schema.field(c).type)
-        ]
-        if unkeyable:
-            raise InvalidArgument(
-                f"map-typed columns cannot be dedup keys (Spark cannot "
-                f"group/partition on maps): {unkeyable}; pass explicit "
-                "columns= excluding them"
-            )
-        if not entry.files:
-            return
-        from pyspark.sql import Window as W
-
-        df = self.df(internal_row_id=True, files=entry.files, with_file_path=True)
-        w = W.partitionBy(*cols).orderBy(F.col(INTERNAL_ROW_ID).asc())
-        losers = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") > 1)
-            .select(INTERNAL_ROW_ID, "__source_file")
+        rid = F.col(INTERNAL_ROW_ID)
+        self._mask_window_losers(
+            "dedup_rows", columns or [f.name for f in self.arrow_schema], [rid.asc()], 1
         )
-        # ONE job: the DV write's own footer count detects the no-op —
-        # the old isEmpty() pre-check ran the window shuffle a second
-        # time just to decide whether to run it for real
-        if self._write_dvs_distributed(entry.files, losers) == 0:
-            # a duplicate-free table must be a TRUE no-op: no manifest
-            # mutation, no projection/vector-index staling, and a
-            # concurrent writer stays conflict-free
-            return
-        self._fold_heavy_dvs(entry, entry.files)
-        self._mark_unsorted(entry)
-        self._mutate(entry, "dedup_rows")
 
     def cap_rows_per_group(self, group_columns: list[str], n: int) -> None:
         """Per-group row quota in place (engine extension; batch-tier twin
@@ -1525,45 +1517,45 @@ class Table:
         the losers, which are written straight to per-file
         deletion-vector sidecars; no data file is rewritten and no row
         ids cross the driver."""
-        entry = TableEntry.from_json(self.entry.to_json())
         if n < 1:
             raise InvalidArgument(f"n={n} must be >= 1")
-        bad = [c for c in group_columns if c not in self.arrow_schema.names]
-        if bad:
-            raise InvalidArgument(f"unknown columns: {bad}")
         if not group_columns:
             raise InvalidArgument("group_columns must be non-empty")
-        unkeyable = [
-            c
-            for c in group_columns
-            if pa.types.is_map(self.arrow_schema.field(c).type)
-        ]
+        rid = F.col(INTERNAL_ROW_ID)
+        self._mask_window_losers(
+            "cap_rows_per_group", group_columns,
+            [F.md5(rid.cast("string")).asc(), rid.asc()], n,
+        )
+
+    def _mask_window_losers(
+        self, op: str, keys: list[str], order: list[Column], keep: int
+    ) -> None:
+        """DV-mask every row after the first ``keep`` of its ``keys`` group
+        in ``order`` (dedup_rows, cap_rows_per_group). ONE job: the DV
+        write's footer count detects the no-op — an isEmpty() pre-check
+        would run the window shuffle a second time."""
+        bad = [c for c in keys if c not in self.arrow_schema.names]
+        if bad:
+            raise InvalidArgument(f"unknown columns: {bad}")
+        unkeyable = [c for c in keys if pa.types.is_map(self.arrow_schema.field(c).type)]
         if unkeyable:
             raise InvalidArgument(
-                f"map-typed columns cannot be group keys (Spark cannot "
-                f"group/partition on maps): {unkeyable}"
+                f"map-typed columns cannot be keys (Spark cannot group/partition "
+                f"on maps): {unkeyable}; pass keys excluding them"
             )
+        entry = TableEntry.from_json(self.entry.to_json())
         if not entry.files:
             return
         from pyspark.sql import Window as W
 
         df = self.df(internal_row_id=True, files=entry.files, with_file_path=True)
-        rid = F.col(INTERNAL_ROW_ID)
-        w = W.partitionBy(*group_columns).orderBy(
-            F.md5(rid.cast("string")).asc(), rid.asc()
-        )
+        w = W.partitionBy(*keys).orderBy(*order)
         losers = (
             df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") > F.lit(int(n)))
+            .filter(F.col("__rn") > F.lit(int(keep)))
             .select(INTERNAL_ROW_ID, "__source_file")
         )
-        # ONE job: footer count from the DV write replaces the isEmpty()
-        # pre-check (see dedup_rows)
-        if self._write_dvs_distributed(entry.files, losers) == 0:
-            return
-        self._fold_heavy_dvs(entry, entry.files)
-        self._mark_unsorted(entry)
-        self._mutate(entry, "cap_rows_per_group")
+        self._apply_dv_dml(entry, op, entry.files, losers)
 
     def dedup_near_rows(
         self,
@@ -1731,12 +1723,9 @@ class Table:
                     dv_src = df.join(losers, INTERNAL_ROW_ID, "left_semi").select(
                         INTERNAL_ROW_ID, "__source_file"
                     )
-                    self._write_dvs_distributed(entry.files, dv_src)
+                    self._apply_dv_dml(entry, "dedup_near_rows", entry.files, dv_src)
                 finally:
                     pairs.unpersist()
-        self._fold_heavy_dvs(entry, entry.files)
-        self._mark_unsorted(entry)
-        self._mutate(entry, "dedup_near_rows")
 
     def drop_passage_dup_rows(
         self,
@@ -1783,12 +1772,9 @@ class Table:
             dv_src = df.join(losers, INTERNAL_ROW_ID, "left_semi").select(
                 INTERNAL_ROW_ID, "__source_file"
             )
-            self._write_dvs_distributed(entry.files, dv_src)
+            self._apply_dv_dml(entry, "drop_passage_dup_rows", entry.files, dv_src)
         finally:
             losers.unpersist()
-        self._fold_heavy_dvs(entry, entry.files)
-        self._mark_unsorted(entry)
-        self._mutate(entry, "drop_passage_dup_rows")
 
     def _span_file_diff(self, from_version: int, to_version: int) -> tuple:
         """Shared manifest-level file diff for change_span_stats AND
@@ -2023,12 +2009,7 @@ class Table:
         if bad:
             raise InvalidArgument(f"unknown columns in assignments: {bad}")
         entry = TableEntry.from_json(self.entry.to_json())
-        pruned = self._pruned_files(predicate)
-        if pruned is None:
-            affected = list(entry.files)
-        else:
-            keep = {fe.path for fe in pruned}
-            affected = [fe for fe in entry.files if fe.path in keep]
+        affected = self._affected_files(entry, predicate=predicate)
         if not affected:
             return
         # merge-on-read (see update()): only matching rows are written as a
@@ -2054,19 +2035,14 @@ class Table:
         out_cols.append(F.col("__source_file"))
         matched_df = base_df.select(*out_cols).persist()
         try:
-            # DV write first: its footer count replaces the old count()
-            # pre-job (one Spark job fewer per UPDATE)
-            if self._write_dvs_distributed(
-                affected, matched_df.select(INTERNAL_ROW_ID, "__source_file")
-            ):
-                self._rewrite_files(
-                    entry, [], matched_df.drop("__source_file"), "updw"
-                )
-                self._fold_heavy_dvs(entry, affected)
+            self._apply_dv_dml(
+                entry, "update_where", affected,
+                matched_df.select(INTERNAL_ROW_ID, "__source_file"),
+                matched_df.drop("__source_file"),
+                columns=sorted(assignments),
+            )
         finally:
             matched_df.unpersist()
-        self._mark_unsorted(entry)
-        self._mutate(entry, "update_where", columns=sorted(assignments))
 
     def merge(
         self,
@@ -2221,7 +2197,7 @@ class Table:
             base = self.df(internal_row_id=True, with_file_path=True)
             if target_alias:
                 base = base.alias(target_alias)
-            pre_files = list(self.entry.files)
+            pre_paths = {fe.path for fe in self.entry.files}
             cond = None
             for k in on:
                 c = base[k].eqNullSafe(source[k])
@@ -2326,30 +2302,31 @@ class Table:
                     reduce(DataFrame.unionByName, ins_parts)
                 )
 
-            # snapshot AFTER insert_df's own _mutate so its files survive
+            # snapshot AFTER insert_df's own _mutate so its files survive;
+            # DV attribution targets pre-merge files only (matches were
+            # computed before the insert), keyed on the copy's entries
             entry = TableEntry.from_json(self.entry.to_json())
-            if counts["updated"] or del_df is not None:
-                masked_parts = []
-                if counts["updated"]:
-                    masked_parts.append(
-                        replace_df.select(INTERNAL_ROW_ID, "__source_file")
-                    )
-                if del_df is not None:
-                    masked_parts.append(del_df)
-                matched_ids = reduce(DataFrame.unionByName, masked_parts)
-                # DV attribution targets pre-merge files only (matches were
-                # computed before the insert), keyed on the copy's entries
-                pre_paths = {fe.path for fe in pre_files}
-                affected = [fe for fe in entry.files if fe.path in pre_paths]
-                dv_total = self._write_dvs_distributed(affected, matched_ids)
-                counts["deleted"] = max(0, dv_total - counts["updated"])
-                if counts["updated"]:
-                    self._rewrite_files(
-                        entry, [], replace_df.drop("__source_file"), "merge"
-                    )
-                self._fold_heavy_dvs(entry, affected)
-            self._mark_unsorted(entry)
-            self._mutate(entry, "merge", **counts)
+            affected = [fe for fe in entry.files if fe.path in pre_paths]
+            masked = [
+                replace_df.select(INTERNAL_ROW_ID, "__source_file")
+            ] if counts["updated"] else []
+            if del_df is not None:
+                masked.append(del_df)
+
+            def deleted(masked_rows):
+                return max(0, masked_rows - counts["updated"])
+
+            counts["deleted"] = deleted(
+                self._apply_dv_dml(
+                    entry, "merge", affected,
+                    reduce(DataFrame.unionByName, masked) if masked else None,
+                    replace_df.drop("__source_file") if counts["updated"] else None,
+                    changed=counts["inserted"] > 0,
+                    updated=counts["updated"],
+                    deleted=deleted,
+                    inserted=counts["inserted"],
+                )
+            )
         finally:
             source.unpersist()
             if replace_df is not None:
