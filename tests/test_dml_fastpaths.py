@@ -4,6 +4,15 @@
   RID_LITERAL_MAP_MAX_FILES resolve ``$row_id`` via a create_map lookup
   with zero extra Spark jobs; more files fall back to the broadcast join)
   must produce identical ids on both routes;
+- deletion vectors in ``Table.df()``: a scan whose files carry at most
+  DV_LITERAL_MAX_ROWS masked rows reads the sidecars at plan time and
+  filters each file group's raw scan with a literal ``NOT (<raw row id>
+  IN (...))`` predicate (physical ``_vastdb_row_id``, else
+  ``_metadata.row_index`` shifted by the file's row-id base; qualified by
+  file path in multi-file groups), so it runs the one Spark job of a
+  scan without DVs; above the bound the scan falls back to the
+  anti-join against the sidecars. Both routes must return the same rows
+  and ``$row_id``s;
 - ``delete()``'s heavy-file routing (id batches that provably push a file
   past DV_REWRITE_FRACTION rewrite the file directly, skipping the
   deletion-vector pass) must leave the same surviving rows, stable
@@ -18,6 +27,7 @@ import os
 import time
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import vastdb_sdk_spark as vastdb
@@ -81,6 +91,163 @@ def test_rowid_literal_map_matches_broadcast_join(session, monkeypatch):
             .sort_by("k")
         )
         assert via_map.equals(via_join)
+
+
+def _dv_state(t):
+    """Rows (sorted by ``k``, with ``$row_id``), scanned count and optimized
+    plan of ``t`` on the current deletion-vector route."""
+    df = t.select_df(internal_row_id=True)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return df.toArrow().sort_by("k"), t.count_rows(t["k"] >= 0), plan
+
+
+def _dv_multi_file(session, tmp_path, name="s_dv_multi"):
+    _mk(session, name)
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        # row position 50 is masked in two files: without the file-path
+        # qualifier each mask would also hide the other files' rows
+        t.delete_where(t["k"].isin([3, 150, 250]))
+        assert len(t.entry.files) == 3
+        assert all(fe.dv_paths and not fe.has_physical_row_id for fe in t.entry.files)
+    return name, {"k": [k for k in range(300) if k not in (3, 150, 250)]}
+
+
+def _dv_imported(session, tmp_path):
+    name = _mk(session, "s_dv_import", n_files=1, rows_per_file=10)
+    path = str(tmp_path / "imported.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array(range(10, 60), pa.int64()),
+                "v": pa.array([float(k) for k in range(10, 60)]),
+            }
+        ),
+        path,
+    )
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        t.import_files([path])
+        t.delete_where(t["k"].isin([11, 30, 59]))
+        (imp,) = [fe for fe in t.entry.files if fe.path == path]
+        # its row positions are the ids minus the file's nonzero base
+        assert imp.row_id_base > 0 and imp.dv_paths
+    return name, {"k": [k for k in range(60) if k not in (11, 30, 59)]}
+
+
+def _dv_replacements(session, tmp_path):
+    name = _mk(session, "s_dv_repl", n_files=1, rows_per_file=100)
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        before = _dv_state(t)[0]
+        rid = dict(zip(before["k"].to_pylist(), before["$row_id"].to_pylist()))
+        t.update_where(t["k"] < 10, {"v": -1.0})
+        t.update_where(t["k"] < 2, {"v": -2.0})
+        phys = [fe for fe in t.entry.files if fe.has_physical_row_id]
+        # the first replacement file masks the ids of k 0 and 1, which the
+        # second replacement file reuses: those rows must stay visible
+        assert len(phys) == 2 and sum(bool(fe.dv_paths) for fe in phys) == 1
+    return name, {
+        "k": list(range(100)),
+        "v": [-2.0] * 2 + [-1.0] * 8 + [float(k) for k in range(10, 100)],
+        "$row_id": [rid[k] for k in range(100)],
+    }
+
+
+def _dv_partitioned(session, tmp_path):
+    with session.transaction() as tx:
+        t = tx.bucket("b").create_schema("s_dv_part").create_table(
+            "t",
+            pa.schema([("k", pa.int64()), ("g", pa.int64()), ("v", pa.float64())]),
+            partition_by=["g"],
+        )
+        t.insert_df(
+            t.spark.range(200).selectExpr(
+                "id AS k", "id % 2 AS g", "CAST(id AS DOUBLE) AS v"
+            )
+        )
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema("s_dv_part").table("t")
+        t.delete_where(t["k"].isin([4, 7, 120, 199]))
+        dv_parts = {tuple(fe.partition.items()) for fe in t.entry.files if fe.dv_paths}
+        assert len(dv_parts) == 2
+    return "s_dv_part", {"k": [k for k in range(200) if k not in (4, 7, 120, 199)]}
+
+
+_DV_CASES = {
+    "multi_file": _dv_multi_file,
+    "imported": _dv_imported,
+    "replacements": _dv_replacements,
+    "partitioned": _dv_partitioned,
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DV_CASES))
+def test_dv_literal_route_matches_anti_join(session, tmp_path, monkeypatch, case):
+    name, expect = _DV_CASES[case](session, tmp_path)
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        rows, count, plan = _dv_state(t)
+        assert "LeftAnti" not in plan
+        with monkeypatch.context() as m:
+            m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+            rows_j, count_j, plan_j = _dv_state(t)
+        assert "LeftAnti" in plan_j
+        assert rows.equals(rows_j)
+        assert count == count_j == t.count_rows() == rows.num_rows
+        for col, want in expect.items():
+            assert rows[col].to_pylist() == want, col
+
+
+def test_dv_literal_route_select_splits(session, tmp_path, monkeypatch):
+    name, expect = _dv_multi_file(session, tmp_path, "s_dv_splits")
+
+    def read(t):
+        readers = t.select_splits(internal_row_id=True, num_splits=2)
+        return pa.Table.from_batches(
+            [b for r in readers for b in r], readers[0].schema
+        ).sort_by("k")
+
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        via_literal = read(t)
+        monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+        via_join = read(t)
+    assert via_literal.equals(via_join)
+    assert via_literal["k"].to_pylist() == expect["k"]
+
+
+def _jobs(spark, action):
+    """Number of Spark jobs ``action()`` runs."""
+    sc = spark.sparkContext
+    group = f"dv-jobs-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dv_literal_route_runs_one_job(session, monkeypatch):
+    name = _mk(session, "s_dv_jobs")
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+
+        def read():
+            return t.select(predicate=t["k"] < 260).read_all().sort_by("k")
+
+        assert _jobs(t.spark, read) == 1  # before any DV
+        t.delete_where(t["k"].isin([3, 150, 250]))
+        assert 0 < t.entry.live_rows < 300
+        assert _jobs(t.spark, read) == 1
+        want = [k for k in range(260) if k not in (3, 150, 250)]
+        assert read()["k"].to_pylist() == want
+        # below the DV row count: the anti-join fallback
+        monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 2)
+        assert _jobs(t.spark, read) > 1
+        assert read()["k"].to_pylist() == want
 
 
 def test_delete_heavy_routing_rewrites_and_matches_sidecar_path(session):
@@ -150,6 +317,12 @@ _NO_MATCH = {
         t.spark.createDataFrame([(1000, 1.0)], "k long, v double"),
         ["k"],
         when_not_matched=None,
+    ),
+    # every source row matches, so the default insert branch writes 0 rows
+    "merge_all_matched": lambda t: t.merge(
+        t.spark.createDataFrame([(1, 1.0)], "k long, v double"),
+        ["k"],
+        when_matched=None,
     ),
 }
 
