@@ -25,6 +25,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from vastdb_sdk_spark.functions.text import tokens
+from vastdb_sdk_spark.localrel import local_df
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -32,15 +35,6 @@ TABLES = [
 
 # ---------------------------------------------------------------------------
 # helpers
-
-
-def _local_df(spark, rows, schema):
-    """Small literal frame as a pure Catalyst plan — see
-    vastdb_sdk_spark/localrel.py (a createDataFrame LogicalRDD costs
-    ~0.3 s of Python-RDD scan per action that reads it)."""
-    from vastdb_sdk_spark.localrel import local_df
-
-    return local_df(spark, rows, schema)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -66,11 +60,7 @@ def _us(ts: str) -> int:
 
 
 # identical tokenization on both engines: lowercase, split on non-[a-z0-9],
-# drop empties (see vastdb_sdk_spark/functions/text.py)
-def _tokens(col):
-    return F.filter(F.split(F.lower(col), "[^a-z0-9]+"), lambda t: t != F.lit(""))
-
-
+# drop empties — the DuckDB twin of vastdb_sdk_spark.functions.text.tokens
 _SQL_TOKENS = (
     "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
 )
@@ -1289,8 +1279,6 @@ def _planted_ann_corpus(spark, sf):
     # literal plan, not a createDataFrame LogicalRDD: the RDD-backed frame
     # costs ~0.3 s of Python-RDD scan per ACTION for ten rows (r14
     # measurement), paid by every ann_* gate that unions this fixture
-    from vastdb_sdk_spark.localrel import local_df
-
     planted = local_df(spark, rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     corpus = (
         _t(spark, sf, "embeddings")
@@ -1454,7 +1442,7 @@ def q_dd_exact(spark, sf):
 
 def q_dd_fingerprint(spark, sf):
     d = _t(spark, sf, "documents")
-    fp = F.substring(F.md5(F.concat_ws(" ", _tokens(F.col("text")))), 1, 16)
+    fp = F.substring(F.md5(F.concat_ws(" ", tokens(F.col("text")))), 1, 16)
     return d.select("doc_id", fp.alias("fingerprint"))
 
 
@@ -1542,7 +1530,7 @@ def q_dd_ngram_overlap(spark, sf):
 
 def q_tx_token_stats(spark, sf):
     d = _t(spark, sf, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -1553,7 +1541,7 @@ def q_tx_token_stats(spark, sf):
 
 def q_tx_quality(spark, sf):
     d = _t(spark, sf, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tok = F.size(toks)
     stripped = F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", "")
     punct_ratio = F.length(stripped) / F.greatest(F.length("text"), F.lit(1))
@@ -1572,7 +1560,7 @@ def q_tx_langid(spark, sf):
     """Marker-token language ID: en vs de vs 'und'; same CASE logic as the
     SQL oracle."""
     d = _t(spark, sf, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     en_hits = F.size(F.filter(toks, lambda t: t.isin(["the", "and", "of", "to", "in"])))
     de_hits = F.size(F.filter(toks, lambda t: t.isin(["der", "die", "und", "ist", "nicht"])))
     pred = (
@@ -1702,7 +1690,7 @@ def q_tx_pack_greedy(spark, sf):
     from vastdb_sdk_spark.operators.sampling import pack_greedy
 
     d = _t(spark, sf, "documents").select(
-        "doc_id", "lang", F.size(_tokens(F.col("text"))).alias("n_tokens")
+        "doc_id", "lang", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     packed = pack_greedy(d, "n_tokens", budget=512, stratum_col="lang")
     return packed.groupBy("lang", "pack_bin").agg(
@@ -1719,7 +1707,7 @@ def q_tx_bigram_topk(spark, sf):
     expression work per doc (the pathology passage_dup_stats documents).
     One shuffle on the bigram key; top-k with a unique tie-break."""
     d = _t(spark, sf, "documents")
-    staged = d.select(_tokens(F.col("text")).alias("__tk")).filter(
+    staged = d.select(tokens(F.col("text")).alias("__tk")).filter(
         F.size("__tk") >= 2
     )
     pos = staged.select(
@@ -2691,7 +2679,7 @@ def q_tx_repetition(spark, sf):
     from vastdb_sdk_spark.functions.text import dup_ngram_fraction, shingles_from_tokens
 
     d = _t(spark, sf, "documents")
-    staged = d.select("doc_id", _tokens(F.col("text")).alias("tk"))
+    staged = d.select("doc_id", tokens(F.col("text")).alias("tk"))
     g2 = shingles_from_tokens(F.col("tk"), 2)
     return staged.select(
         "doc_id",
@@ -2939,7 +2927,7 @@ def q_ann_ivfpq_persisted(spark, sf):
     rows = [(i + 1, int(vid)) for i, (vid, _dist) in enumerate(pairs)]
     if pairs != ref:  # cross-session bit-mismatch -> fail the gate
         rows.append((-999, -999))
-    return _local_df(spark, rows, "rank INT, vec_id LONG")
+    return local_df(spark, rows, "rank INT, vec_id LONG")
 
 
 def q_dd_phash_neardup(spark, sf):
@@ -3059,7 +3047,7 @@ def q_tx_bpe_tokens(spark, sf):
     alnum soup) and the EXACT token stream is pinned via md5 over a
     0x1f-joined concatenation, so any alternation-order or class
     divergence between engines fails the hash, not just the count."""
-    from vastdb_sdk_spark.functions.text import bpe_pretokens, tokens
+    from vastdb_sdk_spark.functions.text import bpe_pretokens
 
     d = _t(spark, sf, "documents")
     dirty = F.concat(
@@ -3269,7 +3257,7 @@ def q_e18_refresh_incremental(spark, sf):
     rows = [(i + 1, int(v)) for i, v in enumerate(got.column("vec_id").to_pylist())]
     if res.get("mode") != "incremental":  # refresh fell back -> fail gate
         rows.append((-999, -999))
-    return _local_df(spark, rows, "rank INT, vec_id LONG")
+    return local_df(spark, rows, "rank INT, vec_id LONG")
 
 
 def q_tx_clf_quality(spark, sf):
@@ -3318,7 +3306,6 @@ def q_tx_bpe_learned(spark, sf):
     encoder (mapInPandas vs CTE) are cross-checked by the value hash.
     The query also SELF-VALIDATES in-plan: recon_ok asserts the subword
     stream reconstructs each document's pre-token characters exactly."""
-    from vastdb_sdk_spark.functions.text import tokens as _tok2
     from vastdb_sdk_spark.operators.bpe import (
         END_OF_WORD,
         bpe_segment,
@@ -3335,7 +3322,7 @@ def q_tx_bpe_learned(spark, sf):
         F.transform(F.col("bpe_tokens"), lambda p: F.replace(p, F.lit(END_OF_WORD), F.lit(""))),
         "",
     )
-    src = d.select("doc_id", F.array_join(_tok2(F.col("text")), "").alias("__chars"))
+    src = d.select("doc_id", F.array_join(tokens(F.col("text")), "").alias("__chars"))
     return (
         seg.join(src, "doc_id")
         .select(
@@ -3653,7 +3640,7 @@ def q_ds_cluster_assign(spark, sf):
         emb.filter(F.col("vec_id") < 8).collect(), key=lambda r: r.vec_id
     )
     C = np.asarray([r.embedding for r in crows], dtype=np.float64)
-    cdf = _local_df(
+    cdf = local_df(
         spark,
         [(int(r.vec_id), [float(x) for x in r.embedding]) for r in crows],
         "centroid_id int, __cvec array<double>",
@@ -4039,7 +4026,7 @@ def q_tx_sentences(spark, sf):
     # mean's guard/numerator/denominator, first_sent_md5) — a multiply-
     # referenced non-cheap alias stays staged (CollapseProject keeps it)
     staged = d.select("doc_id", sentences(F.col("text")).alias("__s"))
-    ntoks = F.transform(F.col("__s"), lambda s: F.size(_tokens(s)))
+    ntoks = F.transform(F.col("__s"), lambda s: F.size(tokens(s)))
     return staged.select(
         "doc_id",
         F.size("__s").alias("n_sentences"),
@@ -4462,7 +4449,7 @@ def q_ds_borda_quality(spark, sf):
     sig = d.select(
         "doc_id",
         "n_chars",
-        F.size(_tokens(F.col("text"))).alias("n_tokens"),
+        F.size(tokens(F.col("text"))).alias("n_tokens"),
     )
     return borda_topk(sig, ["n_chars", "n_tokens"], k=100)
 
@@ -4707,7 +4694,7 @@ def q_ds_token_budget(spark, sf):
 
     d = _t(spark, sf, "documents")
     d = d.select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).alias("n_tokens")
+        "doc_id", "source", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     budgets = {
         "src0": 800,
@@ -4767,7 +4754,7 @@ def _sig_template_clone(spark, sf):
     FULLY built (sync_minhash_signatures, md5 path). The template is
     immutable after build; callers churn the clone, so a warm bench run
     measures the maintenance path users actually pay. Shared by
-    e25_sig_sync and the r15-pending tx_minhash_cdf_incremental."""
+    e25_sig_sync and tx_minhash_cdf_incremental."""
     import shutil
     import tempfile
 
@@ -5058,7 +5045,7 @@ def q_tx_chat_render(spark, sf):
     from vastdb_sdk_spark.operators.augment import render_chat
 
     d = _t(spark, sf, "documents")
-    tk = _tokens(F.col("text"))
+    tk = tokens(F.col("text"))
     msg = lambda role, content: F.struct(  # noqa: E731
         F.lit(role).alias("role"), content.alias("content")
     )
@@ -5099,15 +5086,7 @@ def q_tx_chat_render(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# registry
-
-
-# ---------------------------------------------------------------------------
-# r15-PENDING gate queries (VERDICT r13 #4): builders + oracle SQL land a
-# round EARLY, pytest-exercised at sf0.001, but stay OUT of queries() /
-# oracle_sql() until the registry unfreezes in r15 (SCALING.md plan) —
-# one new oracle device at a time, and every new entry gates the round
-# it lands with a first-HEADLINE bench row in the same commit.
+# codec-backed media, shard and CDC queries
 
 
 def q_mm_decode_bmp(spark, sf):
@@ -5457,7 +5436,7 @@ def q_e27_cdf_matview_e2e(spark, sf):
         if res.get("mode") != "incremental" or res.get("base_scanned"):
             feed_rows.append((f"__refresh{i}_fell_back__", -1, -1))
     return out.unionByName(
-        _local_df(out.sparkSession, feed_rows, out.schema)
+        local_df(out.sparkSession, feed_rows, out.schema)
     )
 
 
@@ -5594,7 +5573,7 @@ def q_e28_cdc_replica_sync(spark, sf):
         (-2, "__sync2_upserts", "stats", int(s2["upserts"]), None),
         (-3, "__sync2_deletes", "stats", int(s2["deletes"]), None),
     ]
-    return out.unionByName(_local_df(out.sparkSession, stats, out.schema))
+    return out.unionByName(local_df(out.sparkSession, stats, out.schema))
 
 
 def q_ann_filtered_ivf(spark, sf):
@@ -5663,7 +5642,7 @@ def q_ann_filtered_ivf(spark, sf):
             nprobe=4,
         )
     rows = [(i + 1, int(v)) for i, v in enumerate(got.column("vec_id").to_pylist())]
-    return _local_df(spark, rows, "rank INT, vec_id LONG")
+    return local_df(spark, rows, "rank INT, vec_id LONG")
 
 
 def q_tx_minhash_cdf_incremental(spark, sf):
@@ -5742,203 +5721,11 @@ def q_tx_minhash_cdf_incremental(spark, sf):
     return pairs
 
 
-_R15_PENDING_ORACLES = {
-    "mm_decode_bmp": """
-        SELECT d.doc_id AS media_id,
-               6 AS width,
-               4 AS height,
-               CAST(SUM((d.doc_id * 31 + s.i) % 251) AS BIGINT) AS px_sum,
-               CAST(SUM(s.i * ((d.doc_id * 31 + s.i) % 251)) AS BIGINT)
-                   AS px_wsum
-        FROM documents d CROSS JOIN range(72) s(i)
-        GROUP BY d.doc_id
-    """,
-    "mm_phash_neardup_real": """
-        -- ground truth: exactly the planted (copy, original) pairs —
-        -- real decode margins: planted hamming <= 4, organic min 18
-        SELECT -(doc_id + 1) AS copy_id, doc_id AS orig_id
-        FROM documents WHERE doc_id < 25
-    """,
-    "mm_decode_wav": """
-        SELECT d.doc_id AS media_id,
-               16000 AS sample_rate,
-               CAST(200 * 1000 / 16000 AS BIGINT) AS duration_ms,
-               1 AS n_channels,
-               CAST(200 AS BIGINT) AS n_frames,
-               CAST(SUM((d.doc_id * 31 + s.i) % 251) AS BIGINT) AS s_sum,
-               CAST(SUM(s.i * ((d.doc_id * 31 + s.i) % 251)) AS BIGINT)
-                   AS s_wsum
-        FROM documents d CROSS JOIN range(200) s(i)
-        GROUP BY d.doc_id
-    """,
-    "mm_decode_jpeg": """
-        SELECT d.doc_id AS media_id,
-               16 AS width,
-               16 AS height,
-               CAST(SUM(3 * 2 * ((d.doc_id * 31
-                     + ((s.p // 16 // 8) * 2 + (s.p % 16) // 8) * 17) % 128))
-                    AS BIGINT) AS px_sum,
-               CAST(SUM((9 * s.p + 3) * 2 * ((d.doc_id * 31
-                     + ((s.p // 16 // 8) * 2 + (s.p % 16) // 8) * 17) % 128))
-                    AS BIGINT) AS px_wsum
-        FROM documents d CROSS JOIN range(256) s(p)
-        GROUP BY d.doc_id
-    """,
-    "mm_decode_tiff": """
-        SELECT d.doc_id AS media_id,
-               16 AS width,
-               16 AS height,
-               CAST(SUM(3 * ((d.doc_id * 31 + s.p) % 251)) AS BIGINT)
-                   AS px_sum,
-               CAST(SUM((9 * s.p + 3) * ((d.doc_id * 31 + s.p) % 251))
-                   AS BIGINT) AS px_wsum
-        FROM documents d CROSS JOIN range(256) s(p)
-        GROUP BY d.doc_id
-    """,
-    "mm_decode_y4m": """
-        SELECT d.doc_id AS media_id,
-               4 AS width,
-               4 AS height,
-               10 AS n_frames,
-               CAST(1000 AS BIGINT) AS duration_ms,
-               CAST(SUM((d.doc_id * 31 + (s.i // 16) * 97 + (s.i % 16)) % 251)
-                    AS BIGINT) AS v_sum,
-               CAST(SUM(s.i *
-                        ((d.doc_id * 31 + (s.i // 16) * 97 + (s.i % 16)) % 251))
-                    AS BIGINT) AS v_wsum
-        FROM documents d CROSS JOIN range(160) s(i)
-        GROUP BY d.doc_id
-    """,
-    "e29_webdataset_roundtrip": """
-        SELECT doc_id,
-               md5(text) AS text_md5,
-               CAST(n_chars AS BIGINT) AS n_chars
-        FROM documents
-    """,
-    "e28_cdc_replica_sync": """
-        SELECT doc_id, lang, source,
-               CASE WHEN doc_id % 9 = 0 THEN -3 ELSE n_chars END AS n_chars,
-               md5(text) AS text_md5
-        FROM documents WHERE doc_id % 7 <> 2
-        UNION ALL
-        SELECT * FROM (VALUES
-            (910001, 'zz', 'e28_new', 11, md5('e28 doc one')),
-            (910002, 'zz', 'e28_new', NULL, md5('e28 doc two'))
-        ) AS ins(doc_id, lang, source, n_chars, text_md5)
-        UNION ALL
-        SELECT -1, '__sync1_upserts', 'stats',
-               (SELECT COUNT(*) FROM documents), NULL
-        UNION ALL
-        SELECT -2, '__sync2_upserts', 'stats',
-               (SELECT COUNT(*) + 2 FROM documents
-                WHERE doc_id % 9 = 0 AND doc_id % 7 <> 2), NULL
-        UNION ALL
-        SELECT -3, '__sync2_deletes', 'stats',
-               (SELECT COUNT(*) FROM documents WHERE doc_id % 7 = 2), NULL
-    """,
-    "ann_filtered_ivf": """
-        -- ground truth: planted label-1 rows in rank order; organic
-        -- label-1 rows are 25x farther and cannot enter the top-5
-        SELECT CAST(r + 1 AS INTEGER) AS rank,
-               -CAST(2 * (r + 1) AS BIGINT) AS vec_id
-        FROM range(5) t(r)
-    """,
-    "e27_cdf_matview_e2e": """
-        WITH final AS (
-            SELECT lang,
-                   CASE WHEN doc_id % 17 = 0 THEN -5
-                        WHEN doc_id % 13 = 0 THEN -2
-                        ELSE n_chars END AS n_chars
-            FROM documents WHERE doc_id % 11 <> 3
-            UNION ALL
-            SELECT lang, n_chars FROM (VALUES
-                ('zz', 10), ('zz', NULL), ('zz', 7)
-            ) AS ins(lang, n_chars)
-        )
-        SELECT lang AS k, COUNT(*) AS n,
-               CAST(SUM(n_chars) AS BIGINT) AS chars
-        FROM final GROUP BY lang
-        UNION ALL
-        SELECT '__feed1:delete', COUNT(*), NULL
-        FROM documents WHERE doc_id % 11 = 3
-        UNION ALL
-        SELECT '__feed1:update_preimage', COUNT(*), NULL
-        FROM documents WHERE doc_id % 13 = 0 AND doc_id % 11 <> 3
-        UNION ALL
-        SELECT '__feed1:update_postimage', COUNT(*), NULL
-        FROM documents WHERE doc_id % 13 = 0 AND doc_id % 11 <> 3
-        UNION ALL
-        SELECT '__feed2:insert', 3, NULL
-        UNION ALL
-        SELECT '__feed2:update_preimage', COUNT(*), NULL
-        FROM documents WHERE doc_id % 17 = 0 AND doc_id % 11 <> 3
-        UNION ALL
-        SELECT '__feed2:update_postimage', COUNT(*), NULL
-        FROM documents WHERE doc_id % 17 = 0 AND doc_id % 11 <> 3
-    """,
-}
-
-
-def r15_pending() -> dict[str, tuple]:
-    """(builder, oracle_sql) for the 11 entries that joined the registry
-    when it unfroze in r15. Stays the single source for their oracle SQL
-    (oracle_sql() merges it) and for tests/test_r15_pending.py's
-    sf0.001 driver-style gate. INVARIANT (pytest-enforced): a SUBSET of
-    queries()/oracle_sql() since r15 (disjoint through r14)."""
-    sqls = dict(_R15_PENDING_ORACLES)
-    # replayed-signature oracle shares _mh_lsh_chain_sql with e25 so the
-    # hash arithmetic stays single-sourced
-    sqls["tx_minhash_cdf_incremental"] = f"""
-        WITH corpus AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id = 8
-                        THEN 'completely different replacement body'
-                        ELSE text END AS text
-            FROM documents WHERE doc_id % 5 <> 4
-            UNION ALL
-            SELECT 9002 AS doc_id,
-                   (SELECT text FROM documents WHERE doc_id = 1) AS text
-        ), {_mh_lsh_chain_sql('x', 'corpus', 'doc_id', 'text')}
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bands_x a JOIN bands_x b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key
-         AND a.id < b.id
-    """
-    builders = {
-        "mm_decode_bmp": q_mm_decode_bmp,
-        "mm_decode_wav": q_mm_decode_wav,
-        "mm_decode_jpeg": q_mm_decode_jpeg,
-        "mm_decode_tiff": q_mm_decode_tiff,
-        "mm_decode_y4m": q_mm_decode_y4m,
-        "mm_phash_neardup_real": q_mm_phash_neardup_real,
-        "e27_cdf_matview_e2e": q_e27_cdf_matview_e2e,
-        "e28_cdc_replica_sync": q_e28_cdc_replica_sync,
-        "e29_webdataset_roundtrip": q_e29_webdataset_roundtrip,
-        "ann_filtered_ivf": q_ann_filtered_ivf,
-        "tx_minhash_cdf_incremental": q_tx_minhash_cdf_incremental,
-    }
-    return {name: (fn, sqls[name]) for name, fn in builders.items()}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering matters: the driver's correctness gate reads a 50-query
-    # window from the front of this dict.
-    #
-    # ROTATION MATH (the standing policy): 203 registered queries, 50
-    # gated per round. The registry UNFREEZES this round (15) per the
-    # extension plan in SCALING.md: the 11 r15-pending entries (built,
-    # pytest-gated at sf0.001 and pre-audited at sf0.1 in r13/r14) join
-    # the registry and gate IMMEDIATELY — new entries carry no green, so
-    # they lead the window — alongside the 39 oldest greens (the
-    # round-11-green cohort front). ceil(203/50) = 5, so the steady-state
-    # staleness bound relaxes from 4 to 5 rounds (the documented
-    # tradeoff for three media modalities + the shard tier). After this
-    # round the rotation is steady-state oldest-first: each round gates
-    # the current front 50 and rotates them to the tail. The round-14
-    # window (re-greened last round) rotates to the tail as the
-    # freshest cohort.
+    # The one ordered list of registry names. The driver's correctness
+    # gate reads the first 50 entries; bench.py and tools/ run the
+    # registry in this order; oracle_sql() holds the same key set.
     return {
-        # -- r15 registry additions (never gated -> lead the window) ------
         "mm_decode_bmp": q_mm_decode_bmp,
         "mm_decode_wav": q_mm_decode_wav,
         "mm_decode_jpeg": q_mm_decode_jpeg,
@@ -5950,8 +5737,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "e29_webdataset_roundtrip": q_e29_webdataset_roundtrip,
         "ann_filtered_ivf": q_ann_filtered_ivf,
         "tx_minhash_cdf_incremental": q_tx_minhash_cdf_incremental,
-        # -- round-11-green cohort (oldest greens; first 39 fill the
-        #    window's remaining slots) -------------------------------------
         "e15_jsonl_ingest": q_e15_jsonl_ingest,
         "ann_quantize_int8": q_ann_quantize_int8,
         "ds_quality_filter": q_ds_quality_filter,
@@ -5991,13 +5776,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tx_pack_greedy": q_tx_pack_greedy,
         "dd_simhash_fast": q_dd_simhash_fast,
         "dd_embed_neardup": q_dd_embed_neardup,
-        # ---- window boundary (driver gates the 50 entries above) --------
+        # ---- window boundary: the gate reads the 50 entries above ----
         "ann_rhp_topk": q_ann_rhp_topk,
         "ann_pq_topk": q_ann_pq_topk,
         "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        # -- round-14 window rotated to the tail below; r12/r13 cohorts
-        #    keep their relative order ------------------------------------
-        # -- round-12-green cohort ----------------------------------------
         "dd_phash_neardup": q_dd_phash_neardup,
         "tx_clf_quality": q_tx_clf_quality,
         "dd_passage_dups": q_dd_passage_dups,
@@ -6048,7 +5830,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dd_semantic_dedup": q_dd_semantic_dedup,
         "tx_hybrid_topk": q_tx_hybrid_topk,
         "tx_repetition": q_tx_repetition,
-        # -- round-13 window (freshest; re-greened last round) ------------
         "tx_chunk_windows": q_tx_chunk_windows,
         "tx_normalize": q_tx_normalize,
         "e14_engine_dedup": q_e14_engine_dedup,
@@ -6091,7 +5872,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q22": q_tpch_q22,
         "ds_stratified_sample": q_ds_stratified_sample,
         "e18_refresh_incremental": q_e18_refresh_incremental,
-        # -- round-10-cohort front (re-greened in round 13) ---------------
         "tx_bpe_learned": q_tx_bpe_learned,
         "e19_engine_domain_cap": q_e19_engine_domain_cap,
         "e21_pipeline_recipe": q_e21_pipeline_recipe,
@@ -6100,7 +5880,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "e24_matview_timebucket": q_e24_matview_timebucket,
         "e25_sig_sync": q_e25_sig_sync,
         "e26_sql_views": q_e26_sql_views,
-        # -- round-14 window (freshest; re-greened last round) ------------
         "el6_bloom_point": q_el6_bloom_point,
         "ts_gapfill": q_ts_gapfill,
         "ts_anomaly": q_ts_anomaly,
@@ -9205,6 +8984,155 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY cnt DESC, bigram ASC
             LIMIT 50
         """,
+        "mm_decode_bmp": """
+        SELECT d.doc_id AS media_id,
+               6 AS width,
+               4 AS height,
+               CAST(SUM((d.doc_id * 31 + s.i) % 251) AS BIGINT) AS px_sum,
+               CAST(SUM(s.i * ((d.doc_id * 31 + s.i) % 251)) AS BIGINT)
+                   AS px_wsum
+        FROM documents d CROSS JOIN range(72) s(i)
+        GROUP BY d.doc_id
+    """,
+        "mm_phash_neardup_real": """
+        -- ground truth: exactly the planted (copy, original) pairs —
+        -- real decode margins: planted hamming <= 4, organic min 18
+        SELECT -(doc_id + 1) AS copy_id, doc_id AS orig_id
+        FROM documents WHERE doc_id < 25
+    """,
+        "mm_decode_wav": """
+        SELECT d.doc_id AS media_id,
+               16000 AS sample_rate,
+               CAST(200 * 1000 / 16000 AS BIGINT) AS duration_ms,
+               1 AS n_channels,
+               CAST(200 AS BIGINT) AS n_frames,
+               CAST(SUM((d.doc_id * 31 + s.i) % 251) AS BIGINT) AS s_sum,
+               CAST(SUM(s.i * ((d.doc_id * 31 + s.i) % 251)) AS BIGINT)
+                   AS s_wsum
+        FROM documents d CROSS JOIN range(200) s(i)
+        GROUP BY d.doc_id
+    """,
+        "mm_decode_jpeg": """
+        SELECT d.doc_id AS media_id,
+               16 AS width,
+               16 AS height,
+               CAST(SUM(3 * 2 * ((d.doc_id * 31
+                     + ((s.p // 16 // 8) * 2 + (s.p % 16) // 8) * 17) % 128))
+                    AS BIGINT) AS px_sum,
+               CAST(SUM((9 * s.p + 3) * 2 * ((d.doc_id * 31
+                     + ((s.p // 16 // 8) * 2 + (s.p % 16) // 8) * 17) % 128))
+                    AS BIGINT) AS px_wsum
+        FROM documents d CROSS JOIN range(256) s(p)
+        GROUP BY d.doc_id
+    """,
+        "mm_decode_tiff": """
+        SELECT d.doc_id AS media_id,
+               16 AS width,
+               16 AS height,
+               CAST(SUM(3 * ((d.doc_id * 31 + s.p) % 251)) AS BIGINT)
+                   AS px_sum,
+               CAST(SUM((9 * s.p + 3) * ((d.doc_id * 31 + s.p) % 251))
+                   AS BIGINT) AS px_wsum
+        FROM documents d CROSS JOIN range(256) s(p)
+        GROUP BY d.doc_id
+    """,
+        "mm_decode_y4m": """
+        SELECT d.doc_id AS media_id,
+               4 AS width,
+               4 AS height,
+               10 AS n_frames,
+               CAST(1000 AS BIGINT) AS duration_ms,
+               CAST(SUM((d.doc_id * 31 + (s.i // 16) * 97 + (s.i % 16)) % 251)
+                    AS BIGINT) AS v_sum,
+               CAST(SUM(s.i *
+                        ((d.doc_id * 31 + (s.i // 16) * 97 + (s.i % 16)) % 251))
+                    AS BIGINT) AS v_wsum
+        FROM documents d CROSS JOIN range(160) s(i)
+        GROUP BY d.doc_id
+    """,
+        "e29_webdataset_roundtrip": """
+        SELECT doc_id,
+               md5(text) AS text_md5,
+               CAST(n_chars AS BIGINT) AS n_chars
+        FROM documents
+    """,
+        "e28_cdc_replica_sync": """
+        SELECT doc_id, lang, source,
+               CASE WHEN doc_id % 9 = 0 THEN -3 ELSE n_chars END AS n_chars,
+               md5(text) AS text_md5
+        FROM documents WHERE doc_id % 7 <> 2
+        UNION ALL
+        SELECT * FROM (VALUES
+            (910001, 'zz', 'e28_new', 11, md5('e28 doc one')),
+            (910002, 'zz', 'e28_new', NULL, md5('e28 doc two'))
+        ) AS ins(doc_id, lang, source, n_chars, text_md5)
+        UNION ALL
+        SELECT -1, '__sync1_upserts', 'stats',
+               (SELECT COUNT(*) FROM documents), NULL
+        UNION ALL
+        SELECT -2, '__sync2_upserts', 'stats',
+               (SELECT COUNT(*) + 2 FROM documents
+                WHERE doc_id % 9 = 0 AND doc_id % 7 <> 2), NULL
+        UNION ALL
+        SELECT -3, '__sync2_deletes', 'stats',
+               (SELECT COUNT(*) FROM documents WHERE doc_id % 7 = 2), NULL
+    """,
+        "ann_filtered_ivf": """
+        -- ground truth: planted label-1 rows in rank order; organic
+        -- label-1 rows are 25x farther and cannot enter the top-5
+        SELECT CAST(r + 1 AS INTEGER) AS rank,
+               -CAST(2 * (r + 1) AS BIGINT) AS vec_id
+        FROM range(5) t(r)
+    """,
+        "e27_cdf_matview_e2e": """
+        WITH final AS (
+            SELECT lang,
+                   CASE WHEN doc_id % 17 = 0 THEN -5
+                        WHEN doc_id % 13 = 0 THEN -2
+                        ELSE n_chars END AS n_chars
+            FROM documents WHERE doc_id % 11 <> 3
+            UNION ALL
+            SELECT lang, n_chars FROM (VALUES
+                ('zz', 10), ('zz', NULL), ('zz', 7)
+            ) AS ins(lang, n_chars)
+        )
+        SELECT lang AS k, COUNT(*) AS n,
+               CAST(SUM(n_chars) AS BIGINT) AS chars
+        FROM final GROUP BY lang
+        UNION ALL
+        SELECT '__feed1:delete', COUNT(*), NULL
+        FROM documents WHERE doc_id % 11 = 3
+        UNION ALL
+        SELECT '__feed1:update_preimage', COUNT(*), NULL
+        FROM documents WHERE doc_id % 13 = 0 AND doc_id % 11 <> 3
+        UNION ALL
+        SELECT '__feed1:update_postimage', COUNT(*), NULL
+        FROM documents WHERE doc_id % 13 = 0 AND doc_id % 11 <> 3
+        UNION ALL
+        SELECT '__feed2:insert', 3, NULL
+        UNION ALL
+        SELECT '__feed2:update_preimage', COUNT(*), NULL
+        FROM documents WHERE doc_id % 17 = 0 AND doc_id % 11 <> 3
+        UNION ALL
+        SELECT '__feed2:update_postimage', COUNT(*), NULL
+        FROM documents WHERE doc_id % 17 = 0 AND doc_id % 11 <> 3
+    """,
+        "tx_minhash_cdf_incremental": f"""
+        WITH corpus AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id = 8
+                        THEN 'completely different replacement body'
+                        ELSE text END AS text
+            FROM documents WHERE doc_id % 5 <> 4
+            UNION ALL
+            SELECT 9002 AS doc_id,
+                   (SELECT text FROM documents WHERE doc_id = 1) AS text
+        ), {_mh_lsh_chain_sql('x', 'corpus', 'doc_id', 'text')}
+        SELECT DISTINCT a.id AS id_a, b.id AS id_b
+        FROM bands_x a JOIN bands_x b
+          ON a.band_id = b.band_id AND a.band_key = b.band_key
+         AND a.id < b.id
+    """,
     }
     # the fast (xxhash64) LSH path is verified against the md5 twin's
     # ground truth: both emit the exact-Jaccard-verified pair set, which is
@@ -9215,7 +9143,4 @@ def oracle_sql() -> dict[str, str]:
         # corpus-trained oracle to rows-only rather than shipping a merge
         # table learned on the wrong (or no) data
         del sqls["tx_bpe_learned"]
-    # r15 registry additions: their oracles live in r15_pending() (the
-    # single source the pre-landing pytest gate consumed since r13)
-    sqls.update({name: sql for name, (_fn, sql) in r15_pending().items()})
     return sqls

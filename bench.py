@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line with per-query wall-clock seconds.
+"""Benchmark harness: runs every registry query, in ``queries()`` order,
+at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line with per-query
+wall-clock seconds for the driver's 50-query gate window. The full
+per-query record goes to BENCH_COLD.json.
 
 Execution is measured with the `noop` sink so we time the full distributed
 plan (scan -> shuffle -> agg) without driver-side collect overhead dominating
@@ -23,222 +25,6 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from vastdb_sdk_spark.operators.pinning import release_all_pins  # noqa: E402
 from vastdb_sdk_spark.session import build_spark  # noqa: E402
 
-HEADLINE = [
-    "e1_engine_scan",
-    "e3_engine_sorted_scan",
-    "el1_sorted_point",
-    "el2_sorted_ts_between",
-    "el3_sorted_conjunction",
-    "el4_sorted_or_ranges",
-    "el5_sorted_isin",
-    "s1_scan_project",
-    "p3_between",
-    "p4_isin",
-    "o1_limit_topk",
-    "a1_tpch_q1",
-    "a2_count_distinct",
-    "a4_rollup",
-    "j1_star_join_revenue",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q10",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q18",
-    "j2_semi_join",
-    "j3_anti_join",
-    "tpch_q2",
-    "tpch_q4",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q11",
-    "tpch_q12",
-    "tpch_q16",
-    "tpch_q19",
-    "tpch_q20",
-    "tpch_q21",
-    "tpch_q22",
-    "w1_topk_per_group",
-    "w2_running_sum",
-    "w4_dense_rank",
-    "set2_intersect",
-    "f1_json_expansion",
-    "f2_string_funcs",
-    "f3_date_funcs",
-    "o5_vector_topk_l2",
-    "ann_cosine_topk",
-    "asof_last_purchase",
-    "dd_exact",
-    "dd_minhash_sig",
-    "dd_simhash",
-    "dd_simhash_fast",
-    "dd_lsh_pairs",
-    "dd_lsh_pairs_fast",
-    "mm_decode_stub",
-    "tx_token_stats",
-    "tx_quality",
-    "tx_bigram_topk",
-    "tx_pack_greedy",
-    "ds_train_test_split",
-    "dd_embed_neardup",
-    "ds_resample_mix",
-    "tx_pii_scrub",
-    "dd_contamination",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "ann_ivf_knn_join",
-    "mm_frame_sample",
-    "range_join_purchases",
-    "sessionize_batch",
-    "tx_repetition",
-    "tx_chunk_windows",
-    "dd_dup_clusters",
-    "ds_quality_filter",
-    "ann_quantize_int8",
-    "tx_normalize",
-    "tx_gopher_flags",
-    "tx_c4_filter",
-    "ann_knn_join_blocked",
-    "tx_bpe_tokens",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "tx_bm25_topk",
-    "tx_unigram_logprob",
-    "dd_passage_dups",
-    "tx_hybrid_topk",
-    "dd_phash_neardup",
-    "ann_ivfpq_persisted",
-    "dd_semantic_dedup",
-    "tx_bpe_learned",
-    "tx_clf_quality",
-    "e17_semantic_dedup_inplace",
-    "e18_refresh_incremental",
-    "tx_bigram_logprob",
-    # round-9: the rest of the gate-window cohort, so the driver's
-    # parsed BENCH record covers all 50 window queries
-    "e14_engine_dedup",
-    "tx_langid",
-    "mm_blob_meta",
-    "e2_engine_sql",
-    "e4_engine_dml",
-    "e9_engine_merge",
-    "e10_sql_frontend",
-    "e13_engine_zorder",
-    "ds_stratified_sample",
-    # round-9 late additions (lead the round-10 gate window)
-    "tx_tfidf_topterms",
-    "ds_domain_caps",
-    "ds_cluster_assign",
-    "tx_length_percentiles",
-    "e19_engine_domain_cap",
-    "w9_hopping_window",
-    "a11_grouping_sets",
-    "tx_pmi_topk",
-    "dd_tfidf_pairs",
-    "a12_pivot",
-    "tx_token_entropy",
-    "ds_source_overlap",
-    "dd_keep_best",
-    "dd_winnow",
-    "tx_zipf_slope",
-    "ds_borda_quality",
-    "e21_pipeline_recipe",
-    "w10_funnel",
-    "w11_retention_cohorts",
-    "e22_matview_incremental",
-    "tx_nb_train",
-    "tx_nb_classify",
-    "ts_gapfill",
-    "ds_weighted_sample",
-    "el6_bloom_point",
-    "ds_dsir_weights",
-    "e23_matview_rollup",
-    "tx_sentences",
-    "tx_chunk_sentences",
-    "ts_anomaly",
-    "e24_matview_timebucket",
-    "ann_matryoshka_topk",
-    "tx_url_canon",
-    "tx_html_strip",
-    "dd_line_dedup",
-    "dd_minhash_join",
-    "tx_rrf_fusion",
-    "ann_pca_project",
-    "ds_token_budget",
-    "tx_kl_drift",
-    "ds_shard_assign",
-    "e25_sig_sync",
-    "e26_sql_views",
-    "tx_kn_logprob",
-    "tx_span_corrupt",
-    "tx_prefix_lm",
-    "tx_mlm_mask",
-    "tx_contrastive",
-    "tx_collapse_repeats",
-    "ds_score_normalize",
-    "tx_chat_render",
-    # round-11 gate-window coverage (the rotated window must be fully
-    # bench-covered so the driver's parsed record carries every median)
-    "ann_ivf_topk",
-    "e15_jsonl_ingest",
-    "a7_approx_distinct",
-    "j4_outer_join_counts",
-    "a3_having",
-    "a5_conditional_agg",
-    "e5_engine_projection",
-    "e6_engine_snapshot",
-    "e7_engine_partitioned",
-    "e8_engine_predicate_dml",
-    "e11_merge_conditional",
-    "e12_engine_restore",
-    "p8_struct_field",
-    "p10_literals",
-    "p2_comparisons",
-    "p5_isnull",
-    "p6_startswith",
-    "p7_contains",
-    "p11_false_predicate",
-    "ann_rhp_topk",
-    # round-12 gate-window coverage (rotation policy: every driver-gated
-    # query must have a headline bench row)
-    "e16_change_feed",
-    "dd_simhash_pairs",
-    "a10_approx_percentile",
-    "w3_lag_delta",
-    "w5_first_last",
-    "w6_ntile",
-    "w7_event_time_window",
-    "w8_attribution_join",
-    "set1_union",
-    "set3_except",
-    "f4_conditional",
-    "f5_array_agg",
-    "f6_levenshtein",
-    "a6_cube",
-    "a8_grouping_sets",
-    "a9_percentiles",
-    "dd_fingerprint",
-    "dd_ngram_overlap",
-    # round-15 registry additions (rotation policy: every driver-gated
-    # query gets a headline bench row the round it lands)
-    "mm_decode_bmp",
-    "mm_decode_wav",
-    "mm_decode_jpeg",
-    "mm_decode_tiff",
-    "mm_decode_y4m",
-    "mm_phash_neardup_real",
-    "e27_cdf_matview_e2e",
-    "e28_cdc_replica_sync",
-    "e29_webdataset_roundtrip",
-    "ann_filtered_ivf",
-    "tx_minhash_cdf_incremental",
-]
-
-
 # Machine-drift CANARIES (VERDICT r8/r11/r12): this box drifts up to ~3x
 # intra-day, so raw cross-round comparisons are meaningless — r11 and r12
 # each burned a session adjudicating "regressions" that were the machine.
@@ -252,7 +38,7 @@ CANARY_BASELINE = {
     "lineitem_filter_agg": 0.3636,
     "orders_scan_noop": 0.2381,
 }
-CANARY_EVERY = 25  # checkpoint cadence, in headline queries
+CANARY_EVERY = 25  # checkpoint cadence, in registry queries
 
 
 def _canary_thunks(spark, sf_dir):
@@ -311,7 +97,7 @@ def main() -> int:
     # warm up the JVM + parquet footer caches on a trivial action
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    # canary checkpoint 0: full median-of-3, before any headline query
+    # canary checkpoint 0: full median-of-3, before any registry query
     checkpoints: list[dict] = []
 
     t_session0 = time.time()
@@ -342,12 +128,11 @@ def main() -> int:
     cold: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     started_at: dict[str, float] = {}
-    for qi, name in enumerate(HEADLINE):
+    for qi, (name, fn) in enumerate(queries.items()):
         # interleaved canary checkpoint every CANARY_EVERY queries (single
         # run each — ~1 s; drift is a slow signal, cadence beats precision)
         if qi and qi % CANARY_EVERY == 0:
             _checkpoint(qi, 1)
-        fn = queries[name]
         started_at[name] = round(time.time() - t_session0, 1)
         t0 = time.time()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -378,7 +163,7 @@ def main() -> int:
         # never inside a timed region.
         spark.sparkContext._jvm.System.gc()
     # closing checkpoint: full median-of-3 after the last query
-    _checkpoint(len(HEADLINE), 3)
+    _checkpoint(len(queries), 3)
 
     # per-query normalization: raw / drift of the NEAREST checkpoint, so a
     # cross-round reader compares baseline-machine seconds, not this
@@ -386,7 +171,7 @@ def main() -> int:
     # which-checkpoint for every query (VERDICT r12 #2).
     detail: dict[str, dict] = {}
     normalized: dict[str, float] = {}
-    for qi, name in enumerate(HEADLINE):
+    for qi, name in enumerate(queries):
         cp = nearest_checkpoint(qi, checkpoints)
         d = max(cp["drift"], 1e-9)
         normalized[name] = round(timings[name] / d, 3)

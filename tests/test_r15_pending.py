@@ -1,9 +1,7 @@
-"""The 11 entries that joined the registry when it unfroze in r15
-(VERDICT r13 #4 / SCALING.md extension plan): built + oracle-gated a
-round early, REGISTERED (window front) since r15. Exercised here at
-sf0.001 with the same comparison the driver's correctness gate applies
-(row count, column names, Arrow type classes, order-insensitive value
-hash)."""
+"""The 11 codec-backed media, shard and CDC entries that lead the
+registry (the front of the gate window). Exercised here at sf0.001 with
+the same comparison the driver's correctness gate applies (row count,
+column names, Arrow type classes, order-insensitive value hash)."""
 
 import sys
 
@@ -23,49 +21,35 @@ from tools.check_correctness import (  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
+SMOKE = [
+    "mm_decode_bmp",
+    "mm_decode_wav",
+    "mm_decode_jpeg",
+    "mm_decode_tiff",
+    "mm_decode_y4m",
+    "mm_phash_neardup_real",
+    "e27_cdf_matview_e2e",
+    "e28_cdc_replica_sync",
+    "e29_webdataset_roundtrip",
+    "ann_filtered_ivf",
+    "tx_minhash_cdf_incremental",
+]
+
+
 def test_r15_pending_disjoint_from_registry():
-    pending = entry_mod.r15_pending()
-    assert set(pending) == {
-        "mm_decode_bmp",
-        "mm_decode_wav",
-        "mm_decode_jpeg",
-        "mm_decode_tiff",
-        "mm_decode_y4m",
-        "mm_phash_neardup_real",
-        "e27_cdf_matview_e2e",
-        "e28_cdc_replica_sync",
-        "e29_webdataset_roundtrip",
-        "ann_filtered_ivf",
-        "tx_minhash_cdf_incremental",
-    }
-    # the registry unfroze in r15: the pending entries are now REGISTERED
-    # (window front) and their oracles merged into oracle_sql()
     qs = entry_mod.queries()
-    assert set(pending) <= set(qs)
-    assert set(pending) <= set(entry_mod.oracle_sql())
+    assert len(set(SMOKE)) == 11
+    assert set(SMOKE) <= set(qs)
+    assert set(SMOKE) <= set(entry_mod.oracle_sql())
     assert len(qs) == 203
-    # they lead the gate window (never driver-gated before r15)
-    assert list(qs)[:11] == list(pending)
+    # they lead the gate window, in this order
+    assert list(qs)[:11] == SMOKE
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "mm_decode_bmp",
-        "mm_decode_wav",
-        "mm_decode_jpeg",
-        "mm_decode_tiff",
-        "mm_decode_y4m",
-        "mm_phash_neardup_real",
-        "e27_cdf_matview_e2e",
-        "e28_cdc_replica_sync",
-        "e29_webdataset_roundtrip",
-        "ann_filtered_ivf",
-        "tx_minhash_cdf_incremental",
-    ],
-)
+@pytest.mark.parametrize("name", SMOKE)
 def test_r15_pending_matches_oracle(spark, name):
-    fn, sql = entry_mod.r15_pending()[name]
+    fn = entry_mod.queries()[name]
+    sql = entry_mod.oracle_sql()[name]
     con = duckdb.connect()
     for t in entry_mod.TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

@@ -11,7 +11,9 @@ TYPE failure instead of being masked by Python-level stringification.
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
        python tools/check_correctness.py [sf_dir] --window
 (--window restricts the run to the first 50 queries() entries — exactly
-the slice the driver's correctness gate reads.)
+the slice the driver's correctness gate reads. A query selector is an exact
+registry name, or else a prefix group: ``e1`` selects ``e1_*``, never
+``e10_*``. A selector that matches nothing exits 2.)
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import time
 import duckdb
 import pyarrow as pa
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from vastdb_sdk_spark.session import build_spark  # noqa: E402
@@ -125,6 +127,14 @@ def spark_to_arrow(sdf) -> pa.Table:
     return pa.Table.from_pandas(sdf.toPandas(), preserve_index=False)
 
 
+def select(sel: str, names) -> set[str]:
+    """Registry names a command-line selector picks: an exact name selects
+    only itself, otherwise ``sel + "_"`` is a prefix group."""
+    if sel in names:
+        return {sel}
+    return {n for n in names if n.startswith(sel + "_")}
+
+
 def main():
     args = sys.argv[1:]
     window_only = "--window" in args
@@ -141,7 +151,7 @@ def main():
         known = set(entry_mod.queries())
         resolved = set()
         for sel in only:
-            hits = {n for n in known if n == sel or n.startswith(sel + "_") or n.startswith(sel)}
+            hits = select(sel, known)
             if not hits:
                 print(f"error: no query matches {sel!r}", file=sys.stderr)
                 return 2

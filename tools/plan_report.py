@@ -1,19 +1,20 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: physical-plan evidence for every headline query —
-pushed filters, read schemas, join strategies, shuffle counts. This is the
-`.explain("formatted")`-and-iterate loop made reviewable.
+"""Generate PLANS.md: physical-plan evidence for every registry query, in
+``queries()`` order — pushed filters, read schemas, join strategies,
+shuffle counts. This is the `.explain("formatted")`-and-iterate loop made
+reviewable.
 
 Usage: python tools/plan_report.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import HEADLINE  # noqa: E402
 from vastdb_sdk_spark.plans import inspect as pi  # noqa: E402
 from vastdb_sdk_spark.session import build_spark  # noqa: E402
 
@@ -25,15 +26,15 @@ def main() -> int:
     lines = [
         "# PLANS — physical-plan evidence (auto-generated by tools/plan_report.py)",
         "",
-        f"Scale dir: `{sf_dir}`. For each headline query: pushed filters,",
+        f"Scale dir: `{sf_dir}`. For each registry query: pushed filters,",
         "read schemas (column pruning), join strategy counts, and shuffle",
         "(Exchange) counts from `.explain(\"formatted\")`.",
         "",
         "| query | pushed filters | read schemas | broadcast joins | sort-merge joins | shuffles |",
         "|---|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
-        df = queries[name](spark, sf_dir)
+    for name, fn in queries.items():
+        df = fn(spark, sf_dir)
         pf = pi.pushed_filters(df)
         rs = pi.read_schemas(df)
         pf_s = "; ".join(pf)[:120] or "—"
@@ -46,7 +47,7 @@ def main() -> int:
     lines.append("")
     with open("PLANS.md", "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
+    print(f"wrote PLANS.md ({len(queries)} queries)")
     return 0
 
 

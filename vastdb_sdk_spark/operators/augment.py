@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .parallelism import fan_out as _fan_out
+from .parallelism import fan_out
 
 
 def _pos_hash(id_col: str, lo: int, hi: int) -> "F.Column":
@@ -165,7 +165,7 @@ def span_corrupt(
     closing = F.format_string(sent_fmt, n_spans)
     body = _number(F.concat_ws(" ", tgt_pieces))  # NULL pieces are skipped
     return (
-        _fan_out(df)
+        fan_out(df)
         .select(F.col(id_col), tk.alias("__tk"))
         .select(F.col(id_col), "__tk", starts.alias("__st"), lens.alias("__ln"))
         .select(F.col(id_col), "__tk", masked.alias("__mk"))
@@ -313,7 +313,7 @@ def mlm_mask(
     # the struct array — a multiply-referenced non-cheap alias, which
     # CollapseProject deliberately does not inline (same device as
     # minhash_signatures' staged projections)
-    return _fan_out(df).select(
+    return fan_out(df).select(
         F.col(id_col),
         tk.alias("__tk"),
     ).select(

@@ -28,11 +28,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_from_tokens, tokens
-from .parallelism import fan_out as _fan_out
+from .parallelism import fan_out
 
 
 def _doc_grams(df: DataFrame, text_col: str, id_col: str, n: int, out_id: str) -> DataFrame:
-    toks = _fan_out(df).select(
+    toks = fan_out(df).select(
         F.col(id_col).alias(out_id), tokens(F.col(text_col)).alias("__tk")
     )
     return toks.select(

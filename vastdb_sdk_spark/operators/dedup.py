@@ -27,8 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_from_tokens, tokens
-from .parallelism import fan_out as _fan_out
-from .pinning import pin as _pin
+from .parallelism import fan_out
+from .pinning import pin
 from .pinning import pin_scope as _pin_scope
 from .pinning import release as _release
 
@@ -146,7 +146,7 @@ def minhash_signatures(
         extra = [
             F.coalesce(F.size(F.col("__tk")) == 0, F.lit(True)).alias("__tkempty")
         ]
-    toked = _fan_out(df).select(id_col, tokens(F.col(text_col)).alias("__tk"))
+    toked = fan_out(df).select(id_col, tokens(F.col(text_col)).alias("__tk"))
     staged = toked.select(
         id_col, shingles_from_tokens(F.col("__tk"), shingle_k).alias("__sh"), *extra
     )
@@ -284,14 +284,14 @@ def lsh_candidate_pairs(
     # The pinned frame is num_bands narrow rows per doc.
     # r15 adjudication of the cross-session "~1.4x regression" suspect
     # (VERDICT r14 #1): 4-arm interleaved A/B (pin/nopin x fan/nofan,
-    # tools/ab_lsh_arms.py, two sessions) + an 8-round pin-vs-nopin
+    # OPTIMIZATION_r15.md, two sessions) + an 8-round pin-vs-nopin
     # tie-break. fan_out is the load-bearing win (fan arms 2.0-2.5 s vs
     # nofan 2.8-4.3 s in-session); pin vs nopin is noise (1.884 vs
     # 1.941 s median over 8 interleaved rounds). Same-code sessions
     # spanned 1.29-2.47 canary-normalized on this query — the family's
     # documented 1.3-1.6x session drift (SCALING.md r8), not a code
     # regression. KEEP pin+fan.
-    bands = _pin(
+    bands = pin(
         lsh_band_keys(sigs, num_bands, id_col, hash_fn, skip_col="__tkempty")
     )
     if max_bucket_size is not None:
@@ -667,7 +667,7 @@ def simhash_near_pairs(
     # per-bit aggregation, or a DCT over decoded images on the pHash
     # path) is the expensive part and would otherwise run once per
     # join side (r14). The pinned frame is 4 narrow rows per doc.
-    b = _pin(b)
+    b = pin(b)
     lhs = b.alias("a")
     rhs = b.alias("b")
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
@@ -884,7 +884,7 @@ def dup_clusters(
     # its lifecycle instead of leaking one checkpoint per round to GC
     # (only the FINAL round's frame outlives the loop; the session sweep
     # or GC reclaims it once the caller is done)
-    labels = _pin(
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("lab", F.col("node"))
@@ -916,7 +916,7 @@ def dup_clusters(
         if round_idx >= 2:
             # materialize once: propagated feeds BOTH sides of the self-join
             # (same count-then-checkpoint discipline as below)
-            propagated = _pin(propagated)
+            propagated = pin(propagated)
             round_ckpt = propagated
             jumped = (
                 propagated.alias("x")
@@ -937,7 +937,7 @@ def dup_clusters(
         # checkpoint BEFORE the convergence count: the count then reads the
         # materialized round result instead of re-running the join pipeline
         # (count-then-checkpoint computed every round twice)
-        new_labels = _pin(
+        new_labels = pin(
             jumped.join(labels.select("node", "lab"), "node")
             .select("node", "new_lab", "lab")
         )
@@ -1079,7 +1079,7 @@ def winnow_fingerprints(
         raise ValueError(f"k must be >= 2 tokens, got {k}")
     if w < 1:
         raise ValueError(f"w must be >= 1 grams, got {w}")
-    staged = _fan_out(df).select(F.col(id_col), tokens(F.col(text_col)).alias("__tk"))
+    staged = fan_out(df).select(F.col(id_col), tokens(F.col(text_col)).alias("__tk"))
     nonempty = staged.filter(F.size(F.col("__tk")) > 0)
     npos = F.greatest(F.size(F.col("__tk")) - k, F.lit(0))
     pos = nonempty.select(
@@ -1310,7 +1310,7 @@ def tfidf_cosine_pairs(
     # the no-prefix-filter self-join) — pinned, or the whole
     # tokenize -> tf -> df-join -> normalize chain re-runs per consumer
     # (r14: dd_tfidf_pairs' plan held 10 corpus scans / 38 exchanges)
-    unit = _pin(
+    unit = pin(
         weighted.join(norm, "__id").select(
             "__id", "__t", "__df", (F.col("__w") / F.col("__norm")).alias("__u")
         )
@@ -1339,7 +1339,7 @@ def tfidf_cosine_pairs(
     cum = F.sum(F.col("__u") * F.col("__u")).over(order)
     # prefix feeds both sides of the candidate join: pin it too (it is a
     # subset of the already-materialized unit rows plus one window pass)
-    prefix = _pin(
+    prefix = pin(
         unit.withColumn("__cum", cum).filter(
             F.lit(1.0) - (F.col("__cum") - F.col("__u") * F.col("__u"))
             >= F.lit(float(threshold)) ** 2

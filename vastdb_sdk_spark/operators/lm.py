@@ -32,7 +32,7 @@ from ..functions.text import tokens
 # is per-invocation (no cross-run state): a fresh call re-fits and
 # re-materializes. Frames are vocabulary-sized, so the materialization
 # is small wherever the corpus is big.
-from .pinning import pin as _pin
+from .pinning import pin
 
 
 def fit_unigram_counts(
@@ -82,7 +82,7 @@ def unigram_logprob_scores(
     if smoothing <= 0:
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     toks = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
-    cnt = counts if counts is not None else _pin(fit_unigram_counts(df, text_col))
+    cnt = counts if counts is not None else pin(fit_unigram_counts(df, text_col))
     # total/V come from the FULL distribution even when the scoring vocab
     # is capped — the cap changes which tokens fall into the OOV bucket,
     # not the model's normalizer.
@@ -197,7 +197,7 @@ def bigram_logprob_scores(
         F.element_at(F.col("__tk"), F.col("__p")).alias("v"),
         F.element_at(F.col("__tk"), F.col("__p") + 1).alias("w"),
     )
-    cnt = counts if counts is not None else _pin(fit_bigram_counts(df, text_col))
+    cnt = counts if counts is not None else pin(fit_bigram_counts(df, text_col))
     # prefix counts and the continuation vocabulary come from the FULL
     # distribution even when the scoring vocab is capped
     pfx = cnt.groupBy("v").agg(F.sum("__c").alias("__cv"))
@@ -281,7 +281,7 @@ def bm25_scores(
     def raw_tf(t):
         return F.size(F.filter(F.col("__tk"), lambda x: x == F.lit(t)))
 
-    staged = _pin(
+    staged = pin(
         toked.select(
             F.col(id_col),
             F.size("__tk").alias("__dl"),
@@ -551,7 +551,7 @@ def pmi_top_pairs(
         raise ValueError(f"k={k} must be >= 1")
     if min_count < 1:
         raise ValueError(f"min_count={min_count} must be >= 1")
-    bc = counts if counts is not None else _pin(fit_bigram_counts(df, text_col))
+    bc = counts if counts is not None else pin(fit_bigram_counts(df, text_col))
     left = bc.groupBy("v").agg(F.sum("__c").alias("__cl"))
     right = bc.groupBy("w").agg(F.sum("__c").alias("__cr"))
     tot = bc.agg(F.sum("__c").alias("__t"))
@@ -651,7 +651,7 @@ def source_vocab_overlap(
     Returns (a, b, n_a, n_b, n_common, jaccard) with a < b."""
     # per-group vocabulary — consumed THREE times (sizes + both join
     # sides): pin it or the distinct shuffle runs per consumer
-    vocab = _pin(
+    vocab = pin(
         df.select(
             F.col(group_col).alias("__g"),
             F.explode(
@@ -1090,7 +1090,7 @@ def kl_drift_terms(
     cb = counts(df_b).withColumnRenamed("c", "count_b")
     # vocabulary-sized, consumed by totals AND the scoring join: pin it
     # or both word-count shuffles and the full-outer join run twice
-    vocab = _pin(
+    vocab = pin(
         ca.join(cb, "term", "full_outer").select(
             "term",
             F.coalesce("count_a", F.lit(0)).alias("count_a"),
@@ -1174,7 +1174,7 @@ def kn_bigram_logprob_scores(
         F.when(real, F.element_at(F.col("__tk"), F.col("__p"))).alias("v"),
         F.when(real, F.element_at(F.col("__tk"), F.col("__p") + 1)).alias("w"),
     )
-    cnt = counts if counts is not None else _pin(fit_bigram_counts(df, text_col))
+    cnt = counts if counts is not None else pin(fit_bigram_counts(df, text_col))
     pfx = cnt.groupBy("v").agg(
         F.sum("__c").alias("__cv"), F.count(F.lit(1)).alias("__n1f")
     )

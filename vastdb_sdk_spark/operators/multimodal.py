@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .parallelism import fan_out as _fan_out
+from .parallelism import fan_out
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -110,7 +110,7 @@ def decode_images(
                 }
             )
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, DECODE_RESULT_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, DECODE_RESULT_SCHEMA)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -174,7 +174,7 @@ def image_stats(
                 }
             )
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, IMAGE_STATS_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, IMAGE_STATS_SCHEMA)
 
 
 AUDIO_STATS_SCHEMA = T.StructType(
@@ -221,7 +221,7 @@ def audio_stats(
                 out[f] = pd.array([m.get(f) for m in metas], dtype=dtype)
             yield pd.DataFrame(out)
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, AUDIO_STATS_SCHEMA)
 
 
 VIDEO_STATS_SCHEMA = T.StructType(
@@ -270,7 +270,7 @@ def video_stats(
                 out[f] = pd.array([m.get(f) for m in metas], dtype=dtype)
             yield pd.DataFrame(out)
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, VIDEO_STATS_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, VIDEO_STATS_SCHEMA)
 
 
 FRAME_STATS_SCHEMA = T.StructType(
@@ -328,7 +328,7 @@ def frame_stats(
                 }
             )
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, FRAME_STATS_SCHEMA)
 
 
 def extract_features(
@@ -366,7 +366,7 @@ def extract_features(
                 }
             )
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, schema)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, schema)
 
 
 def frame_sample_plan(
@@ -443,7 +443,7 @@ def resize_images(
                 }
             )
 
-    return _fan_out(df.select(id_col, payload_col)).mapInPandas(batches, RESIZE_RESULT_SCHEMA)
+    return fan_out(df.select(id_col, payload_col)).mapInPandas(batches, RESIZE_RESULT_SCHEMA)
 
 
 def _fake_pixels(payload: bytes, size: int = 32) -> "object":

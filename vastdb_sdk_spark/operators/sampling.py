@@ -488,7 +488,7 @@ def _doc_feature_buckets(
     """(id, bucket) rows: one per unigram AND one per bigram occurrence
     (DSIR's hashed n-gram featurization, Xie et al. 2023 §3)."""
     from ..functions.text import tokens
-    from .parallelism import fan_out as _fan_out
+    from .parallelism import fan_out
 
     # ONE tokenize + ONE explode (r14): the old two-branch union (explode
     # unigrams, explode bigrams, unionByName) re-ran the tokenizer per
@@ -496,7 +496,7 @@ def _doc_feature_buckets(
     # before one Generate. Same rows (aggregation consumers downstream),
     # and the scan is fanned out so the per-token hashing parallelizes
     # on single-split inputs.
-    toks = _fan_out(df).select(
+    toks = fan_out(df).select(
         F.col(id_col), tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__tk")
     )
     bigrams = F.when(
@@ -547,14 +547,14 @@ def dsir_logratio_weights(
     drain deterministically with
     ``operators.pinning.release_all_pins(spark)`` between calls (after
     fully consuming each result — released pins cannot recompute)."""
-    from .pinning import pin as _pin
+    from .pinning import pin
 
     # raw_feats feeds TWO consumers (the raw bucket distribution and the
     # final per-doc log-ratio sum) — pinned, or the corpus-wide
     # tokenize+hash explode re-runs per consumer (r14). Two ints per
     # feature occurrence; the target stream has one consumer and stays
     # lazy.
-    raw_feats = _pin(
+    raw_feats = pin(
         _doc_feature_buckets(df, text_col, id_col, num_buckets, seed)
     )
     tgt_feats = _doc_feature_buckets(
@@ -565,7 +565,7 @@ def dsir_logratio_weights(
         # B-sized bucket counts, consumed by the log-ratio select AND the
         # totals aggregate: pin, or the corpus-wide feature explode
         # re-runs per consumer (no subplan reuse in Spark)
-        counts = _pin(
+        counts = pin(
             feats.groupBy("__fb").agg(F.count(F.lit(1)).alias("__c"))
         )
         total = counts.agg(F.sum("__c").alias("__t"))

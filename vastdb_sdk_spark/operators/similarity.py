@@ -32,7 +32,7 @@ from ..functions.vector import (
     norm,
     vec_sql,
 )
-from .pinning import pin as _pin
+from .pinning import pin
 
 
 def brute_force_topk(
@@ -344,7 +344,7 @@ def embedding_near_dup_pairs(
         # materialize the indexed frame ONCE before the self-join: Spark
         # re-evaluates the signature projection (planes x dim dots per
         # row) for EACH join side otherwise (r14; no subplan reuse)
-        indexed = _pin(indexed.withColumn("__nrm", norm(F.col(vec_col))))
+        indexed = pin(indexed.withColumn("__nrm", norm(F.col(vec_col))))
         a = indexed.alias("a")
         b = indexed.alias("b")
         sim = dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
@@ -373,7 +373,7 @@ def embedding_near_dup_pairs(
     # the verify side below still reads them straight off the scan (the
     # r12 note on dd_embed_neardup measured that persisting the full
     # vector frame is SLOWER; this pin carries 16 bytes/row)
-    sig = _pin(indexed.select(id_col, "lsh_bucket"))
+    sig = pin(indexed.select(id_col, "lsh_bucket"))
     banded = sig.select(
         id_col,
         F.explode(

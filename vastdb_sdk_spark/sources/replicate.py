@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..errors import InvalidArgument
-from ..operators.pinning import pin as _pin
+from ..operators.pinning import pin
 from ..operators.pinning import pin_scope as _pin_scope
 
 
@@ -102,7 +102,7 @@ def sync_table(
             # like the old persist, AND its lineage is truncated so the
             # anti-join, union and MERGE plan tiny LogicalRDD scans
             # instead of re-analyzing the two-sided changed-file join
-            feed = _pin(src.read_changes(from_version, to_version))
+            feed = pin(src.read_changes(from_version, to_version))
             finals = feed.filter(
                 F.col("_change_type").isin("insert", "update_postimage")
             ).select(*data_cols)
@@ -114,7 +114,7 @@ def sync_table(
             finals.select(*key_cols).distinct(), key_cols, "left_anti"
         )
         action = F.lit("upsert")
-        source = _pin(
+        source = pin(
             finals.withColumn("__sync_action", action).unionByName(
                 gone.select(
                     *[F.col(c) for c in key_cols],
@@ -298,7 +298,7 @@ def sync_derived_rows(
     # releases both pins on exit — success or raise — replacing the old
     # try/finally unpersists; everything derived is consumed inside.
     with _pin_scope():
-        feed = _pin(src.read_changes(from_version, to_version))
+        feed = pin(src.read_changes(from_version, to_version))
         finals = feed.filter(
             F.col("_change_type").isin("insert", "update_postimage")
         ).select(*src_cols)
@@ -311,7 +311,7 @@ def sync_derived_rows(
         # checks key nullability (was: two count() jobs, each re-running the
         # feed). NULL keys have no well-defined row identity — joins and
         # MERGE conditions never match them — so they are rejected here.
-        keyed = _pin(
+        keyed = pin(
             finals.select(*key_cols)
             .withColumn("__has_final", F.lit(1))
             .unionByName(removed.withColumn("__has_final", F.lit(0)))
