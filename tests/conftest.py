@@ -1,7 +1,11 @@
 import os
+import sys
 
 import pytest
 
+# the checkout under test, so __spark_entry__, bench and tools.* import
+# from this tree whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 import vastdb_sdk_spark as vastdb  # noqa: E402

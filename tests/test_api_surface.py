@@ -228,9 +228,6 @@ def test_expand_ip_ranges():
 def test_gate_registry_integrity():
     """The driver contract cannot silently drift: every queries() entry is
     unique and every one has a DuckDB oracle."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     qs = e.queries()
@@ -267,9 +264,6 @@ def test_bench_stdout_line_fits_driver_buffer():
     timings) the line fits; and the trim ladder keeps any window under
     budget while preserving metric/value/sf."""
     import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     from bench import stdout_line
 
@@ -297,9 +291,6 @@ def test_bench_canary_normalization_math():
     median measured/baseline ratio, per-query normalization divides by
     the NEAREST checkpoint's drift, and bench_compare reads normalized
     values from both artifact generations."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from bench import CANARY_BASELINE, canary_drift, nearest_checkpoint
     from tools.bench_compare import compare, normalized_queries
 
@@ -367,9 +358,6 @@ def test_gate_outputs_are_scalar(spark):
     the engine-DML queries (e*_engine_*), whose builders run real
     imports, are skipped — their outputs are plain table projections,
     covered by their own suites."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     offenders = {}
@@ -502,9 +490,6 @@ def test_bench_compare_suspect_spike_flag():
     checkpoints is flagged as a suspect sub-cadence spike (the exact
     dd_lsh_pairs_fast signature) — a machine-generated bench_one
     worklist; a mover with a loud flank, or below threshold, is not."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.bench_compare import compare
 
     old = {

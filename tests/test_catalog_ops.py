@@ -586,10 +586,6 @@ def test_manifest_scale_many_files(tmp_path):
         ManifestStore,
     )
     from vastdb_sdk_spark.plans.pruning import prune_files
-
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.manifest_scale_bench import synth_entry
 
     n = 20_000

@@ -3,15 +3,11 @@ registry (the front of the gate window). Exercised here at sf0.001 with
 the same comparison the driver's correctness gate applies (row count,
 column names, Arrow type classes, order-insensitive value hash)."""
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry_mod  # noqa: E402
-from tools.check_correctness import (  # noqa: E402
+import __spark_entry__ as entry_mod
+from tools.check_correctness import (
     spark_to_arrow,
     table_lines,
     type_class,

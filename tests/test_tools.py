@@ -6,12 +6,10 @@ scripts share."""
 import glob
 import importlib
 import os
-import sys
 
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
 
 TOOLS = sorted(
     os.path.splitext(os.path.basename(p))[0]

@@ -16,6 +16,7 @@ Usage: python tools/bloom_probe_scale.py [out.json]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import statistics
 import sys
@@ -27,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import vastdb_sdk_spark as vastdb  # noqa: E402
 from vastdb_sdk_spark import _ as D  # noqa: E402
