@@ -2,6 +2,8 @@
 vastdb/tests/test_tables.py (insert -> select -> exact Arrow equality;
 update/delete by $row_id; rename/add/drop column; txn conflict)."""
 
+import os
+
 import pyarrow as pa
 import pytest
 
@@ -227,14 +229,116 @@ def test_tx_conflict(clean_schema):
         tx2.commit()
 
 
-def test_rollback_removes_staged_data(clean_schema):
-    _make(clean_schema)
+def _data_dir(session):
+    return os.path.join(session.warehouse, "bkt", "data", "s", "t")
+
+
+def _tree(root):
+    """Every file and dir under ``root``, as relative paths."""
+    out = set()
+    for dirpath, dirs, files in os.walk(root):
+        for name in dirs + files:
+            out.add(os.path.relpath(os.path.join(dirpath, name), root))
+    return out
+
+
+ROLLBACK_SCHEMA = BASIC3.append(pa.field("emb", pa.list_(pa.float32())))
+
+
+def _rollback_rows(lo):
+    return pa.table(
+        {
+            "a": pa.array(range(lo, lo + 8), pa.int64()),
+            "b": pa.array([float(i) for i in range(8)], pa.float32()),
+            "s": [f"s{i % 3}" for i in range(8)],
+            "emb": [[float(i), float(lo), 1.0, 0.5] for i in range(8)],
+        },
+        schema=ROLLBACK_SCHEMA,
+    )
+
+
+# one statement per staged-write route; each writes files, then the
+# transaction rolls back
+_ROLLBACK_OPS = {
+    "insert": lambda t: t.insert(_rollback_rows(100)),
+    "insert_df": lambda t: t.insert_df(
+        t.spark.createDataFrame(_rollback_rows(100).drop_columns(["emb"]).to_pandas())
+    ),
+    "update_where": lambda t: t.update_where(D.a == 3, {"b": 9.5}),
+    "delete_where": lambda t: t.delete_where(D.a == 3),
+    "optimize": lambda t: t.optimize(),
+    "compact": lambda t: t.compact(),
+    "create_projection": lambda t: t.create_projection("p", ["a"], ["b"]),
+    "create_materialized_view": lambda t: t.create_materialized_view(
+        "mv", ["s"], {"n": "count"}
+    ),
+    "build_vector_index": lambda t: t.build_vector_index(num_centroids=2, seed=1),
+}
+
+
+@pytest.mark.parametrize("op", list(_ROLLBACK_OPS))
+def test_rollback_removes_staged_data(clean_schema, op):
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").create_table(
+            "t", ROLLBACK_SCHEMA, sorting_key=["a"],
+            vector_index={"column": "emb", "metric": "l2sq"},
+        )
+        t.insert(_rollback_rows(0))
+        t.insert(_rollback_rows(8))
     tx = clean_schema.transaction()
     t = tx.bucket("bkt").schema("s").table("t")
-    t.insert(BASIC3_DATA)
+    data_dir = _data_dir(clean_schema)
+    before = _tree(data_dir)
+    _ROLLBACK_OPS[op](t)
+    assert _tree(data_dir) != before  # the statement wrote something
     tx.rollback()
+    assert _tree(data_dir) == before
     with clean_schema.transaction() as tx:
-        assert tx.bucket("bkt").schema("s").table("t").count_rows() == 3
+        assert tx.bucket("bkt").schema("s").table("t").count_rows() == 16
+
+
+def test_vacuum_removes_emptied_staging_dirs(clean_schema):
+    """update_where stages a DV dir and a replacement dir; compact then
+    orphans both. vacuum deletes the orphaned parquet, their .crc
+    siblings and the dirs left without any parquet."""
+    _make(clean_schema)
+    with clean_schema.transaction() as tx:
+        tx.bucket("bkt").schema("s").table("t").insert(BASIC3_DATA)
+    with clean_schema.transaction() as tx:
+        tx.bucket("bkt").schema("s").table("t").update_where(D.a == 111, {"b": 9.5})
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        assert t.compact(target_file_rows=100) > 0
+    clean_schema.vacuum("bkt")
+    data_dir = _data_dir(clean_schema)
+    for name in os.listdir(data_dir):
+        sub = os.path.join(data_dir, name)
+        if os.path.isdir(sub):
+            assert any(
+                fn.endswith(".parquet") for _d, _s, fns in os.walk(sub) for fn in fns
+            ), name
+    for dirpath, _dirs, files in os.walk(data_dir):
+        for fn in files:
+            if fn.endswith(".parquet.crc"):
+                assert fn[1 : -len(".crc")] in files, os.path.join(dirpath, fn)
+    with clean_schema.transaction() as tx:
+        got = tx.bucket("bkt").schema("s").table("t").select().read_all().sort_by("a")
+        assert got.column("b").to_pylist() == [9.5, 9.5, 1.5, 1.5, 2.5, 2.5]
+
+
+def test_partitioned_insert_df_row_ids_follow_walk_order(clean_schema):
+    """Row ids go to part files in ``sorted(os.walk(staging))`` order:
+    ``p=a`` sorts before ``p=a-x`` there, while a plain sort of relative
+    file paths puts ``p=a-x/...`` first ('-' < '/')."""
+    schema = pa.schema([("p", pa.string()), ("v", pa.int64())])
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").create_table("pt", schema, partition_by=["p"])
+        df = t.spark.createDataFrame([("a-x", 1), ("a", 2), ("b", 3)], "p string, v long")
+        assert t.insert_df(df.coalesce(1)) == 3
+    with clean_schema.transaction() as tx:
+        got = tx.bucket("bkt").schema("s").table("pt").select(internal_row_id=True).read_all()
+        ids = dict(zip(got.column("p").to_pylist(), got.column("$row_id").to_pylist()))
+        assert ids == {"a": 0, "a-x": 1, "b": 2}
 
 
 def test_external_row_ids(clean_schema):

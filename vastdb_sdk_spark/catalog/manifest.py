@@ -445,6 +445,16 @@ class ManifestStore:
         )
 
 
+def remove_data_file(path: str) -> None:
+    """Delete a parquet data file and the ``.<name>.crc`` checksum that
+    Hadoop's local filesystem writes beside every file of a Spark job."""
+    os.unlink(path)
+    try:
+        os.unlink(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+    except FileNotFoundError:
+        pass
+
+
 class ChangeSet:
     """Recorded logical operations of one transaction, replayable onto any
     manifest and conflict-checkable between two manifests."""

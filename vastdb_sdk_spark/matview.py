@@ -42,9 +42,7 @@ invalidates an MV; ``df()`` maps keys back to current logical names.
 from __future__ import annotations
 
 import os
-import time
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -635,38 +633,19 @@ def write_matview_buckets(
     dicts (FileEntry json + ``bucket``). ``restrict_to`` asserts the state
     only contains the given buckets (incremental rewrite path)."""
     bucket_of = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    out = state.withColumn("_mv_bucket", bucket_of)
-    staging = os.path.join(
-        table._state.store.table_data_dir(table.schema.name, table.name),
-        f"mv-{name}-{time.time_ns()}",
-    )
-    (
-        out.repartition(max(1, min(n_buckets, 32)), F.col("_mv_bucket"))
-        .write.mode("overwrite")
-        .partitionBy("_mv_bucket")
-        .parquet(staging)
+    out = state.withColumn("_mv_bucket", bucket_of).repartition(
+        max(1, min(n_buckets, 32)), F.col("_mv_bucket")
     )
     files: list[dict] = []
-    for dirname in sorted(os.listdir(staging)):
-        if not dirname.startswith("_mv_bucket="):
-            continue
-        b = int(dirname.split("=", 1)[1])
-        if restrict_to is not None and b not in set(restrict_to):
+    for path, partition, md in table._staged_write(out, f"mv-{name}", ["_mv_bucket"]):
+        b = int(partition["_mv_bucket"])
+        if restrict_to is not None and b not in restrict_to:
             raise InvalidArgument(
                 f"matview bucket rewrite leaked into bucket {b} "
                 f"(expected only {restrict_to})"
             )
-        bdir = os.path.join(staging, dirname)
-        for fn in sorted(os.listdir(bdir)):
-            if not fn.endswith(".parquet"):
-                continue
-            fpath = os.path.join(bdir, fn)
-            nrows = pq.ParquetFile(fpath).metadata.num_rows
-            if nrows == 0:
-                continue
-            fe = FileEntry(path=fpath, rows=nrows, row_id_base=0)
-            files.append({**fe.to_json(), "bucket": b})
-            table._state.staged_files.append(fpath)
+        fe = FileEntry(path=path, rows=md.num_rows, row_id_base=0)
+        files.append({**fe.to_json(), "bucket": b})
     return files
 
 

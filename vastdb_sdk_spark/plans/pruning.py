@@ -63,7 +63,7 @@ def _comparable(v: Any) -> bool:
 
 def _norm_literal(v: Any) -> Any:
     """Datetime/date literals compare against stats stored as ISO strings
-    (space separator — see Table._json_scalar)."""
+    (space separator — see table._json_scalar_value)."""
     import datetime as _dt
 
     if isinstance(v, _dt.datetime):

@@ -193,7 +193,8 @@ class Session:
         Delta VACUUM for files orphaned by update/delete/optimize rewrites.
         Returns the deleted paths. Only files inside this bucket's data
         directory are candidates: zero-copy imports from external paths are
-        never touched.
+        never touched. A deleted file's ``.crc`` checksum goes with it, and
+        a staging dir left without any parquet file is removed.
 
         ``retain_versions=N`` additionally prunes manifest version files
         older than the newest N (never the current version, never a
@@ -208,7 +209,10 @@ class Session:
         may reference the deleted files) is refused at bind time with
         ``MissingSnapshot`` rather than failing mid-scan — except versions
         pinned by a named snapshot, whose files were kept."""
-        from .catalog.manifest import ManifestStore
+        import glob
+        import shutil
+
+        from .catalog.manifest import ManifestStore, remove_data_file
 
         store = ManifestStore(self._bucket_path(bucket_name))
         manifest = store.load()
@@ -248,8 +252,18 @@ class Session:
                     continue
                 path = os.path.abspath(os.path.join(dirpath, fn))
                 if path not in referenced:
-                    os.unlink(path)
+                    remove_data_file(path)
                     deleted.append(path)
+        # a child dir of a table data dir (<data>/<schema>/<table>/) is the
+        # staging dir of one Spark write; holding no parquet, it is only
+        # _SUCCESS and checksums left behind. A dir with _temporary is a
+        # write still in flight. The trailing "" makes glob match dirs only.
+        for staging in glob.glob(os.path.join(glob.escape(data_root), "*", "*", "*", "")):
+            if not any(
+                "_temporary" in dirs or any(f.endswith(".parquet") for f in files)
+                for _dp, dirs, files in os.walk(staging)
+            ):
+                shutil.rmtree(staging, ignore_errors=True)
 
         if deleted:
             # Versions older than the one we collected against may reference

@@ -50,7 +50,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog.manifest import IMPORTED_OBJECTS_TABLE_NAME, FileEntry, TableEntry
+from .catalog.manifest import (
+    IMPORTED_OBJECTS_TABLE_NAME,
+    FileEntry,
+    TableEntry,
+    remove_data_file,
+)
 from .config import QueryConfig
 from .errors import (
     InvalidArgument,
@@ -127,10 +132,10 @@ def _json_scalar_value(v):
 
 def _meta_col_stats(meta, stat_cols: list[str], cmap: dict | None = None) -> dict:
     """Per-file [min, max] for ``stat_cols`` from a parquet footer's
-    row-group statistics — the ONE implementation behind both the
-    insert-path Table._footer_col_stats and the import-path
-    _footer_scan_payload (a divergence would give imported and inserted
-    files different pruning stats)."""
+    row-group statistics — the ONE implementation behind both the files
+    of Table._staged_write and the import-path _footer_scan_payload (a
+    divergence would give imported and inserted files different pruning
+    stats)."""
     out = {}
     names = meta.schema.to_arrow_schema().names
     inv = {v: k for k, v in (cmap or {}).items()}
@@ -934,13 +939,50 @@ class Table:
         entry.files.append(fe)
         return fe
 
-    _json_scalar = staticmethod(_json_scalar_value)
+    def _staged_write(
+        self, df: DataFrame, tag: str, partition_by: Iterable[str] = ()
+    ) -> list[tuple[str, dict, Any]]:
+        """The one way a Spark write becomes files the catalog registers:
+        ``df`` lands as parquet (hive ``partition_by`` dirs) in a new
+        ``<tag>-<pid>-<ns>`` dir of the table's data dir, staged whole so
+        rollback removes every file of it. Zero-row part files are
+        deleted, and a dir that received no rows is removed (``[]``).
+        Returns ``(path, {partition col: raw value}, footer metadata)``
+        per part file in ``sorted(os.walk)`` order, the order insert_df
+        allocates ``$row_id``s in."""
+        import shutil
+        import urllib.parse
 
-    def _footer_col_stats(self, md, stat_cols: list[str], cmap: dict | None = None) -> dict:
-        """Per-file [min, max] for ``stat_cols`` from parquet footer
-        statistics (driver-side, one footer we already read). Delegates
-        to the module-level extractor the import scan also uses."""
-        return _meta_col_stats(md, stat_cols, cmap)
+        staging = os.path.join(
+            self._state.store.table_data_dir(self.schema.name, self.name),
+            f"{tag}-{os.getpid()}-{time.time_ns()}",
+        )
+        self._state.staged_files.append(staging)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        written = []
+        for dirpath, _dirs, files in sorted(os.walk(staging)):
+            rel = os.path.relpath(dirpath, staging)
+            partition = dict(
+                map(urllib.parse.unquote, seg.split("=", 1))
+                for seg in rel.split(os.sep)
+                if "=" in seg
+            )
+            for fn in sorted(files):
+                if not fn.endswith(".parquet"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                md = pq.ParquetFile(path).metadata
+                if md.num_rows:
+                    written.append((path, partition, md))
+                else:
+                    remove_data_file(path)
+        if not written:
+            shutil.rmtree(staging, ignore_errors=True)
+            self._state.staged_files.remove(staging)
+        return written
 
     def _arrow_col_stats(self, tbl: pa.Table, stat_cols: list[str]) -> dict:
         import pyarrow.compute as pc
@@ -953,7 +995,7 @@ class Table:
                 mm = pc.min_max(tbl.column(col)).as_py()
             except pa.ArrowNotImplementedError:
                 continue
-            lo, hi = self._json_scalar(mm["min"]), self._json_scalar(mm["max"])
+            lo, hi = _json_scalar_value(mm["min"]), _json_scalar_value(mm["max"])
             if lo is not None and hi is not None:
                 out[col] = [lo, hi]
         return out
@@ -1040,7 +1082,6 @@ class Table:
         self._mark_unsorted(entry)
         self._state.staged_files.append(path)
         self._mutate(entry, "insert", rows=n)
-        self._sync_blob_expansions(entry)
         return out_ids
 
     def insert_in_column_batches(
@@ -1081,83 +1122,48 @@ class Table:
         Spark plans. Returns number of rows inserted."""
         entry = TableEntry.from_json(self.entry.to_json())
         pmap = self._physical_map()
-        part_cols = list(entry.properties.get("partition_by", []))
+        part_cols = [pmap.get(c, c) for c in entry.properties.get("partition_by", [])]
         cols = [F.col(c).alias(pmap.get(c, c)) for c in df.columns]
-        staging = os.path.join(
-            self._state.store.table_data_dir(self.schema.name, self.name),
-            f"ins-{os.getpid()}-{time.time_ns()}",
-        )
-        writer = df.select(*cols).write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*[pmap.get(c, c) for c in part_cols])
-        writer.parquet(staging)
-
-        arrow = self.arrow_schema
-        total = 0
-        base = entry.next_row_id
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            partition = self._partition_from_path(dirpath, staging, part_cols, arrow, pmap)
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(dirpath, fn)
-                fmd = pq.ParquetFile(fpath).metadata
-                nrows = fmd.num_rows
-                if nrows == 0:
-                    continue
-                stat_cols = self._stat_columns(entry)
-                self._register_file(
-                    entry, fpath, nrows, row_id_base=base,
-                    partition=partition,
-                    col_stats=self._footer_col_stats(
-                        fmd, stat_cols, {pmap.get(c, c): c for c in stat_cols}
-                    ),
-                )
-                self._state.staged_files.append(fpath)
-                base += nrows
-                total += nrows
-        if not total:  # nothing written: a true no-op, like a DV statement
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+        written = self._staged_write(df.select(*cols), "ins", part_cols)
+        if not written:  # nothing written: a true no-op, like a DV statement
             return 0
+        stat_cols = self._stat_columns(entry)
+        cmap = {pmap.get(c, c): c for c in stat_cols}
+        base = entry.next_row_id
+        for path, raw, md in written:
+            self._register_file(
+                entry, path, md.num_rows, row_id_base=base,
+                partition=self._typed_partition(raw, pmap),
+                col_stats=_meta_col_stats(md, stat_cols, cmap),
+            )
+            base += md.num_rows
+        total = base - entry.next_row_id
         entry.next_row_id = base
         self._mark_unsorted(entry)
         self._mutate(entry, "insert_df", rows=total)
-        self._sync_blob_expansions(entry)
         return total
 
-    @staticmethod
-    def _partition_from_path(
-        dirpath: str, staging: str, part_cols: list[str], arrow: pa.Schema, pmap: dict
-    ) -> dict:
-        """Parse hive-style ``col=value`` path segments into typed partition
-        values (typed so manifest pruning compares like with like)."""
-        import urllib.parse
-
-        rel = os.path.relpath(dirpath, staging)
-        partition: dict = {}
-        if rel == "." or not part_cols:
-            return partition
+    def _typed_partition(self, raw: dict, pmap: dict) -> dict:
+        """Type the hive partition strings of one written file by the
+        logical column types (typed so manifest pruning compares like
+        with like)."""
+        arrow = self.arrow_schema
         inv = {v: k for k, v in pmap.items()}
-        for seg in rel.split(os.sep):
-            if "=" not in seg:
-                continue
-            phys, raw = seg.split("=", 1)
-            logical = inv.get(phys, phys)
-            raw = urllib.parse.unquote(raw)
-            if raw == "__HIVE_DEFAULT_PARTITION__":
+        partition: dict = {}
+        for phys, value in raw.items():
+            if value == "__HIVE_DEFAULT_PARTITION__":
                 continue  # NULL partition: value stays in no-constant form
+            logical = inv.get(phys, phys)
             idx = arrow.get_field_index(logical)
             if idx < 0:
                 continue
             dt = arrow.field(idx).type
             if pa.types.is_integer(dt):
-                partition[logical] = int(raw)
+                partition[logical] = int(value)
             elif pa.types.is_floating(dt):
-                partition[logical] = float(raw)
+                partition[logical] = float(value)
             else:
-                partition[logical] = raw
+                partition[logical] = value
         return partition
 
     # -- update / delete by row id (reference: vastdb/table.py:779-843) ---
@@ -1170,23 +1176,12 @@ class Table:
         arrow = self.arrow_schema
         cols = [F.col(f.name).alias(pmap.get(f.name, f.name)) for f in arrow]
         cols.append(F.col(INTERNAL_ROW_ID).cast("long").alias(PHYSICAL_ROW_ID))
-        staging = os.path.join(
-            self._state.store.table_data_dir(self.schema.name, self.name),
-            f"{op}-{os.getpid()}-{time.time_ns()}",
-        )
-        new_df.select(*cols).write.mode("overwrite").parquet(staging)
+        written = self._staged_write(new_df.select(*cols), op)
         gone = {a.path for a in affected}
         entry.files = [f for f in entry.files if f.path not in gone]
         stat_cols = self._stat_columns(entry)
         cmap = {pmap.get(c, c): c for c in stat_cols}
-        for fn in sorted(os.listdir(staging)):
-            if not fn.endswith(".parquet"):
-                continue
-            fpath = os.path.join(staging, fn)
-            md = pq.ParquetFile(fpath).metadata
-            nrows = md.num_rows
-            if nrows == 0:
-                continue
+        for path, _partition, md in written:
             # min/max row id from the footer stats of the row-id column
             rid_idx = md.schema.to_arrow_schema().names.index(PHYSICAL_ROW_ID)
             lo = min(
@@ -1196,10 +1191,9 @@ class Table:
                 md.row_group(i).column(rid_idx).statistics.max for i in range(md.num_row_groups)
             )
             self._register_file(
-                entry, fpath, nrows, min_row_id=lo, max_row_id=hi,
-                col_stats=self._footer_col_stats(md, stat_cols, cmap),
+                entry, path, md.num_rows, min_row_id=lo, max_row_id=hi,
+                col_stats=_meta_col_stats(md, stat_cols, cmap),
             )
-            self._state.staged_files.append(fpath)
 
     def _rows_to_df(self, rows: pa.RecordBatch | pa.Table) -> tuple[DataFrame, str]:
         """Client-supplied rows as a Spark frame, PARQUET-BACKED: a
@@ -1322,35 +1316,13 @@ class Table:
             F.md5(F.col("__source_file")).alias("owner_fk"),
             F.md5(F.col("__source_file")).alias("__fk"),
         )
-        staging = os.path.join(
-            self._state.store.table_data_dir(self.schema.name, self.name),
-            f"dv-{os.getpid()}-{time.time_ns()}",
-        )
-        out.write.partitionBy("__fk").mode("overwrite").parquet(staging)
         by_key = {self._dv_owner_fk(fe): fe for fe in affected}
         total = 0
-        for dirname in sorted(os.listdir(staging)):
-            if not dirname.startswith("__fk="):
-                continue
-            fe = by_key[dirname.split("=", 1)[1]]
-            added = 0
-            for fn in sorted(os.listdir(os.path.join(staging, dirname))):
-                if not fn.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(staging, dirname, fn)
-                n = pq.ParquetFile(fpath).metadata.num_rows
-                if n == 0:
-                    continue
-                fe.dv_paths.append(fpath)
-                added += n
-            fe.dv_rows += added
-            total += added
-        if total:
-            self._state.staged_files.append(staging)
-        else:  # nothing masked: a no-op statement leaves no orphan dir
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+        for path, partition, md in self._staged_write(out, "dv", ["__fk"]):
+            fe = by_key[partition["__fk"]]
+            fe.dv_paths.append(path)
+            fe.dv_rows += md.num_rows
+            total += md.num_rows
         return total
 
     def _fold_heavy_dvs(self, entry: TableEntry, candidates: list[FileEntry]) -> None:
@@ -2408,7 +2380,7 @@ class Table:
         that each file's columns are a subset of the table schema with
         matching types (reference merge policy 'containment',
         vastdb/util.py:46-63)."""
-        paths = [_strip_bucket(p) for p in files_to_import]
+        paths = list(files_to_import)
         entry = TableEntry.from_json(self.entry.to_json())
         already = {
             (os.path.abspath(f.path), tuple(sorted(f.partition.items())))
@@ -2486,7 +2458,6 @@ class Table:
         import_rows = []
         storage = storage_arrow_schema(arrow)
         for path, partition in files_and_partitions.items():
-            path = _strip_bucket(path)
             if isinstance(partition, (pa.RecordBatch, pa.Table)):
                 part = {
                     name: partition.column(name)[0].as_py()
@@ -2959,9 +2930,6 @@ class Table:
         table) — shared by full (re)builds and the incremental refresh's
         insert-delta append, so file layout/stats can never diverge."""
         pmap = self._physical_map()
-        cols = [
-            F.col(c).alias(pmap.get(c, c)) for c in sorted_columns + unsorted_columns
-        ]
         base = source_df if source_df is not None else self.df()
         df = base.select(*[F.col(c) for c in sorted_columns + unsorted_columns])
         n_parts = max(1, self.entry.num_rows // 4_000_000)
@@ -2970,32 +2938,17 @@ class Table:
             .sortWithinPartitions(*[F.col(c) for c in sorted_columns])
             .select(*[F.col(c).alias(pmap.get(c, c)) for c in sorted_columns + unsorted_columns])
         )
-        staging = os.path.join(
-            self._state.store.table_data_dir(self.schema.name, self.name),
-            f"proj-{name}-{time.time_ns()}",
-        )
-        out.write.mode("overwrite").parquet(staging)
-        files = []
         cmap = {pmap.get(c, c): c for c in sorted_columns}
-        for fn in sorted(os.listdir(staging)):
-            if not fn.endswith(".parquet"):
-                continue
-            fpath = os.path.join(staging, fn)
-            fmd = pq.ParquetFile(fpath).metadata
-            nrows = fmd.num_rows
-            if nrows == 0:
-                continue
-            files.append(
-                FileEntry(
-                    path=fpath,
-                    rows=nrows,
-                    row_id_base=0,
-                    sorted_by=list(sorted_columns),
-                    col_stats=self._footer_col_stats(fmd, sorted_columns, cmap),
-                )
+        return [
+            FileEntry(
+                path=path,
+                rows=md.num_rows,
+                row_id_base=0,
+                sorted_by=list(sorted_columns),
+                col_stats=_meta_col_stats(md, sorted_columns, cmap),
             )
-            self._state.staged_files.append(fpath)
-        return files
+            for path, _partition, md in self._staged_write(out, f"proj-{name}")
+        ]
 
     def projection(self, name: str):
         if name not in self.entry.projections:
@@ -3499,8 +3452,6 @@ class Table:
             )
 
         df = self.df(internal_row_id=True)
-        data_dir = self._state.store.table_data_dir(self.schema.name, self.name)
-        staging = os.path.join(data_dir, f"vecidx-{time.time_ns()}")
         vi = entry.vector_index
         codebooks = None
 
@@ -3535,44 +3486,10 @@ class Table:
             )
             centroids = None
 
-        files = []
-        writer = indexed.withColumnRenamed(INTERNAL_ROW_ID, PHYSICAL_ROW_ID)
-        if kind == "pq":
-            writer.write.mode("overwrite").parquet(staging)
-            for fn in sorted(os.listdir(staging)):
-                if not fn.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(staging, fn)
-                nrows = pq.ParquetFile(fpath).metadata.num_rows
-                if nrows:
-                    files.append({"path": fpath, "rows": nrows})
-                    self._state.staged_files.append(fpath)
-        else:
-            (
-                writer.repartition("centroid_id")
-                .write.mode("overwrite")
-                .partitionBy("centroid_id")
-                .parquet(staging)
-            )
-            for dirpath, _dirs, fnames in sorted(os.walk(staging)):
-                seg = os.path.basename(dirpath)
-                if not seg.startswith("centroid_id="):
-                    continue
-                cid = int(seg.split("=", 1)[1])
-                for fn in sorted(fnames):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fpath = os.path.join(dirpath, fn)
-                    nrows = pq.ParquetFile(fpath).metadata.num_rows
-                    if nrows:
-                        files.append(
-                            {"path": fpath, "rows": nrows, "centroid_id": cid}
-                        )
-                        self._state.staged_files.append(fpath)
-
         vi["kind"] = kind
-        vi["base_dir"] = staging
-        vi["files"] = files
+        vi["files"] = self._write_index_files(
+            indexed.withColumnRenamed(INTERNAL_ROW_ID, PHYSICAL_ROW_ID), kind
+        )
         # incremental-refresh anchor: the committed version whose table
         # state this index reflects. Only recordable when the build ran on
         # a clean committed state (no staged DML in this transaction) —
@@ -3594,7 +3511,10 @@ class Table:
         if codebooks is not None:
             import json as _json
 
-            cb_path = os.path.join(data_dir, f"pqbooks-{time.time_ns()}.json")
+            cb_path = os.path.join(
+                self._state.store.table_data_dir(self.schema.name, self.name),
+                f"pqbooks-{time.time_ns()}.json",
+            )
             with open(cb_path, "w") as fh:
                 _json.dump(
                     {
@@ -3609,6 +3529,22 @@ class Table:
             vi.pop("codebooks_path", None)
         vi["stale"] = False
         self._mutate(entry, "build_vector_index", kind=kind, centroids=num_centroids)
+
+    def _write_index_files(self, df: DataFrame, kind: str) -> list[dict]:
+        """Stage vector-index files for ``df``: one flat dataset for
+        ``pq``, else one dir per ``centroid_id`` cluster. Returns the
+        index's file dicts (``centroid_id`` on cluster files)."""
+        if kind == "pq":
+            written = self._staged_write(df, "vecidx")
+        else:
+            written = self._staged_write(
+                df.repartition("centroid_id"), "vecidx", ["centroid_id"]
+            )
+        return [
+            {"path": path, "rows": md.num_rows}
+            | ({"centroid_id": int(part["centroid_id"])} if part else {})
+            for path, part, md in written
+        ]
 
     def _committed_state_version(self) -> int | None:
         """The pinned base version IF this table's staged file state equals
@@ -3725,8 +3661,6 @@ class Table:
 
         vcol = vi["column"]
         cols = [f.name for f in self.arrow_schema]
-        data_dir = self._state.store.table_data_dir(self.schema.name, self.name)
-        staging = os.path.join(data_dir, f"vecidx-{time.time_ns()}")
         feed = feed.persist()
         try:
             rem = feed.filter(
@@ -3740,19 +3674,8 @@ class Table:
                 if rem.limit(1).count():
                     return _unavailable("flat pq cannot fold removals")
                 enc = pq_encode(add, self._load_codebooks(), vec_col=vcol)
-                enc.write.mode("overwrite").parquet(staging)
-                new_files = list(vi["files"])
-                for fn in sorted(os.listdir(staging)):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fpath = os.path.join(staging, fn)
-                    nrows = pq.ParquetFile(fpath).metadata.num_rows
-                    if nrows:
-                        new_files.append({"path": fpath, "rows": nrows})
-                        self._state.staged_files.append(fpath)
-                n_add = sum(
-                    f["rows"] for f in new_files[len(vi["files"]):]
-                )
+                added = self._write_index_files(enc, kind)
+                new_files = list(vi["files"]) + added
                 touched = []
             else:
                 cents = np.asarray(vi["centroids"], dtype=float)
@@ -3787,35 +3710,13 @@ class Table:
                         .join(rem_ids, PHYSICAL_ROW_ID, "left_anti")
                     )
                     new_rows = new_rows.unionByName(part)
-                (
-                    new_rows.repartition("centroid_id")
-                    .write.mode("overwrite")
-                    .partitionBy("centroid_id")
-                    .parquet(staging)
-                )
+                added = self._write_index_files(new_rows, kind)
                 # untouched clusters keep their existing files verbatim —
                 # the rewrite set is exactly the removal-touched clusters
                 # plus fresh append files for clusters receiving additions
                 new_files = [
                     f for f in vi["files"] if f["centroid_id"] not in set(touched)
-                ]
-                n_add = 0
-                for dirpath, _dirs, fnames in sorted(os.walk(staging)):
-                    seg = os.path.basename(dirpath)
-                    if not seg.startswith("centroid_id="):
-                        continue
-                    cid = int(seg.split("=", 1)[1])
-                    for fn in sorted(fnames):
-                        if not fn.endswith(".parquet"):
-                            continue
-                        fpath = os.path.join(dirpath, fn)
-                        nrows = pq.ParquetFile(fpath).metadata.num_rows
-                        if nrows:
-                            new_files.append(
-                                {"path": fpath, "rows": nrows, "centroid_id": cid}
-                            )
-                            self._state.staged_files.append(fpath)
-                            n_add += nrows
+                ] + added
         finally:
             feed.unpersist()
 
@@ -3828,7 +3729,7 @@ class Table:
         return {
             "mode": "incremental",
             "rewritten_clusters": list(touched),
-            "rows_written": int(n_add),
+            "rows_written": sum(f["rows"] for f in added),
         }
 
     def vector_search(
@@ -4101,11 +4002,6 @@ class Table:
                 F.array_except(actual, declared).alias(cfg["excessive_values_column"])
             )
         return df.select(*cols)
-
-    def _sync_blob_expansions(self, entry: TableEntry) -> None:
-        # expansions are derived views over the live table; nothing to do on
-        # insert, present as a hook for future materialized expansions
-        pass
 
 
 class Projection:
@@ -4458,9 +4354,3 @@ def _resolve_field(schema: pa.Schema, name: str) -> pa.Field:
     if idx < 0:
         raise InvalidArgument(f"unknown column {name!r}")
     return schema.field(idx)
-
-
-def _strip_bucket(path: str) -> str:
-    """Accept both plain paths and reference-style '/bucket/key' object
-    paths; we only deal in filesystem paths."""
-    return path
