@@ -121,6 +121,47 @@ def test_point_lookup_prunes_to_one_file(clean_schema):
         assert got.column("v").to_pylist() == ["s1234"]
 
 
+def test_vacuum_keeps_live_sidecars(clean_schema):
+    """A column index's sidecar dir is referenced as a whole: vacuum
+    deletes none of its files, so the index keeps pruning."""
+    session = _multi_file_table(clean_schema)
+    with session.transaction() as tx:
+        tx.bucket("bkt").schema("s").table("t").build_column_index("id")
+    deleted = session.vacuum("bkt")
+    assert not [p for p in deleted if "bloomidx-" in p]
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        assert t.prune_preview(D.id == 1234)["candidate_files"] == 1
+
+
+def test_refresh_rebuilds_v1_config(clean_schema):
+    """A pre-format-2 config (monolithic JSON, one `sidecar` key, no
+    `sidecars` list) is unreadable by design: refresh rebuilds it at the
+    same knobs into the current format, and pruning resumes."""
+    session = _multi_file_table(clean_schema)
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        t.build_column_index("id", fpp=0.02)
+        phys = t._physical_of("id")
+        entry = t.entry
+        entry.properties["column_indexes"][phys] = {
+            "kind": "bloom", "fpp": 0.02, "seed": 7, "sidecar": "/nope",
+        }
+        t._mutate(entry, "simulate v1 column-index config")
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        assert t.prune_preview(D.id == 1234)["candidate_files"] == 6
+        res = t.refresh_column_index("id")
+        assert res == {"added_files": 6, "dropped_files": 0}
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        cfg = t.column_indexes()["id"]
+        assert cfg["format"] == B.FORMAT_VERSION
+        assert (cfg["fpp"], cfg["seed"]) == (0.02, 7)
+        assert len(cfg["sidecars"]) == 1
+        assert t.prune_preview(D.id == 1234)["candidate_files"] == 1
+
+
 def test_refresh_backfills_col_type_stamp(clean_schema):
     """A config built before the col_type stamp existed (simulated by
     deleting the key) must keep-all on numeric probes — and a refresh must

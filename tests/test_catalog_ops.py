@@ -1266,7 +1266,8 @@ def test_refresh_vector_index_ivfpq_frozen_codebooks(clean_schema):
 
 
 def test_refresh_vector_index_fallbacks(clean_schema):
-    """Index built alongside uncommitted DML has no refresh anchor:
+    """Index built alongside uncommitted DML has no refresh anchor. While
+    no DML follows, it is current (noop); once DML commits,
     mode='incremental' raises, mode='auto' falls back to a full rebuild."""
     vecs, data = _vec_table(n=80, dim=8, seed=5)
     with clean_schema.transaction() as tx:
@@ -1278,10 +1279,65 @@ def test_refresh_vector_index_fallbacks(clean_schema):
         assert t.entry.vector_index["built_version"] is None
     with clean_schema.transaction() as tx:
         t = tx.bucket("bkt").schema("s").table("vf")
+        assert t.refresh_vector_index(mode="incremental")["mode"] == "noop"
+        t.delete_where(D.id == 0)
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("vf")
         with pytest.raises(vastdb.NotSupportedCommand, match="uncommitted"):
             t.refresh_vector_index(mode="incremental")
         assert t.refresh_vector_index(mode="auto")["mode"] == "full"
         assert t.entry.vector_index["built_version"] is not None
+
+
+_DERIVED = {
+    "projection": (
+        lambda t: t.create_projection("p", ["k"], ["v"]),
+        lambda t, mode: t.projection("p").refresh(mode),
+    ),
+    "matview": (
+        lambda t: t.create_materialized_view("mv", ["k"], {"n": "count"}),
+        lambda t, mode: t.materialized_view("mv").refresh(mode),
+    ),
+    "vector_index": (
+        lambda t: t.build_vector_index(num_centroids=2, seed=1),
+        lambda t, mode: t.refresh_vector_index(mode),
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_DERIVED))
+def test_derived_structure_refresh_contract(clean_schema, kind):
+    """The refresh lifecycle every derived structure shares: an unknown
+    mode is refused; a fresh structure is current, even one built in the
+    same transaction as DML (no built_version anchor); with DML staged in
+    the refreshing transaction, 'incremental' refuses and 'auto'
+    rebuilds."""
+    build, refresh = _DERIVED[kind]
+    data = pa.table({
+        "k": pa.array([i % 5 for i in range(40)], pa.int64()),
+        "v": pa.array(range(40), pa.int64()),
+        "emb": pa.array([[float(i % 7), 1.0] for i in range(40)],
+                        pa.list_(pa.float32())),
+    })
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").create_table(
+            "d", data.schema, vector_index={"column": "emb", "metric": "l2sq"}
+        )
+        t.insert(data)
+        build(t)  # same-tx DML: no anchor
+        with pytest.raises(vastdb.InvalidArgument, match="unknown refresh mode"):
+            refresh(t, "sometimes")
+        assert refresh(t, "incremental")["mode"] == "noop"
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("d")
+        assert refresh(t, "auto")["mode"] == "noop"
+        assert refresh(t, "full")["mode"] == "full"  # anchored build
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("d")
+        t.insert(data.slice(0, 1))
+        with pytest.raises(vastdb.NotSupportedCommand, match="staged DML"):
+            refresh(t, "incremental")
+        assert refresh(t, "auto")["mode"] == "full"
 
 
 def test_refresh_with_staged_dml_forces_full(clean_schema):

@@ -152,6 +152,23 @@ class TableEntry:
         """Visible rows: physical minus deletion-vector'd."""
         return sum(f.rows - f.dv_rows for f in self.files)
 
+    def referenced_paths(self) -> Iterator[str]:
+        """Every path this entry references: data files, their DV
+        sidecars, the files of its projections, materialized views and
+        vector index, and its column indexes' sidecar dirs (a dir covers
+        the files under it)."""
+        for fe in self.files:
+            yield fe.path
+            yield from fe.dv_paths
+        derived = [*self.projections.values(), *self.matviews.values()]
+        if self.vector_index:
+            derived.append(self.vector_index)
+        for cfg in derived:
+            for fj in cfg.get("files", []):
+                yield fj["path"]
+        for cidx in self.properties.get("column_indexes", {}).values():
+            yield from cidx.get("sidecars") or []
+
     def to_json(self) -> dict:
         return {
             "name": self.name,

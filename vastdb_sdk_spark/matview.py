@@ -51,7 +51,6 @@ from .errors import (
     InvalidArgument,
     MatViewExists,
     MissingMatView,
-    NotSupportedCommand,
 )
 
 AGG_FNS = ("count", "sum", "avg", "min", "max", "approx_distinct")
@@ -330,9 +329,9 @@ class MaterializedView:
     def rebuild(self) -> dict:
         """Full rebuild from the current table state."""
         cfg = self._cfg
-        files = self.table._materialize_matview(
-            self.name, cfg["group_by"], cfg["aggs"], cfg["num_buckets"],
-            specs=key_specs(cfg),
+        files = materialize_matview(
+            self.table, self.name, cfg["group_by"], cfg["aggs"],
+            cfg["num_buckets"], key_specs(cfg),
         )
         entry = TableEntry.from_json(self.table.entry.to_json())
         entry.matviews[self.name] = {
@@ -355,139 +354,105 @@ class MaterializedView:
         unavailable), "full". Returns a summary dict with ``mode``,
         ``base_scanned``, ``buckets_rewritten``, ``buckets_total``."""
         t = self.table
-        if mode not in ("auto", "incremental", "full"):
-            raise InvalidArgument(f"unknown refresh mode {mode!r}")
-        if mode == "full":
-            return self.rebuild()
-        cfg = self._cfg
-        if not cfg.get("stale"):
-            return {"mode": "noop", "base_scanned": False,
-                    "buckets_rewritten": 0,
-                    "buckets_total": cfg["num_buckets"]}
-
-        def _unavailable(why):
-            if mode == "incremental":
-                raise NotSupportedCommand(
-                    f"incremental matview refresh unavailable for "
-                    f"{t.path}:{self.name}: {why}"
-                )
-            return self.rebuild()
-
-        built = cfg.get("built_version")
-        if built is None:
-            return _unavailable("view was built alongside uncommitted DML")
-        # Same staged-DML hazard as refresh_vector_index / Projection.refresh:
-        # the feed spans committed versions only — clearing `stale` while
-        # rows staged in THIS transaction are absent from the feed would
-        # silently corrupt the view. Route to the full path, which reads
-        # staged state.
-        if t._committed_state_version() is None:
-            return _unavailable(
-                "staged DML in this transaction (feed only covers "
-                "committed spans)"
-            )
-        cur = t._state.base_version
-        try:
-            feed = t.read_changes(built, cur)
-        except InvalidArgument as e:
-            return _unavailable(f"feed span unreadable ({e})")
-
+        entry = TableEntry.from_json(t.entry.to_json())
+        cfg = entry.matviews[self.name]
         keys = cfg["group_by"]
         aggs = cfg["aggs"]
         n_buckets = cfg["num_buckets"]
-        bucket_of = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-        pmap = t._physical_map()
-        phys_feed = with_keys(
-            feed.select(
-                F.col("_change_type"),
-                *[F.col(c).alias(pmap.get(c, c)) for c in t.arrow_schema.names],
-            ),
-            key_specs(cfg),
-        )
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        has_nonsub = any(
-            fn in NONSUBTRACTIVE_FNS for fn, _ in aggs.values()
-        )
-        base_scanned = False
-        # the feed feeds THREE jobs (delta keys, the removal probe, the
-        # delta merge) — persist it once instead of re-running the
-        # two-sided changed-file diff join per consumer (same fix as
-        # sources/replicate's sync fold)
-        phys_feed = phys_feed.persist()
-        delta_keys = phys_feed.select(*[F.col(k) for k in keys]).distinct()
-        delta_keys = delta_keys.persist()
-        try:
-            # bounded collect: distinct bucket ids <= num_buckets
-            affected = sorted(
-                r[0]
-                for r in delta_keys.select(bucket_of.alias("b")).distinct().collect()
-            )
-            # min/max/approx_distinct ARE insert-mergeable (least/
-            # greatest/hll_union); only removals force the base
-            # recompute. An append-only span — the streaming-ingest case
-            # — stays a pure delta merge regardless of the aggregate
-            # mix. (limit-1 probe: one tiny job.)
-            has_removals = has_nonsub and bool(
-                phys_feed.filter(
-                    F.col("_change_type").isin("delete", "update_preimage")
-                )
-                .limit(1)
-                .count()
-            )
-            if not affected:
-                merged = None  # feed span empty -> state already current
-            elif has_nonsub and has_removals:
-                # non-subtractive states cannot fold a removal: recompute
-                # the affected GROUPS from the base (broadcast semi/anti
-                # on the affected keys — churn-bounded group count).
-                old = self._state_df(buckets=affected)
-                base = with_keys(_phys_df(t), key_specs(cfg))
-                recomputed = (
-                    base.join(
-                        F.broadcast(delta_keys),
-                        self._key_cond(keys, delta_keys, left=base),
-                        "leftsemi",
-                    )
-                    .groupBy(*[F.col(k) for k in keys])
-                    .agg(*_state_aggs(aggs))
-                )
-                kept = old.join(
-                    F.broadcast(delta_keys),
-                    self._key_cond(keys, delta_keys, left=old),
-                    "left_anti",
-                )
-                merged = kept.unionByName(recomputed)
-                base_scanned = True
-            else:
-                old = self._state_df(buckets=affected)
-                merged = self._merge_additive(old, phys_feed, sign, keys, aggs)
 
-            entry = TableEntry.from_json(t.entry.to_json())
-            mcfg = entry.matviews[self.name]
-            if merged is not None:
-                new_files = t._write_matview_buckets(
-                    self.name, merged, keys, n_buckets, restrict_to=affected
+        def _fold(feed, cur):
+            bucket_of = F.pmod(
+                F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
+            )
+            pmap = t._physical_map()
+            phys_feed = with_keys(
+                feed.select(
+                    F.col("_change_type"),
+                    *[F.col(c).alias(pmap.get(c, c)) for c in t.arrow_schema.names],
+                ),
+                key_specs(cfg),
+            )
+            sign = F.when(
+                F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+            ).otherwise(F.lit(-1))
+            has_nonsub = any(
+                fn in NONSUBTRACTIVE_FNS for fn, _ in aggs.values()
+            )
+            base_scanned = False
+            delta_keys = phys_feed.select(*[F.col(k) for k in keys]).distinct()
+            delta_keys = delta_keys.persist()
+            try:
+                # bounded collect: distinct bucket ids <= num_buckets
+                affected = sorted(
+                    r[0]
+                    for r in delta_keys.select(bucket_of.alias("b")).distinct().collect()
                 )
-                mcfg["files"] = [
-                    fj for fj in mcfg["files"] if fj["bucket"] not in set(affected)
-                ] + new_files
-        finally:
-            delta_keys.unpersist()
-            phys_feed.unpersist()
-        mcfg["stale"] = False
-        mcfg["built_version"] = cur
-        t._mutate(
-            entry, "refresh_matview", matview=self.name,
-            buckets=len(affected),
+                # min/max/approx_distinct ARE insert-mergeable (least/
+                # greatest/hll_union); only removals force the base
+                # recompute. An append-only span — the streaming-ingest
+                # case — stays a pure delta merge regardless of the
+                # aggregate mix. (limit-1 probe: one tiny job.)
+                has_removals = has_nonsub and bool(
+                    phys_feed.filter(
+                        F.col("_change_type").isin("delete", "update_preimage")
+                    )
+                    .limit(1)
+                    .count()
+                )
+                if not affected:
+                    merged = None  # feed span empty -> state already current
+                elif has_nonsub and has_removals:
+                    # non-subtractive states cannot fold a removal:
+                    # recompute the affected GROUPS from the base (broadcast
+                    # semi/anti on the affected keys — churn-bounded group
+                    # count).
+                    old = self._state_df(buckets=affected)
+                    base = with_keys(_phys_df(t), key_specs(cfg))
+                    recomputed = (
+                        base.join(
+                            F.broadcast(delta_keys),
+                            self._key_cond(keys, delta_keys, left=base),
+                            "leftsemi",
+                        )
+                        .groupBy(*[F.col(k) for k in keys])
+                        .agg(*_state_aggs(aggs))
+                    )
+                    kept = old.join(
+                        F.broadcast(delta_keys),
+                        self._key_cond(keys, delta_keys, left=old),
+                        "left_anti",
+                    )
+                    merged = kept.unionByName(recomputed)
+                    base_scanned = True
+                else:
+                    old = self._state_df(buckets=affected)
+                    merged = self._merge_additive(old, phys_feed, sign, keys, aggs)
+
+                if merged is not None:
+                    new_files = write_matview_buckets(
+                        t, self.name, merged, keys, n_buckets, restrict_to=affected
+                    )
+                    cfg["files"] = [
+                        fj for fj in cfg["files"] if fj["bucket"] not in set(affected)
+                    ] + new_files
+            finally:
+                delta_keys.unpersist()
+            summary = {
+                "mode": "incremental",
+                "base_scanned": base_scanned,
+                "buckets_rewritten": len(affected),
+                "buckets_total": n_buckets,
+            }
+            audit = {"matview": self.name, "buckets": len(affected)}
+            return summary, "refresh_matview", audit
+
+        res = t._refresh_derived(
+            entry, cfg, mode, f"matview {self.name}", self.rebuild, _fold
         )
-        return {
-            "mode": "incremental",
-            "base_scanned": base_scanned,
-            "buckets_rewritten": len(affected),
-            "buckets_total": n_buckets,
-        }
+        if res["mode"] == "noop":
+            res |= {"base_scanned": False, "buckets_rewritten": 0,
+                    "buckets_total": n_buckets}
+        return res
 
     @staticmethod
     def _key_cond(keys: list[str], right: DataFrame, left: DataFrame | None = None):
@@ -601,8 +566,8 @@ class MaterializedView:
 
 
 # ----------------------------------------------------------------------
-# Table-side materialization helpers (kept here so the file layout and the
-# refresh's bucket rewrite can never diverge; Table binds them as methods).
+# materialization helpers shared by the build and the refresh's bucket
+# rewrite, so their file layouts can never diverge
 
 
 def materialize_matview(

@@ -216,37 +216,25 @@ class Session:
 
         store = ManifestStore(self._bucket_path(bucket_name))
         manifest = store.load()
-        referenced: set[str] = set()
-
-        def collect(m) -> None:
-            for te in m.tables.values():
-                for fe in te.files:
-                    referenced.add(os.path.abspath(fe.path))
-                    for dvp in fe.dv_paths:
-                        referenced.add(os.path.abspath(dvp))
-                for proj in te.projections.values():
-                    for fj in proj.get("files", []):
-                        referenced.add(os.path.abspath(fj["path"]))
-                for mv in te.matviews.values():
-                    # matview state buckets are .parquet under the data
-                    # dir, same liveness rule as projection/index files
-                    for fj in mv.get("files", []):
-                        referenced.add(os.path.abspath(fj["path"]))
-                if te.vector_index:
-                    # index cluster files are .parquet under the data dir:
-                    # without this they'd be vacuumed away while the live
-                    # manifest still routes approximate searches to them
-                    for fj in te.vector_index.get("files", []):
-                        referenced.add(os.path.abspath(fj["path"]))
-
-        collect(manifest)
+        manifests = [manifest]
         if keep_snapshots:
-            for _name, version in manifest.snapshots.items():
-                collect(store.load(version))
+            manifests += [store.load(v) for v in manifest.snapshots.values()]
+        referenced = {
+            os.path.abspath(p)
+            for m in manifests
+            for te in m.tables.values()
+            for p in te.referenced_paths()
+        }
 
         data_root = os.path.join(store.bucket_path, "data")
         deleted = []
-        for dirpath, _dirs, files in os.walk(data_root):
+        for dirpath, dirs, files in os.walk(data_root):
+            # a referenced dir (a column index's sidecar dataset) covers
+            # every file under it
+            dirs[:] = [
+                d for d in dirs
+                if os.path.abspath(os.path.join(dirpath, d)) not in referenced
+            ]
             for fn in files:
                 if not fn.endswith(".parquet"):
                     continue

@@ -180,6 +180,11 @@ VECTOR_DIST_COL = "vast_pysdk_vector_dist"  # reference: vastdb/_adbc.py:140
 _ROW_ID_ARROW = pa.uint64()  # reference: vastdb/table.py:42
 
 
+class _NoFold(Exception):
+    """Raised by a derived structure's fold when it cannot fold a feed span
+    (the message says why); see :meth:`Table._refresh_derived`."""
+
+
 @dataclasses.dataclass
 class TableStats:
     """Reference: TableStats fields, vastdb/_internal.py:829-842."""
@@ -718,18 +723,7 @@ class Table:
         count."""
         config = config or QueryConfig()
         entry = self.entry
-        files = entry.files
-        explicit = num_splits is not None
-        if num_splits is None:
-            num_splits = config.num_splits or max(
-                1, entry.num_rows // config.rows_per_split
-            )
-        if not explicit:
-            num_splits = min(num_splits, max(1, len(files)))
-        num_splits = max(1, num_splits)
-        groups: list[list[FileEntry]] = [[] for _ in range(num_splits)]
-        for i, fe in enumerate(files):
-            groups[i % num_splits].append(fe)
+        groups = _split_groups(entry.files, config, num_splits)
         out_schema = self._select_out_schema(columns, internal_row_id)
         entry_json = entry.to_json()
 
@@ -2995,18 +2989,6 @@ class Table:
 
         return [MaterializedView(n, self) for n in sorted(self.entry.matviews)]
 
-    def _materialize_matview(self, name, keys, aggs, n_buckets, specs=None):
-        from .matview import materialize_matview
-
-        return materialize_matview(self, name, keys, aggs, n_buckets, specs)
-
-    def _write_matview_buckets(self, name, state, keys, n_buckets, restrict_to=None):
-        from .matview import write_matview_buckets
-
-        return write_matview_buckets(
-            self, name, state, keys, n_buckets, restrict_to=restrict_to
-        )
-
     def _route_aggregate(self, req_specs: list, norm_aggs: dict):
         """The best fresh materialized view whose state covers the
         request, or None. 'Best' = fewest key columns (the coarsest
@@ -3302,20 +3284,19 @@ class Table:
         cfg = self.entry.properties.get("column_indexes", {}).get(phys)
         if cfg is None:
             raise MissingProjection(f"column index on {column!r}")
-        if cfg.get("format") != B.FORMAT_VERSION:
-            # v1 monolithic-JSON sidecar (pre-canonicalization hashes):
-            # unreadable by design — rebuild from scratch at the same knobs
-            res = self.build_column_index(
-                column, fpp=cfg.get("fpp", 0.01), seed=cfg.get("seed", 42)
-            )
-            return {"added_files": res["indexed_files"], "dropped_files": 0}
-        dirs = list(cfg["sidecars"])
-        try:
-            indexed = B.sidecar_paths(dirs)
-        except OSError:
-            # a sidecar dir is gone (config restored from a snapshot taken
-            # before a rebuild deleted its dirs): rebuild from scratch —
-            # probing already degrades to keep-all for the same reason
+        indexed = None
+        # a v1 monolithic-JSON sidecar (pre-canonicalization hashes, one
+        # `sidecar` key) is unreadable by design; a sidecar dir may be gone
+        # (config restored from a snapshot taken before a rebuild deleted
+        # its dirs — probing already degrades to keep-all for the same
+        # reason). Either way, rebuild from scratch at the same knobs.
+        if cfg.get("format") == B.FORMAT_VERSION:
+            dirs = list(cfg["sidecars"])
+            try:
+                indexed = B.sidecar_paths(dirs)
+            except OSError:
+                pass
+        if indexed is None:
             res = self.build_column_index(
                 column, fpp=cfg.get("fpp", 0.01), seed=cfg.get("seed", 42),
                 max_bits=cfg.get("max_bits"),
@@ -3561,6 +3542,75 @@ class Table:
         )
         return self._state.base_version if clean else None
 
+    def _refresh_derived(
+        self, entry: TableEntry, cfg: dict, mode: str, label: str, full, fold
+    ) -> dict:
+        """The one refresh lifecycle of the derived structures (projections,
+        materialized views, the vector index): each is built, marked stale
+        by every DML, and refreshed by folding the change feed since its
+        build into its files instead of rebuilding from scratch.
+
+        ``entry`` is a private copy of this table's entry and ``cfg`` the
+        structure's config dict inside it; ``label`` (``"projection p"``,
+        ``"matview v"``, ``"vector_index"``) names it in errors. ``full()``
+        rebuilds and returns the summary. ``fold(feed, cur)`` gets the
+        persisted change feed from ``built_version`` to ``cur``, writes the
+        new files, updates ``cfg["files"]`` and returns ``(summary, op,
+        audit)``, the audit op name and details it commits under; it
+        raises :class:`_NoFold` when it cannot fold the span.
+
+        ``mode``: "full" rebuilds; "auto" folds when it can and else
+        rebuilds; "incremental" raises ``NotSupportedCommand`` instead of
+        rebuilding. A non-stale structure is current (every DML marks it
+        stale) and returns noop. Folding needs a ``built_version`` anchor
+        (a build alongside uncommitted DML has none) and no DML staged in
+        this transaction: the feed spans committed versions only, so
+        folding it and clearing ``stale`` would drop the staged rows; the
+        full rebuild reads the staged state."""
+        if mode not in ("auto", "incremental", "full"):
+            raise InvalidArgument(f"unknown refresh mode {mode!r}")
+        if mode == "full":
+            return full()
+        if not cfg.get("stale"):
+            return {"mode": "noop"}
+
+        def _unavailable(why):
+            if mode == "incremental":
+                raise NotSupportedCommand(
+                    f"incremental refresh of {label} unavailable for "
+                    f"{self.path}: {why}"
+                )
+            return full()
+
+        built = cfg.get("built_version")
+        if built is None:
+            return _unavailable("built alongside uncommitted DML")
+        if self._committed_state_version() is None:
+            return _unavailable(
+                "staged DML in this transaction (feed only covers "
+                "committed spans)"
+            )
+        cur = self._state.base_version
+        try:
+            feed = self.read_changes(built, cur)
+        except InvalidArgument as e:
+            return _unavailable(f"feed span unreadable ({e})")
+        # every fold reads the feed more than once (probes, then the rows)
+        why = None
+        feed = feed.persist()
+        try:
+            summary, op, audit = fold(feed, cur)
+        except _NoFold as e:
+            why = str(e)
+        finally:
+            feed.unpersist()
+        if why is not None:
+            return _unavailable(why)
+        cfg["stale"] = False
+        cfg["built_version"] = cur
+        self._mutate(entry, op, **audit)
+        return summary
+
     def _load_codebooks(self):
         import json as _json
 
@@ -3604,12 +3654,8 @@ class Table:
             raise NotSupportedCommand(
                 f"table {self.path} has no materialized vector index"
             )
-        if mode not in ("auto", "incremental", "full"):
-            raise InvalidArgument(f"unknown refresh mode {mode!r}")
         params = vi.get("build_params") or {}
         kind = vi.get("kind", "ivf")
-        built = vi.get("built_version")
-        cur = self._state.base_version
 
         def _full():
             self.build_vector_index(
@@ -3622,47 +3668,17 @@ class Table:
             )
             return {"mode": "full"}
 
-        def _unavailable(why):
-            if mode == "incremental":
-                raise NotSupportedCommand(
-                    f"incremental refresh unavailable for {self.path}: {why}"
-                )
-            return _full()
+        def _fold(feed, cur):
+            import numpy as np
 
-        if mode == "full":
-            return _full()
-        if built is None:
-            return _unavailable("index was built alongside uncommitted DML")
-        # DML always marks the index stale, so a non-stale index is
-        # current even when unrelated commits moved the bucket version
-        if not vi.get("stale"):
-            return {"mode": "noop"}
-        # the feed only covers the COMMITTED span [built, cur]; DML staged
-        # earlier in THIS transaction is invisible to it, so folding the
-        # feed and clearing `stale` would silently drop those rows from
-        # the index. Route to full rebuild (which scans the staged state)
-        if self._committed_state_version() is None:
-            return _unavailable(
-                "staged DML in this transaction (feed only covers "
-                "committed spans)"
+            from .operators.similarity import (
+                assign_probe_centroids,
+                ivfpq_encode,
+                pq_encode,
             )
-        try:
-            feed = self.read_changes(built, cur)
-        except InvalidArgument as e:
-            return _unavailable(f"feed span unreadable ({e})")
 
-        import numpy as np
-
-        from .operators.similarity import (
-            assign_probe_centroids,
-            ivfpq_encode,
-            pq_encode,
-        )
-
-        vcol = vi["column"]
-        cols = [f.name for f in self.arrow_schema]
-        feed = feed.persist()
-        try:
+            vcol = vi["column"]
+            cols = [f.name for f in self.arrow_schema]
             rem = feed.filter(
                 F.col("_change_type").isin("delete", "update_preimage")
             )
@@ -3672,10 +3688,10 @@ class Table:
 
             if kind == "pq":
                 if rem.limit(1).count():
-                    return _unavailable("flat pq cannot fold removals")
+                    raise _NoFold("flat pq cannot fold removals")
                 enc = pq_encode(add, self._load_codebooks(), vec_col=vcol)
                 added = self._write_index_files(enc, kind)
-                new_files = list(vi["files"]) + added
+                vi["files"] = list(vi["files"]) + added
                 touched = []
             else:
                 cents = np.asarray(vi["centroids"], dtype=float)
@@ -3714,23 +3730,20 @@ class Table:
                 # untouched clusters keep their existing files verbatim —
                 # the rewrite set is exactly the removal-touched clusters
                 # plus fresh append files for clusters receiving additions
-                new_files = [
+                vi["files"] = [
                     f for f in vi["files"] if f["centroid_id"] not in set(touched)
                 ] + added
-        finally:
-            feed.unpersist()
+            summary = {
+                "mode": "incremental",
+                "rewritten_clusters": list(touched),
+                "rows_written": sum(f["rows"] for f in added),
+            }
+            audit = {"kind": kind, "clusters": len(touched)}
+            return summary, "refresh_vector_index", audit
 
-        vi["files"] = new_files
-        vi["built_version"] = cur
-        vi["stale"] = False
-        self._mutate(
-            entry, "refresh_vector_index", kind=kind, clusters=len(touched)
+        return self._refresh_derived(
+            entry, vi, mode, "vector_index", _full, _fold
         )
-        return {
-            "mode": "incremental",
-            "rewritten_clusters": list(touched),
-            "rows_written": sum(f["rows"] for f in added),
-        }
 
     def vector_search(
         self,
@@ -4074,67 +4087,30 @@ class Projection:
         the build anchor exists, else full), "incremental" (raise when
         unavailable), "full". Returns a summary dict."""
         t = self.table
-        if mode not in ("auto", "incremental", "full"):
-            raise InvalidArgument(f"unknown refresh mode {mode!r}")
+        entry = TableEntry.from_json(t.entry.to_json())
+        cfg = entry.projections[self.name]
 
         def _full():
             self.rebuild()
             return {"mode": "full"}
 
-        def _unavailable(why):
-            if mode == "incremental":
-                raise NotSupportedCommand(
-                    f"incremental projection refresh unavailable for "
-                    f"{t.path}:{self.name}: {why}"
-                )
-            return _full()
-
-        if mode == "full":
-            return _full()
-        cfg = self._cfg
-        if not cfg.get("stale"):
-            return {"mode": "noop"}
-        built = cfg.get("built_version")
-        cur = t._state.base_version
-        if built is None:
-            return _unavailable("projection was built alongside uncommitted DML")
-        # same staged-DML hazard as refresh_vector_index: the feed spans
-        # committed versions only, so staged rows in this transaction
-        # would be missing from the refreshed projection while `stale`
-        # gets cleared — force the full path, which reads staged state
-        if t._committed_state_version() is None:
-            return _unavailable(
-                "staged DML in this transaction (feed only covers "
-                "committed spans)"
-            )
-        try:
-            feed = t.read_changes(built, cur)
-        except InvalidArgument as e:
-            return _unavailable(f"feed span unreadable ({e})")
-        feed = feed.persist()
-        try:
-            non_insert = feed.filter(
-                F.col("_change_type") != F.lit("insert")
-            ).limit(1).count()
-            if non_insert:
-                return _unavailable("span contains deletes/updates")
-            adds = feed.select(*[F.col(c) for c in self.columns()])
+        def _fold(feed, cur):
+            if feed.filter(F.col("_change_type") != F.lit("insert")).limit(1).count():
+                raise _NoFold("span contains deletes/updates")
             files = t._materialize_projection(
                 self.name, self.sorted_columns(), list(cfg["unsorted"]),
-                source_df=adds,
+                source_df=feed.select(*[F.col(c) for c in self.columns()]),
             )
-        finally:
-            feed.unpersist()
-        entry = TableEntry.from_json(t.entry.to_json())
-        pcfg = entry.projections[self.name]
-        pcfg["files"] = list(pcfg["files"]) + [f.to_json() for f in files]
-        pcfg["stale"] = False
-        pcfg["built_version"] = cur
-        t._mutate(
-            entry, "refresh_projection", projection=self.name,
-            appended=len(files),
+            cfg["files"] = list(cfg["files"]) + [f.to_json() for f in files]
+            return (
+                {"mode": "incremental", "appended_files": len(files)},
+                "refresh_projection",
+                {"projection": self.name, "appended": len(files)},
+            )
+
+        return t._refresh_derived(
+            entry, cfg, mode, f"projection {self.name}", _full, _fold
         )
-        return {"mode": "incremental", "appended_files": len(files)}
 
     def get_stats(self) -> TableStats:
         files = [FileEntry.from_json(fj) for fj in self._cfg["files"]]
@@ -4193,18 +4169,7 @@ class Projection:
         out_schema = pa.schema(
             [_resolve_field(t.arrow_schema, c) for c in names]
         )
-        explicit = num_splits is not None
-        if num_splits is None:
-            num_splits = forced.num_splits or max(
-                1, sum(f.rows for f in files) // forced.rows_per_split
-            )
-        if not explicit:
-            num_splits = min(max(1, num_splits), max(1, len(files)))
-        num_splits = max(1, num_splits)
-        groups: list[list[FileEntry]] = [[] for _ in range(num_splits)]
-        for i, fe in enumerate(files):
-            groups[i % num_splits].append(fe)
-        return groups, names, forced, out_schema
+        return _split_groups(files, forced, num_splits), names, forced, out_schema
 
     def _lazy_split_reader(
         self,
@@ -4304,6 +4269,23 @@ class Projection:
 
 # ---------------------------------------------------------------------------
 # helpers
+
+
+def _split_groups(
+    files: list[FileEntry], config: QueryConfig, num_splits: int | None
+) -> list[list[FileEntry]]:
+    """Round-robin ``files`` into split groups. An explicit ``num_splits``
+    gives exactly that many groups (trailing ones possibly empty); a
+    derived count (``config.num_splits``, else one split per
+    ``config.rows_per_split`` rows) is capped at the file count."""
+    if num_splits is None:
+        num_splits = min(
+            config.num_splits
+            or sum(f.rows for f in files) // config.rows_per_split,
+            len(files),
+        )
+    num_splits = max(1, num_splits)
+    return [files[i::num_splits] for i in range(num_splits)]
 
 
 def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
