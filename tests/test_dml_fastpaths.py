@@ -20,6 +20,9 @@
 - every deletion-vector statement commits through one path, so a
   statement matching no row is a true no-op (no history entry, no stale
   projection, no orphan file);
+- a statement matching at most DV_LITERAL_MAX_ROWS rows writes its DV
+  sidecars and replacement rows from one collect on the driver (one
+  Spark job), and leaves the same table as the Spark writes;
 - ``_rewrite_files`` stays linear in the table's file count.
 """
 
@@ -329,7 +332,17 @@ _NO_MATCH = {
 
 @pytest.mark.parametrize("stmt", sorted(_NO_MATCH))
 def test_no_match_dml_is_a_true_noop(session, stmt):
-    name = _mk(session, f"s_noop_{stmt}", n_files=1, rows_per_file=10)
+    _assert_no_match_is_noop(session, stmt, f"s_noop_{stmt}")
+
+
+@pytest.mark.parametrize("stmt", sorted(_NO_MATCH))
+def test_no_match_dml_is_a_true_noop_on_spark_writes(session, monkeypatch, stmt):
+    monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+    _assert_no_match_is_noop(session, stmt, f"s_noop_spark_{stmt}")
+
+
+def _assert_no_match_is_noop(session, stmt, name):
+    _mk(session, name, n_files=1, rows_per_file=10)
     with session.transaction() as tx:
         t = tx.bucket("b").schema(name).table("t")
         # 1 of 10 rows: stays a DV, so $row_id 5 remains inside the range
@@ -347,6 +360,137 @@ def test_no_match_dml_is_a_true_noop(session, stmt):
         assert not t.projection("p").stale
         assert t.count_rows() == 9
         assert sorted(os.listdir(data_dir)) == files_before  # no orphan sidecar dir
+
+
+# keys each statement below touches, spread over the case's files
+_DV_STMT_KEYS = {
+    "multi_file": [5, 160, 260],
+    "imported": [2, 20, 40],
+    "replacements": [1, 5, 50],
+    "partitioned": [6, 9, 121],
+}
+
+
+def _ids_of(t, keys):
+    return t.select(
+        columns=["k"], predicate=t["k"].isin(keys), internal_row_id=True
+    ).read_all()["$row_id"]
+
+
+_DV_STMTS = {
+    "update": lambda t, keys: t.update(
+        pa.table({"$row_id": _ids_of(t, keys), "v": pa.array([-9.0] * len(keys))})
+    ),
+    "update_where": lambda t, keys: t.update_where(t["k"].isin(keys), {"v": -9.0}),
+    "delete": lambda t, keys: t.delete(pa.table({"$row_id": _ids_of(t, keys)})),
+    "delete_where": lambda t, keys: t.delete_where(t["k"].isin(keys)),
+}
+
+
+def _route_table(spark, root, case, stmt):
+    """A fresh warehouse under ``root`` holding ``case``'s table after
+    ``stmt``, each statement committed on the DV write route in effect."""
+    session = vastdb.connect(str(root), spark=spark)
+    session.create_bucket("b")
+    name, expect = _DV_CASES[case](session, root)
+    with session.transaction() as tx:
+        _DV_STMTS[stmt](tx.bucket("b").schema(name).table("t"), _DV_STMT_KEYS[case])
+    return session, name, expect
+
+
+def _route_state(session, name):
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        rows, count, _plan = _dv_state(t)
+        files = t.entry.files
+        return {
+            "rows": rows,
+            "count": (count, t.count_rows()),
+            "dv_rows": sorted((fe.row_id_range(), fe.dv_rows) for fe in files if fe.dv_rows),
+            "dv_files": sum(len(fe.dv_paths) for fe in files),
+            "file_rows": sum(fe.rows for fe in files),
+            "data_files": len(files),
+            "history": [(r.op, r.details) for r in t.history().collect()],
+        }
+
+
+@pytest.mark.parametrize("case", sorted(_DV_CASES))
+@pytest.mark.parametrize("stmt", sorted(_DV_STMTS))
+def test_small_dv_statement_route_matches_spark_writes(
+    spark, tmp_path, monkeypatch, stmt, case
+):
+    """A statement masking at most DV_LITERAL_MAX_ROWS rows writes its
+    sidecars and replacement rows from one collect on the driver; the
+    bound at 0 forces every statement onto the Spark writes. Both give
+    the same table."""
+    session, name, expect = _route_table(spark, tmp_path / "driver", case, stmt)
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+        session_s, name_s, _ = _route_table(spark, tmp_path / "spark", case, stmt)
+    driver, via_spark = _route_state(session, name), _route_state(session_s, name_s)
+    assert driver.pop("rows").equals(via_spark.pop("rows"))
+    # Spark writes one replacement file per task holding matched rows, the
+    # driver one per statement
+    data_files, data_files_s = driver.pop("data_files"), via_spark.pop("data_files")
+    assert data_files == data_files_s if stmt.startswith("delete") else data_files <= data_files_s
+    assert driver == via_spark
+    # driver-written sidecars read the same on the anti-join read route,
+    # so their owner_fk is the scan's
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        rows, _count, _plan = _dv_state(t)
+        with monkeypatch.context() as m:
+            m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+            rows_j, _count_j, plan_j = _dv_state(t)
+    assert "LeftAnti" in plan_j
+    assert rows.equals(rows_j)
+    keys = _DV_STMT_KEYS[case]
+    if stmt.startswith("delete"):
+        assert rows["k"].to_pylist() == [k for k in expect["k"] if k not in keys]
+    else:
+        assert rows["k"].to_pylist() == expect["k"]
+        v = dict(zip(rows["k"].to_pylist(), rows["v"].to_pylist()))
+        assert [v[k] for k in keys] == [-9.0] * len(keys)
+
+
+def test_small_dv_statements_run_one_job(session, monkeypatch):
+    """Below DV_LITERAL_MAX_ROWS each statement is one Spark job: the
+    collect of its matched rows. With the bound below the match count the
+    Spark writes run too, to the same rows."""
+
+    def run(name):
+        _mk(session, name)
+        jobs = {}
+        with session.transaction() as tx:
+            t = tx.bucket("b").schema(name).table("t")
+            jobs["update_where"] = _jobs(
+                t.spark, lambda: t.update_where(t["k"].isin([5, 105, 205]), {"v": -1.0})
+            )
+            jobs["delete_where"] = _jobs(
+                t.spark, lambda: t.delete_where(t["k"].isin([6, 106, 206]))
+            )
+            ids = _ids_of(t, [7, 107, 207])  # known before the statement
+            jobs["update"] = _jobs(
+                t.spark, lambda: t.update(pa.table({"$row_id": ids, "v": [-2.0] * 3}))
+            )
+            # outside the replacement files' row-id ranges: a delete whose
+            # ids may fill a small file rewrites it (delete's heavy route)
+            ids = _ids_of(t, [1, 2, 299])
+            jobs["delete"] = _jobs(t.spark, lambda: t.delete(pa.table({"$row_id": ids})))
+        with session.transaction() as tx:
+            rows, _count, _plan = _dv_state(tx.bucket("b").schema(name).table("t"))
+        return jobs, rows
+
+    jobs, rows = run("s_jobs_driver")
+    assert jobs == dict.fromkeys(jobs, 1)
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 2)
+        jobs_s, rows_s = run("s_jobs_spark")
+    assert all(n > 1 for n in jobs_s.values()), jobs_s
+    assert rows.select(["k", "v"]).equals(rows_s.select(["k", "v"]))
+    v = dict(zip(rows["k"].to_pylist(), rows["v"].to_pylist()))
+    assert [v[k] for k in (5, 105, 205, 7, 107, 207)] == [-1.0] * 3 + [-2.0] * 3
+    assert not {6, 106, 206, 1, 2, 299} & set(v)
 
 
 class _NoRows:

@@ -273,7 +273,24 @@ _ROLLBACK_OPS = {
         "mv", ["s"], {"n": "count"}
     ),
     "build_vector_index": lambda t: t.build_vector_index(num_centroids=2, seed=1),
+    # DV statements under DV_LITERAL_MAX_ROWS write their files from the
+    # driver; the bound at 0 keeps one on the Spark writes
+    "update_rowids": lambda t: t.update(
+        pa.table({"$row_id": pa.array([1, 9], pa.uint64()), "b": pa.array([9.5, 9.5], pa.float32())})
+    ),
+    "delete_rowids": lambda t: t.delete(pa.table({"$row_id": pa.array([2, 10], pa.uint64())})),
+    "update_where_spark_writes": lambda t: _on_spark_writes(
+        lambda: t.update_where(D.a == 3, {"b": 9.5})
+    ),
 }
+
+
+def _on_spark_writes(stmt):
+    from vastdb_sdk_spark import table as table_mod
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+        stmt()
 
 
 @pytest.mark.parametrize("op", list(_ROLLBACK_OPS))
@@ -324,6 +341,23 @@ def test_vacuum_removes_emptied_staging_dirs(clean_schema):
     with clean_schema.transaction() as tx:
         got = tx.bucket("bkt").schema("s").table("t").select().read_all().sort_by("a")
         assert got.column("b").to_pylist() == [9.5, 9.5, 1.5, 1.5, 2.5, 2.5]
+
+
+def test_vacuum_keeps_files_of_open_transactions(clean_schema):
+    """Files a transaction staged but has not committed yet are not
+    orphans: vacuum keeps them, so the later commit finds them."""
+    _make(clean_schema, data=None)
+    tx = clean_schema.transaction()
+    t = tx.bucket("bkt").schema("s").table("t")
+    t.insert_df(t.spark.createDataFrame([(1, 0.5, "x"), (2, 1.5, "y")], "a long, b float, s string"))
+    assert clean_schema.vacuum("bkt") == []
+    tx.commit()
+    with clean_schema.transaction() as tx:
+        got = tx.bucket("bkt").schema("s").table("t").select().read_all().sort_by("a")
+        assert got.column("a").to_pylist() == [1, 2]
+    # committed and referenced: still kept; nothing open any more
+    assert clean_schema.vacuum("bkt") == []
+    assert not list(clean_schema._open_transactions)
 
 
 def test_partitioned_insert_df_row_ids_follow_walk_order(clean_schema):

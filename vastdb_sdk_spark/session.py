@@ -10,6 +10,8 @@ entry point for work, exactly like the reference (README.md:70-90).
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +67,11 @@ class Session:
             raise ValueError(f"page_size must be positive, got {page_size}")
         self.page_size = page_size
         self.spark = spark or build_spark(self.config)
+        # transactions of this session not yet committed or rolled back:
+        # vacuum keeps the files they staged. The lock guards vacuum's
+        # iteration against transactions opening or closing in other threads
+        self._open_transactions = weakref.WeakSet()
+        self._open_lock = threading.Lock()
 
     def __repr__(self) -> str:
         return f"Session(warehouse={self.warehouse!r})"
@@ -85,7 +92,15 @@ class Session:
         """Start a transaction context (reference: vastdb/session.py:66-70)."""
         from .transaction import Transaction
 
-        return Transaction(self)
+        tx = Transaction(self)
+        with self._open_lock:
+            self._open_transactions.add(tx)
+        return tx
+
+    def _forget_transaction(self, tx) -> None:
+        """Called by ``tx`` once it is committed or rolled back."""
+        with self._open_lock:
+            self._open_transactions.discard(tx)
 
     def compact_audit_log(
         self, bucket_name: str, keep_recent: int = 64
@@ -194,7 +209,10 @@ class Session:
         Returns the deleted paths. Only files inside this bucket's data
         directory are candidates: zero-copy imports from external paths are
         never touched. A deleted file's ``.crc`` checksum goes with it, and
-        a staging dir left without any parquet file is removed.
+        a staging dir left without any parquet file is removed. Files and
+        staging dirs staged by this session's open transactions are kept,
+        so their commit finds them; transactions of other sessions or
+        processes are not seen.
 
         ``retain_versions=N`` additionally prunes manifest version files
         older than the newest N (never the current version, never a
@@ -225,6 +243,15 @@ class Session:
             for te in m.tables.values()
             for p in te.referenced_paths()
         }
+        with self._open_lock:
+            open_txs = list(self._open_transactions)
+        staged = {
+            os.path.abspath(p)
+            for tx in open_txs
+            if (st := tx._buckets.get(bucket_name)) is not None
+            for p in st.staged_files
+        }
+        referenced |= staged
 
         data_root = os.path.join(store.bucket_path, "data")
         deleted = []
@@ -247,7 +274,7 @@ class Session:
         # _SUCCESS and checksums left behind. A dir with _temporary is a
         # write still in flight. The trailing "" makes glob match dirs only.
         for staging in glob.glob(os.path.join(glob.escape(data_root), "*", "*", "*", "")):
-            if not any(
+            if os.path.abspath(staging) not in staged and not any(
                 "_temporary" in dirs or any(f.endswith(".parquet") for f in files)
                 for _dp, dirs, files in os.walk(staging)
             ):

@@ -42,7 +42,7 @@ import math
 import os
 import time
 from functools import reduce
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -115,6 +115,24 @@ RID_LITERAL_MAP_MAX_FILES = 64
 # anti-join pays a broadcast job per read plus a per-row md5 and hash
 # probe, so on full scans it loses at every size measured. Keyed reads,
 # the common DML shape, cross near 1k ids.
+#
+# The same bound routes DV writes (Table._apply_dv_dml): a statement that
+# matches at most this many rows collects them in one job and writes its
+# sidecars and replacement rows with pyarrow on the driver; a larger one
+# pays that probe, then the Spark writes. Measured on 4 CPUs, local[4], a
+# 1M-row 4-file table, median of 14 statements each rolled back, routes
+# alternating (ms; "keyed": one contiguous key range, "spread": k % m = r
+# over every file; the Spark route forced with the bound at 0 for both
+# sizes, the driver route with the bound raised to 10k):
+#
+#   matched  statement      driver keyed / spread   Spark keyed / spread
+#     1 000  update_where            288 / 401             567 / 783
+#     1 000  delete_where            246 / 363             431 / 522
+#    10 000  update_where            293 / 391             577 / 715
+#    10 000  delete_where            273 / 325             416 / 534
+#
+# The driver still wins at 10k rows: the bound is the id count the driver
+# already holds at plan time, not the write crossover.
 DV_LITERAL_MAX_ROWS = 1000
 
 
@@ -1040,32 +1058,22 @@ class Table:
         if unknown:
             raise InvalidArgument(f"insert has unknown columns: {unknown}")
 
-        storage = self._physical_storage_schema()
-        pmap = self._physical_map()
-        renamed = rows.rename_columns(
-            [pmap.get(c, c) for c in rows.schema.names]
-        ) if pmap else rows
-
         if entry.use_external_row_ids and EXTERNAL_ROW_ID in rows.schema.names:
-            ids = rows.column(EXTERNAL_ROW_ID).cast(pa.int64())
-            data = renamed.drop_columns([EXTERNAL_ROW_ID])
-            tbl = cast_to_storage(data, storage)
-            tbl = tbl.append_column(
-                pa.field(PHYSICAL_ROW_ID, pa.int64(), False), ids
+            ids = rows.column(EXTERNAL_ROW_ID)
+            fe = self._write_rows_with_ids(
+                entry, rows.drop_columns([EXTERNAL_ROW_ID]), ids
             )
-            id_list = ids.to_pylist()
-            lo, hi = min(id_list), max(id_list)
-            path = self._write_parquet(tbl)
-            self._register_file(
-                entry, path, n, min_row_id=lo, max_row_id=hi,
-                col_stats=self._arrow_col_stats(rows, self._stat_columns(entry)),
-            )
-            entry.next_row_id = max(entry.next_row_id, hi + 1)
-            out_ids = ids.cast(_ROW_ID_ARROW)
+            entry.next_row_id = max(entry.next_row_id, fe.max_row_id + 1)
+            out_ids = ids.cast(pa.int64()).cast(_ROW_ID_ARROW)
         else:
+            pmap = self._physical_map()
             base = entry.next_row_id
-            tbl = cast_to_storage(renamed, storage)
+            tbl = cast_to_storage(
+                rows.rename_columns([pmap.get(c, c) for c in rows.schema.names]),
+                self._physical_storage_schema(),
+            )
             path = self._write_parquet(tbl)
+            self._state.staged_files.append(path)
             self._register_file(
                 entry, path, n, row_id_base=base,
                 col_stats=self._arrow_col_stats(rows, self._stat_columns(entry)),
@@ -1074,7 +1082,6 @@ class Table:
             out_ids = pa.chunked_array([pa.array(range(base, base + n), pa.uint64())])
 
         self._mark_unsorted(entry)
-        self._state.staged_files.append(path)
         self._mutate(entry, "insert", rows=n)
         return out_ids
 
@@ -1102,6 +1109,30 @@ class Table:
             )
             self.update(upd)
         return row_ids
+
+    def _write_rows_with_ids(
+        self, entry: TableEntry, rows: pa.Table, ids: pa.ChunkedArray
+    ) -> FileEntry:
+        """Stage ``rows`` (logical columns) as one driver-written file in
+        the physical storage schema with ``ids`` as its physical row id,
+        registered with its row-id range and column stats: insert with
+        external row ids, and the replacement rows of a DV statement on
+        the driver route (the twin of _rewrite_files)."""
+        import pyarrow.compute as pc
+
+        pmap = self._physical_map()
+        ids = ids.cast(pa.int64())
+        tbl = cast_to_storage(
+            rows.rename_columns([pmap.get(c, c) for c in rows.column_names]),
+            self._physical_storage_schema(),
+        ).append_column(pa.field(PHYSICAL_ROW_ID, pa.int64(), False), ids)
+        path = self._write_parquet(tbl)
+        self._state.staged_files.append(path)
+        lo_hi = pc.min_max(ids).as_py()
+        return self._register_file(
+            entry, path, rows.num_rows, min_row_id=lo_hi["min"], max_row_id=lo_hi["max"],
+            col_stats=self._arrow_col_stats(rows, self._stat_columns(entry)),
+        )
 
     def _write_parquet(self, tbl: pa.Table) -> str:
         path = self._state.store.new_data_file(self.schema.name, self.name)
@@ -1225,7 +1256,14 @@ class Table:
     def update(
         self, rows: pa.RecordBatch | pa.Table, columns: list[str] | None = None
     ) -> None:
-        """Update rows keyed by ``$row_id`` (reference: vastdb/table.py:779-817)."""
+        """Update rows keyed by ``$row_id`` (reference: vastdb/table.py:779-817).
+
+        Up to DV_LITERAL_MAX_ROWS ids, one literal ``$row_id IN (...)``
+        filter selects the rows, one collect brings them to the driver,
+        the new values are applied there in Arrow and the DV sidecars and
+        replacement file are written with pyarrow: one Spark job. More ids
+        are staged as a parquet file and broadcast-joined, and both writes
+        run on executors."""
         if isinstance(rows, pa.RecordBatch):
             rows = pa.Table.from_batches([rows])
         if INTERNAL_ROW_ID not in rows.schema.names:
@@ -1244,6 +1282,16 @@ class Table:
         base_df = self.df(
             internal_row_id=True, files=affected, with_file_path=True
         )
+        if len(ids) <= DV_LITERAL_MAX_ROWS:
+            # few ids: a literal filter bounds the matched rows, which are
+            # collected once; the new values are applied to them in Arrow
+            self._apply_dv_dml(
+                entry, "update", affected, base_df.filter(_rid_in_sql(ids)),
+                rewrite_masked=True, bounded=True,
+                edit=lambda got: self._with_new_values(got, rows, upd_cols),
+                rows=len(ids),
+            )
+            return
         upd_df, upd_path = self._rows_to_df(rows)
         joined = base_df.join(
             F.broadcast(upd_df),
@@ -1265,24 +1313,45 @@ class Table:
                 out_cols.append(base_df[f.name])
         out_cols.append(base_df[INTERNAL_ROW_ID])
         out_cols.append(F.col("__source_file"))
-        matched_df = joined.select(*out_cols).persist()
         try:
-            # fully distributed, like update_where: replacement rows and DV
-            # sidecars are both written from executors — matched row ids
-            # never land on the driver (a 100x-scale batch through this
-            # path used to materialize every id in driver memory)
+            # more than DV_LITERAL_MAX_ROWS matches: replacement rows and
+            # DV sidecars are both written from executors, like
+            # update_where — matched row ids never land on the driver (a
+            # 100x-scale batch through this path used to materialize every
+            # id in driver memory)
             self._apply_dv_dml(
-                entry, "update", affected,
-                matched_df.select(INTERNAL_ROW_ID, "__source_file"),
-                matched_df.drop("__source_file"),
-                rows=len(ids),
+                entry, "update", affected, joined.select(*out_cols),
+                rewrite_masked=True, rows=len(ids),
             )
         finally:
-            matched_df.unpersist()
             try:
                 os.remove(upd_path)
             except OSError:
                 pass
+
+    def _with_new_values(
+        self, got: pa.Table, rows: pa.Table, upd_cols: list[str]
+    ) -> pa.Table:
+        """update()'s join on the driver: each collected row of ``got``
+        paired with the client ``rows`` of the same ``$row_id`` (one output
+        row per pair, as the broadcast join gives), ``upd_cols`` taken from
+        ``rows``."""
+        where: dict[int, list[int]] = {}
+        for j, rid in enumerate(rows.column(INTERNAL_ROW_ID).to_pylist()):
+            where.setdefault(rid, []).append(j)
+        left, right = [], []
+        for i, rid in enumerate(got.column(INTERNAL_ROW_ID).to_pylist()):
+            js = where.get(rid, [])
+            left += [i] * len(js)
+            right += js
+        out = got.take(left)
+        for f in self.arrow_schema:
+            if f.name in upd_cols:
+                out = out.set_column(
+                    out.schema.get_field_index(f.name), f.name,
+                    rows.column(f.name).take(right),
+                )
+        return out
 
     # deletion-vector plumbing --------------------------------------------
     DV_REWRITE_FRACTION = 0.3  # fold DVs into a rewrite past this fraction
@@ -1318,6 +1387,31 @@ class Table:
             fe.dv_rows += md.num_rows
             total += md.num_rows
         return total
+
+    def _write_dvs_collected(self, affected: list[FileEntry], got: pa.Table) -> int:
+        """The driver twin of _write_dvs_distributed for collected rows
+        ``got`` (``$row_id``, ``__source_file``): one pyarrow-written
+        sidecar per owning file, with the same schema and the same
+        ``owner_fk``, md5 of the scan's file path. Returns ``got``'s row
+        count."""
+        import hashlib
+
+        import pyarrow.compute as pc
+
+        by_key = {self._dv_owner_fk(fe): fe for fe in affected}
+        src = got.column("__source_file")
+        for source in sorted(pc.unique(src).to_pylist()):
+            ids = got.filter(pc.equal(src, source)).column(INTERNAL_ROW_ID)
+            fk = hashlib.md5(source.encode()).hexdigest()
+            path = self._write_parquet(pa.table({
+                "deleted_row_id": ids.cast(pa.int64()),
+                "owner_fk": pa.array([fk] * len(ids), pa.string()),
+            }))
+            self._state.staged_files.append(path)
+            fe = by_key[fk]
+            fe.dv_paths.append(path)
+            fe.dv_rows += len(ids)
+        return got.num_rows
 
     def _fold_heavy_dvs(self, entry: TableEntry, candidates: list[FileEntry]) -> None:
         """Rewrite files whose deletion vectors exceed DV_REWRITE_FRACTION
@@ -1365,28 +1459,72 @@ class Table:
         *,
         replaces: list[FileEntry] = (),
         changed: bool = False,
+        rewrite_masked: bool = False,
+        bounded: bool = False,
+        edit: Callable[[pa.Table], pa.Table] | None = None,
         **audit,
     ) -> int:
         """The one commit order of a deletion-vector DML statement:
 
         1. DV-mask the ``masked`` rows (``$row_id``, ``__source_file``) of
-           ``affected``; the written footers' row count is the match
-           detector (no pre-count job);
+           ``affected``, on one of two routes:
+
+           - driver: one collect, ``limit(DV_LITERAL_MAX_ROWS + 1)``, that
+             returns at most DV_LITERAL_MAX_ROWS rows is written with
+             pyarrow, one sidecar per owning file — the statement's only
+             Spark job (timings of both routes at DV_LITERAL_MAX_ROWS);
+           - Spark: otherwise the probed frame, persisted so the probe's
+             work is reused, is written from executors; matched ids never
+             reach the driver.
+
+           The masked-row count is the match detector (no pre-count job);
         2. nothing masked, nothing in ``replaces`` and nothing ``changed``
            earlier in the statement (merge's inserts): a TRUE no-op — no
            manifest change or audit event, nothing goes stale, and a
            concurrent writer does not conflict;
-        3. write ``replacement``: new versions of the masked rows, or the
-           survivors of ``replaces`` (delete's heavy route);
+        3. write the replacement rows, on the route of step 1: with
+           ``rewrite_masked`` the ``masked`` frame also carries the new
+           column values and its rows are the new versions (on the driver
+           route after ``edit``); ``replacement`` is a Spark-written frame:
+           merge's new versions, or the survivors of ``replaces``
+           (delete's heavy route);
         4. fold files whose DVs passed DV_REWRITE_FRACTION;
         5. mark sort state, projections and indexes stale;
         6. stage the commit; a callable ``audit`` value is called with the
-           masked-row count, which is also the return value."""
-        n = 0 if masked is None else self._write_dvs_distributed(affected, masked)
-        if not (n or replaces or changed):
-            return 0
-        if replacement is not None:
-            self._rewrite_files(entry, list(replaces), replacement, op)
+           masked-row count, which is also the return value.
+
+        ``bounded``: a literal id list bounds ``masked`` to at most
+        DV_LITERAL_MAX_ROWS rows, so it is collected whole with no limit
+        and no cache (update and delete by few ids); ``edit`` needs it."""
+        cached = masked is not None and not bounded
+        if masked is not None and not rewrite_masked:
+            masked = masked.select(INTERNAL_ROW_ID, "__source_file")
+        if cached:
+            masked = masked.persist()
+        try:
+            got = None  # the collected masked rows on the driver route
+            if bounded and masked is not None:
+                got = masked.toArrow()
+            elif cached:
+                got = masked.limit(DV_LITERAL_MAX_ROWS + 1).toArrow()
+                if got.num_rows > DV_LITERAL_MAX_ROWS:
+                    got = None
+            if got is not None:
+                n = self._write_dvs_collected(affected, got)
+            else:
+                n = 0 if masked is None else self._write_dvs_distributed(affected, masked)
+            if not (n or replaces or changed):
+                return 0
+            if rewrite_masked and got is not None:
+                new = edit(got) if edit else got
+                self._write_rows_with_ids(entry, new, new.column(INTERNAL_ROW_ID))
+            elif rewrite_masked:
+                replacement = masked.drop("__source_file")
+            if replacement is not None:
+                self._rewrite_files(entry, list(replaces), replacement, op)
+        finally:
+            if cached:
+                masked.unpersist()
         self._fold_heavy_dvs(entry, affected)
         self._mark_unsorted(entry)
         self._mutate(
@@ -1437,49 +1575,58 @@ class Table:
                 heavy.append(fe)
             else:
                 light.append(fe)
-        # one distributed job: which requested ids are live, and in which
-        # light file? (Catalyst prunes the scan to metadata columns); DV
-        # sidecars are written from executors like delete_where — matched
-        # ids never collect on the driver. The range bound is an
-        # over-count, so no light file can cross the fraction — the fold
-        # only ever re-checks light files already carrying earlier DVs
-        del_df, del_path = self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+        # which requested ids are live, and in which light file? (Catalyst
+        # prunes the scan to metadata columns). Up to DV_LITERAL_MAX_ROWS
+        # ids a literal filter selects them and the DV route collects the
+        # matches once; more ids go through a broadcast join and their
+        # sidecars are written from executors like delete_where. The range
+        # bound is an over-count, so no light file can cross the fraction
+        # — the fold only ever re-checks light files already carrying
+        # earlier DVs
+        small = len(ids) <= DV_LITERAL_MAX_ROWS
+        del_df = del_path = None
+        if not small:
+            del_df, del_path = self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+
+        def pick(df, how):
+            """``left_semi``: the rows of ``df`` named by ``ids``;
+            ``left_anti``: the others."""
+            if small:
+                cond = _rid_in_sql(ids)
+                return df.filter(cond if how == "left_semi" else f"NOT ({cond})")
+            return df.join(
+                F.broadcast(del_df), df[INTERNAL_ROW_ID] == del_df["__update_row_id"], how
+            )
+
         try:
             matched = keep = None
             if light:
-                base = self.df(
+                matched = pick(self.df(
                     internal_row_id=True, files=light, with_file_path=True
-                ).select(INTERNAL_ROW_ID, "__source_file")
-                matched = base.join(
-                    F.broadcast(del_df),
-                    base[INTERNAL_ROW_ID] == del_df["__update_row_id"],
-                    "left_semi",
-                )
+                ).select(INTERNAL_ROW_ID, "__source_file"), "left_semi")
             if heavy:
-                keep = self.df(internal_row_id=True, files=heavy)
-                keep = keep.join(
-                    F.broadcast(del_df),
-                    keep[INTERNAL_ROW_ID] == del_df["__update_row_id"],
-                    "left_anti",
-                )
+                keep = pick(self.df(internal_row_id=True, files=heavy), "left_anti")
             self._apply_dv_dml(
-                entry, "delete", light, matched, keep, replaces=heavy, rows=len(ids)
+                entry, "delete", light, matched, keep, replaces=heavy,
+                bounded=small, rows=len(ids),
             )
         finally:
-            try:
-                os.remove(del_path)
-            except OSError:
-                pass
+            if del_path:
+                try:
+                    os.remove(del_path)
+                except OSError:
+                    pass
 
     def delete_where(self, predicate: Any) -> None:
-        """Predicate DELETE (engine extension): fully distributed — no
-        row-id collection on the driver. Manifest pruning narrows the
-        affected files first; matching row ids are written straight to
-        per-file deletion-vector sidecars (hive-partitioned by source file),
-        so no data file is rewritten and only the predicate columns are
-        read. Files whose DV grows past DV_REWRITE_FRACTION are folded. The
-        reference only offers row-id DML (vastdb/table.py:819-843); this is
-        the 100 TB-shaped equivalent of ``DELETE FROM t WHERE ...``."""
+        """Predicate DELETE (engine extension). Manifest pruning narrows the
+        affected files first; matching row ids are written to per-file
+        deletion-vector sidecars — from one driver collect up to
+        DV_LITERAL_MAX_ROWS matches, straight from executors
+        (hive-partitioned by source file) beyond — so no data file is
+        rewritten and only the predicate columns are read. Files whose DV
+        grows past DV_REWRITE_FRACTION are folded. The reference only
+        offers row-id DML (vastdb/table.py:819-843); this is the 100
+        TB-shaped equivalent of ``DELETE FROM t WHERE ...``."""
         pred = to_spark_predicate(predicate, self.arrow_schema)
         if pred is None:
             raise InvalidArgument("delete_where requires a predicate")
@@ -1498,9 +1645,10 @@ class Table:
         is the lowest ``$row_id``, so repeated runs are idempotent and the
         survivor set is deterministic. Fully distributed: losers are found
         with one window over the key columns (a single shuffle) and written
-        straight to per-file deletion-vector sidecars — no data file is
-        rewritten, no ids cross the driver. The batch-tier twin over plain
-        DataFrames is operators/dedup.dedup_exact; this is the same
+        to per-file deletion-vector sidecars — no data file is rewritten,
+        and beyond DV_LITERAL_MAX_ROWS losers no ids cross the driver. The
+        batch-tier twin over plain DataFrames is
+        operators/dedup.dedup_exact; this is the same
         semantics applied to a managed table in place. Near-dup cleanup
         composes: compute pairs with the operators tier, map losers to a
         predicate or rowid set, then delete."""
@@ -1523,9 +1671,9 @@ class Table:
         Fully distributed, same machinery as :meth:`dedup_rows`: one
         rank-filtered window per group (compiles to WindowGroupLimit —
         map tasks trim hot groups to ~n rows before the shuffle) finds
-        the losers, which are written straight to per-file
-        deletion-vector sidecars; no data file is rewritten and no row
-        ids cross the driver."""
+        the losers, which are written to per-file deletion-vector
+        sidecars; no data file is rewritten and beyond
+        DV_LITERAL_MAX_ROWS losers no row ids cross the driver."""
         if n < 1:
             raise InvalidArgument(f"n={n} must be >= 1")
         if not group_columns:
@@ -1540,9 +1688,9 @@ class Table:
         self, op: str, keys: list[str], order: list[Column], keep: int
     ) -> None:
         """DV-mask every row after the first ``keep`` of its ``keys`` group
-        in ``order`` (dedup_rows, cap_rows_per_group). ONE job: the DV
-        write's footer count detects the no-op — an isEmpty() pre-check
-        would run the window shuffle a second time."""
+        in ``order`` (dedup_rows, cap_rows_per_group). The window shuffle
+        runs once: the DV route's masked-row count detects the no-op — an
+        isEmpty() pre-check would run it a second time."""
         bad = [c for c in keys if c not in self.arrow_schema.names]
         if bad:
             raise InvalidArgument(f"unknown columns: {bad}")
@@ -1585,9 +1733,10 @@ class Table:
         candidate-pair generator + connected components runs over the
         table keyed by ``$row_id``, and every non-representative cluster
         member (keeper = lowest ``$row_id``, transitively: a~b~c keeps
-        only a) is DV-masked via the distributed writer. No id
-        collection, no file rewrite below the fold threshold; idempotent
-        (survivors have no qualifying pairs left). Composition of
+        only a) is DV-masked through the DV route (ids collect on the
+        driver only up to DV_LITERAL_MAX_ROWS); no file rewrite below the
+        fold threshold; idempotent (survivors have no qualifying pairs
+        left). Composition of
         operators/dedup.py + operators/similarity.py with the engine's
         DML tier — the exact-dup fast path is :meth:`dedup_rows`.
 
@@ -2007,8 +2156,10 @@ class Table:
     def update_where(self, predicate: Any, assignments: dict) -> None:
         """Predicate UPDATE (engine extension): ``assignments`` maps column
         names to Spark Columns, engine expressions, or literals, applied to
-        rows matching ``predicate``. Distributed end-to-end; only files that
-        can contain matches are rewritten."""
+        rows matching ``predicate``. Only files that can contain matches are
+        scanned. At most DV_LITERAL_MAX_ROWS matched rows are collected once
+        and their DV sidecars and replacement file written on the driver
+        (one Spark job); more matches are written from executors."""
         from .expr import Expr
 
         pred = to_spark_predicate(predicate, self.arrow_schema)
@@ -2042,16 +2193,10 @@ class Table:
                 out_cols.append(F.col(f.name))
         out_cols.append(F.col(INTERNAL_ROW_ID))
         out_cols.append(F.col("__source_file"))
-        matched_df = base_df.select(*out_cols).persist()
-        try:
-            self._apply_dv_dml(
-                entry, "update_where", affected,
-                matched_df.select(INTERNAL_ROW_ID, "__source_file"),
-                matched_df.drop("__source_file"),
-                columns=sorted(assignments),
-            )
-        finally:
-            matched_df.unpersist()
+        self._apply_dv_dml(
+            entry, "update_where", affected, base_df.select(*out_cols),
+            rewrite_masked=True, columns=sorted(assignments),
+        )
 
     def merge(
         self,
@@ -2279,9 +2424,8 @@ class Table:
                 replace_df = reduce(DataFrame.unionByName, upd_parts).persist()
                 counts["updated"] = replace_df.count()
             if del_parts:
-                # not persisted and not pre-counted: the delete branch is
-                # consumed exactly once (the DV write below), whose footer
-                # count yields counts["deleted"] for free — the old
+                # not pre-counted: the DV route below counts the masked
+                # rows, which yields counts["deleted"] for free — the old
                 # count() here was one full extra job per delete-merge
                 del_df = reduce(DataFrame.unionByName, del_parts)
 
@@ -4286,6 +4430,12 @@ def _split_groups(
         )
     num_splits = max(1, num_splits)
     return [files[i::num_splits] for i in range(num_splits)]
+
+
+def _rid_in_sql(ids: list[int]) -> str:
+    """``$row_id IN (...)`` over a client id list of at most
+    DV_LITERAL_MAX_ROWS ids, as SQL text."""
+    return f"{quote_ident(INTERNAL_ROW_ID)} IN ({', '.join(map(sql_literal, sorted(set(ids))))})"
 
 
 def _dv_keep_sql(fes: list[FileEntry]) -> str | None:

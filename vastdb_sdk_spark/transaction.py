@@ -174,11 +174,14 @@ class Transaction:
     def commit(self) -> None:
         self._check_open()
         self._closed = True
-        for name, st in self._buckets.items():
-            if st.changes.is_empty():
-                continue
-            new_manifest = st.store.commit(st.manifest_base(), st.changes)
-            self._write_audit(st, new_manifest.version)
+        try:
+            for name, st in self._buckets.items():
+                if st.changes.is_empty():
+                    continue
+                new_manifest = st.store.commit(st.manifest_base(), st.changes)
+                self._write_audit(st, new_manifest.version)
+        finally:
+            self._session._forget_transaction(self)
 
     def rollback(self) -> None:
         if self._closed:
@@ -195,6 +198,7 @@ class Transaction:
                         os.unlink(path)
                 except OSError:
                     pass
+        self._session._forget_transaction(self)
 
     # -- audit log (reference: tx.audit_log(),
     #    vastdb/transaction.py:117-121) ------------------------------------
