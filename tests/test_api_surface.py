@@ -387,14 +387,18 @@ def _spark_job_count(spark) -> int:
     return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
 
-def test_split_readers_are_lazy(clean_schema):
+def test_split_readers_are_lazy(clean_schema, monkeypatch):
     """select/select_splits/split_record_batch_reader must run NO Spark job
     at construction — the job runs on first batch pull (reference readers
-    work on consumption, vastdb/table.py:536-569)."""
+    work on consumption, vastdb/table.py:536-569). The Spark route: a
+    small read takes the driver Arrow route and runs no job at all
+    (tests/test_arrow_route.py)."""
     import pyarrow as pa
 
     from vastdb_sdk_spark import _ as D
+    from vastdb_sdk_spark import table as table_mod
 
+    monkeypatch.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
     spark = clean_schema.spark
     with clean_schema.transaction() as tx:
         t = tx.bucket("bkt").schema("s").create_table(

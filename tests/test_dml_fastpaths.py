@@ -239,7 +239,7 @@ def test_dv_literal_route_runs_one_job(session, monkeypatch):
         t = tx.bucket("b").schema(name).table("t")
 
         def read():
-            return t.select(predicate=t["k"] < 260).read_all().sort_by("k")
+            return t.select_df(predicate=t["k"] < 260).toArrow().sort_by("k")
 
         assert _jobs(t.spark, read) == 1  # before any DV
         t.delete_where(t["k"].isin([3, 150, 250]))
@@ -247,6 +247,9 @@ def test_dv_literal_route_runs_one_job(session, monkeypatch):
         assert _jobs(t.spark, read) == 1
         want = [k for k in range(260) if k not in (3, 150, 250)]
         assert read()["k"].to_pylist() == want
+        # select() of the same small read: the driver Arrow route, no job
+        assert _jobs(t.spark, lambda: t.select(predicate=t["k"] < 260).read_all()) == 0
+        assert t.select(predicate=t["k"] < 260).read_all().sort_by("k")["k"].to_pylist() == want
         # below the DV row count: the anti-join fallback
         monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 2)
         assert _jobs(t.spark, read) > 1
@@ -491,6 +494,46 @@ def test_small_dv_statements_run_one_job(session, monkeypatch):
     v = dict(zip(rows["k"].to_pylist(), rows["v"].to_pylist()))
     assert [v[k] for k in (5, 105, 205, 7, 107, 207)] == [-1.0] * 3 + [-2.0] * 3
     assert not {6, 106, 206, 1, 2, 299} & set(v)
+
+
+def test_delete_keeps_sparse_replacement_file(session):
+    """A replacement file's row-id range can be far wider than its rows:
+    ids inside the range are not its matches, so ``delete`` of other ids
+    takes the DV route (one Spark job) and leaves the file alone."""
+    name = _mk(session, "s_sparse_delete")
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        t.update_where(t["k"].isin([5, 105, 205]), {"v": -1.0})
+        (repl,) = [fe.path for fe in t.entry.files if fe.has_physical_row_id]
+        ids = _ids_of(t, [8, 108, 208])
+        assert _jobs(t.spark, lambda: t.delete(pa.table({"$row_id": ids}))) == 1
+        assert repl in [fe.path for fe in t.entry.files]
+        ks = set(t.select(columns=["k"]).read_all()["k"].to_pylist())
+        assert ks == set(range(300)) - {8, 108, 208}
+
+
+def test_footer_stats_of_a_column_after_a_struct(session):
+    """A struct's leaves shift the footer index of every later column: a
+    Spark-written file's sort-key stats and a rewritten file's row-id
+    range come from the column's own leaf, so ``delete`` finds its ids."""
+    schema = pa.schema(
+        [("st", pa.struct([("a", pa.int64()), ("b", pa.float64())])), ("k", pa.int64())]
+    )
+    with session.transaction() as tx:
+        t = tx.bucket("b").create_schema("s_struct_stats").create_table(
+            "t", schema, sorting_key=["k"]
+        )
+        t.insert_df(t.spark.range(3).selectExpr("named_struct('a', 100 - id, 'b', 0.5) AS st", "id AS k"))
+        for fe in t.entry.files:
+            ks = pq.read_table(fe.path, columns=["k"])["k"].to_pylist()
+            assert fe.col_stats["k"] == [min(ks), max(ks)]
+        t.insert(pa.table({"st": [{"a": 1, "b": 0.5}] * 3, "k": [10, 11, 12]}, schema=schema))
+        t.delete_where(t["k"] == 10)  # 1 of 3 rows: the file is rewritten
+        (repl,) = [fe for fe in t.entry.files if fe.has_physical_row_id]
+        ids = _ids_of(t, [11, 12]).to_pylist()
+        assert repl.row_id_range() == (min(ids), max(ids))
+        t.delete(pa.table({"$row_id": _ids_of(t, [11])}))
+        assert sorted(t.select(columns=["k"]).read_all()["k"].to_pylist()) == [0, 1, 2, 12]
 
 
 class _NoRows:

@@ -148,3 +148,27 @@ def test_fuzz_predicate_tree_matches_oracle(fuzz_table, dsl_and_oracle):
     assert got.equals(expected), (
         f"predicate {dsl!r}: {got.num_rows} rows != {expected.num_rows}"
     )
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(tree)
+def test_fuzz_predicate_tree_routes_agree(fuzz_table, monkeypatch, dsl_and_oracle):
+    """The same trees on select()'s driver Arrow route and, with
+    ARROW_READ_MAX_ROWS at 0, on its Spark route."""
+    from vastdb_sdk_spark import table as table_mod
+
+    dsl, _oracle = dsl_and_oracle
+    with fuzz_table.transaction() as tx:
+        t = tx.bucket("b").schema("s").table("t")
+        scan = t._scan_files(None, dsl, table_mod.QueryConfig(), False)
+        assert t._arrow_scan(*scan, None, dsl) is not None
+        got = t.select(predicate=dsl, internal_row_id=True).read_all().sort_by("i")
+        with monkeypatch.context() as m:
+            m.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
+            via_spark = t.select(predicate=dsl, internal_row_id=True).read_all().sort_by("i")
+    assert got.schema == via_spark.schema
+    assert got.equals(via_spark), repr(dsl)

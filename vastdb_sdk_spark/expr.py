@@ -12,6 +12,11 @@ the JVM boundary once; built node by node as ``Column`` objects, a 100-key
 ``isin`` took ~430 py4j round trips. :func:`quote_ident` and
 :func:`sql_literal` are the shared renderer for plan-time SQL text.
 
+:meth:`Expr.to_arrow` compiles the same tree to a ``pyarrow.compute``
+expression with Spark's semantics, for ``Table.select()``'s driver-side
+Arrow route; a node with no exact Arrow twin makes it return None, and
+the read keeps Spark.
+
 Deliberate superset (SURVEY.md §2.2 / Phase 1): the reference restricts
 predicates to AND-of-single-column-OR-groups (vastdb/_internal.py:280-283)
 and only supports NOT over isnull; Catalyst has no such restriction, so any
@@ -23,10 +28,13 @@ from __future__ import annotations
 import datetime as _dt
 import decimal
 import math
+import operator
+from functools import reduce
 from typing import Any, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -163,6 +171,27 @@ class Expr:
     def to_spark(self) -> Column:
         return F.expr(self.to_sql())
 
+    def to_arrow(self, types: pa.Schema, refs: dict | None = None) -> pc.Expression | None:
+        """This predicate as a ``pyarrow.compute`` expression that keeps
+        exactly the rows Spark keeps for :meth:`to_sql` over columns of
+        ``types`` (the scan's storage schema), or None when some node has
+        no exact Arrow twin: arithmetic (ANSI overflow), string-number
+        comparisons (ANSI casts), naive timestamps against datetime
+        literals (session time zone), float against decimal, and the
+        other pairs :func:`_literal_cmp_type` does not list. ``refs`` maps
+        a root column to the file column it is read from, or to a constant
+        expression (a partition value)."""
+        scope = _ArrowScope({f.name: f.type for f in types}, refs or {})
+        try:
+            return _boolean(self, scope)
+        except (_NoArrow, RecursionError, pa.ArrowException):
+            # ArrowException: a literal pyarrow will not convert exactly
+            # (a nanosecond timestamp), which sql_literal renders anyway
+            return None
+
+    def _arrow(self, scope: "_ArrowScope") -> tuple[pc.Expression, pa.DataType]:
+        raise _NoArrow
+
     def root_columns(self) -> set:
         return {n.path[0] for n in _walk(self) if isinstance(n, ColumnRef)}
 
@@ -188,6 +217,21 @@ class ColumnRef(Expr):
     def __repr__(self) -> str:
         return f"ColumnRef({'.'.join(self.path)})"
 
+    def _arrow(self, scope):
+        root, sub = self.path[0], self.path[1:]
+        if root not in scope.types:
+            raise _NoArrow
+        dt, ref = scope.types[root], scope.refs.get(root, root)
+        if not isinstance(ref, str):
+            if sub:
+                raise _NoArrow
+            return ref, dt
+        for part in sub:
+            if not pa.types.is_struct(dt) or dt.get_field_index(part) < 0:
+                raise _NoArrow
+            dt = dt.field(part).type
+        return pc.field(ref, *sub), dt
+
 
 class Literal(Expr):
     def __init__(self, value: Any):
@@ -198,6 +242,13 @@ class Literal(Expr):
 
     def __repr__(self) -> str:
         return f"Literal({self.value!r})"
+
+    def _arrow(self, scope):
+        # only as a boolean operand; comparisons type their literals
+        value = _to_spark_literal(self.value)
+        if value is None or isinstance(value, bool):
+            return pc.scalar(pa.scalar(value, pa.bool_())), pa.bool_()
+        raise _NoArrow
 
 
 _SQL_BINOPS = {"==": "=", "and": "AND", "or": "OR"}
@@ -226,6 +277,19 @@ class BinOp(Expr):
     def __repr__(self) -> str:
         return f"({self.left!r} {self.op} {self.right!r})"
 
+    def _arrow(self, scope):
+        if self.op in _PLAIN_CMP:
+            return _arrow_compare(self.op, self.left, self.right, scope), pa.bool_()
+        if self.op not in ("and", "or"):
+            raise _NoArrow  # arithmetic: ANSI overflow and division rules
+        terms, node = [], self  # a flat chain, as in to_sql
+        while isinstance(node, BinOp) and node.op == self.op:
+            terms.append(node.right)
+            node = node.left
+        terms.append(node)
+        combine = operator.and_ if self.op == "and" else operator.or_  # Kleene
+        return reduce(combine, [_boolean(t, scope) for t in reversed(terms)]), pa.bool_()
+
 
 class _Unary(Expr):
     def __init__(self, inner: Expr):
@@ -236,10 +300,17 @@ class Not(_Unary):
     def to_sql(self) -> str:
         return f"(NOT {self.inner.to_sql()})"
 
+    def _arrow(self, scope):
+        return ~_boolean(self.inner, scope), pa.bool_()
+
 
 class IsNull(_Unary):
     def to_sql(self) -> str:
         return f"({self.inner.to_sql()} IS NULL)"
+
+    def _arrow(self, scope):
+        # NaN is not null, in pc.is_null as in Spark
+        return pc.is_null(self.inner._arrow(scope)[0]), pa.bool_()
 
 
 class Isin(_Unary):
@@ -251,6 +322,27 @@ class Isin(_Unary):
         vals = ", ".join(sql_literal(v) for v in self.values)
         return f"({self.inner.to_sql()} IN ({vals}))"
 
+    def _arrow(self, scope):
+        expr, dt = self.inner._arrow(scope)
+        typed = [_literal_cmp_type(dt, v) for v in self.values if v is not None]
+        cmp_type = typed[0][0] if typed else None
+        if cmp_type is None or any(t != cmp_type for t, _ in typed):
+            raise _NoArrow  # Spark's IN compares a mixed list in a common type
+        if pa.types.is_floating(cmp_type) and any(v == 0 for _, v in typed):
+            raise _NoArrow  # Spark's IN and InSet disagree on -0.0 = 0.0
+        # pyarrow's is_in is two-valued (and matches NaN to NaN, as Spark
+        # does): a null operand gives null, and a miss against a list
+        # holding NULL gives null, as in SQL
+        expr = _cast(expr, dt, cmp_type)
+        hit = expr.isin(pa.array([v for _, v in typed], cmp_type))
+        if pa.types.is_floating(cmp_type):  # NaN spelled out, as in _spark_cmp
+            nan_listed = any(math.isnan(v) for _, v in typed)
+            hit = hit | pc.is_nan(expr) if nan_listed else hit & ~pc.is_nan(expr)
+        out = pc.if_else(pc.is_null(expr), _NULL_BOOL, hit)
+        if len(typed) < len(self.values):
+            out = pc.if_else(out, pc.scalar(True), _NULL_BOOL)
+        return out, pa.bool_()
+
 
 class StrOp(_Unary):
     def __init__(self, op: str, inner: Expr, arg: str):
@@ -260,6 +352,16 @@ class StrOp(_Unary):
 
     def to_sql(self) -> str:  # contains / startswith / endswith are SQL functions too
         return f"{self.op}({self.inner.to_sql()}, {sql_literal(self.arg)})"
+
+    def _arrow(self, scope):
+        expr, dt = self.inner._arrow(scope)
+        if not (pa.types.is_string(dt) and isinstance(self.arg, str)):
+            raise _NoArrow
+        # byte-wise on UTF-8, as Spark's default UTF8_BINARY collation
+        fn = {"contains": pc.match_substring, "startswith": pc.starts_with}.get(
+            self.op, pc.ends_with
+        )
+        return fn(expr, self.arg), pa.bool_()
 
 
 # ---------------------------------------------------------------------------
@@ -333,6 +435,180 @@ def sql_literal(value: Any) -> str:
     if isinstance(value, list):
         return f"array({', '.join(map(sql_literal, value))})"
     raise InvalidArgument(f"unsupported literal {value!r} of type {type(value).__name__}")
+
+
+# ---------------------------------------------------------------------------
+# Arrow compilation (Expr.to_arrow)
+
+
+class _NoArrow(Exception):
+    """A node with no exact pyarrow.compute twin: the read keeps Spark."""
+
+
+class _ArrowScope:
+    def __init__(self, types: dict, refs: dict):
+        self.types = types
+        self.refs = refs
+
+
+_NULL_BOOL = pc.scalar(pa.scalar(None, pa.bool_()))
+_FLIPPED = {"==": "==", "!=": "!=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+_PLAIN_CMP = {
+    "==": operator.eq, "!=": operator.ne, "<": operator.lt,
+    "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _boolean(node: Expr, scope: _ArrowScope) -> pc.Expression:
+    expr, dt = node._arrow(scope)
+    if not pa.types.is_boolean(dt):
+        raise _NoArrow
+    return expr
+
+
+def _orderable(dt: pa.DataType) -> bool:
+    return any(
+        check(dt)
+        for check in (
+            pa.types.is_integer, pa.types.is_floating, pa.types.is_decimal,
+            pa.types.is_string, pa.types.is_binary, pa.types.is_boolean,
+            pa.types.is_date32, pa.types.is_timestamp,
+        )
+    )
+
+
+def _wider_decimal(p1: int, s1: int, p2: int, s2: int) -> pa.DataType:
+    """Spark's common type of two decimals in a comparison; over 38
+    digits Spark bounds it, and casts may overflow, so that stays on Spark."""
+    scale = max(s1, s2)
+    precision = max(p1 - s1, p2 - s2) + scale
+    if precision > 38:
+        raise _NoArrow
+    return pa.decimal128(precision, scale)
+
+
+def _int_digits(dt: pa.DataType) -> int:
+    """Digits of Spark's decimal form of an integer type."""
+    return {8: 3, 16: 5, 32: 10, 64: 20}[dt.bit_width]
+
+
+def _decimal_literal_digits(value: decimal.Decimal) -> tuple[int, int]:
+    """(precision, scale) of the DECIMAL type Spark gives ``value``'s
+    ``BD`` literal."""
+    _sign, digits, exp = value.as_tuple()
+    if not value.is_finite() or exp > 0:
+        raise _NoArrow
+    precision = max(len(str(int("".join(map(str, digits))))), -exp)
+    if precision > 38:
+        raise _NoArrow
+    return precision, -exp
+
+
+def _literal_cmp_type(dt: pa.DataType, value: Any) -> tuple[pa.DataType, Any]:
+    """The Arrow type in which Spark compares a column of storage type
+    ``dt`` with the literal ``value`` (as :func:`sql_literal` types it),
+    and ``value`` in that type. Pairs left out raise _NoArrow: Spark
+    casts them under ANSI rules (string and number, date and timestamp),
+    reads a naive column in the session time zone, or converts decimals
+    to double by its own rounding."""
+    v = _to_spark_literal(value)
+    if isinstance(v, bool):
+        if pa.types.is_boolean(dt):
+            return dt, v
+    elif isinstance(v, int):
+        if not -(2**63) <= v < 2**63:
+            raise _NoArrow  # sql_literal raises
+        if pa.types.is_integer(dt):  # storage integers are signed
+            half = 2 ** (dt.bit_width - 1)
+            return (dt if -half <= v < half else pa.int64()), v
+        # a float column compares an int literal in FLOAT, exact to 2**24
+        if pa.types.is_float64(dt) or (pa.types.is_float32(dt) and abs(v) <= 2**24):
+            return pa.float64(), float(v)
+        if pa.types.is_decimal(dt):
+            digits = 10 if -(2**31) <= v < 2**31 else 20
+            return _wider_decimal(dt.precision, dt.scale, digits, 0), decimal.Decimal(v)
+    elif isinstance(v, float):
+        if pa.types.is_integer(dt) or pa.types.is_floating(dt):
+            return pa.float64(), v
+    elif isinstance(v, decimal.Decimal):
+        p, s = _decimal_literal_digits(v)
+        if pa.types.is_integer(dt):
+            return _wider_decimal(_int_digits(dt), 0, p, s), v
+        if pa.types.is_decimal(dt):
+            return _wider_decimal(dt.precision, dt.scale, p, s), v
+    elif isinstance(v, str):
+        if pa.types.is_string(dt):
+            return dt, v
+    elif isinstance(v, (bytes, bytearray)):
+        if pa.types.is_binary(dt):
+            return dt, bytes(v)
+    elif isinstance(v, _dt.datetime):
+        if pa.types.is_timestamp(dt) and dt.tz is not None:
+            return dt, v.astimezone(_dt.timezone.utc)  # as sql_literal reads it
+    elif isinstance(v, _dt.date):
+        if pa.types.is_date32(dt):
+            return dt, v
+    raise _NoArrow
+
+
+def _cast(expr: pc.Expression, frm: pa.DataType, to: pa.DataType) -> pc.Expression:
+    if frm == to:
+        return expr
+    # int to double rounds to nearest, as Java's (double) does
+    return expr.cast(to, safe=not (pa.types.is_integer(frm) and pa.types.is_floating(to)))
+
+
+def _arrow_compare(op: str, left: Expr, right: Expr, scope: _ArrowScope) -> pc.Expression:
+    if isinstance(left, Literal):
+        op, left, right = _FLIPPED[op], right, left
+    a, at = left._arrow(scope)
+    if not _orderable(at):
+        raise _NoArrow
+    if isinstance(right, Literal):
+        if _to_spark_literal(right.value) is None:
+            return _NULL_BOOL  # a comparison with NULL is NULL
+        cmp_type, value = _literal_cmp_type(at, right.value)
+        b = pc.scalar(pa.scalar(value, cmp_type))
+        nan_b = math.isnan(value) if pa.types.is_floating(cmp_type) else None
+    else:
+        b, cmp_type = right._arrow(scope)
+        if cmp_type != at:
+            raise _NoArrow
+        nan_b = pc.is_nan(b) if pa.types.is_floating(cmp_type) else None
+    a = _cast(a, at, cmp_type)
+    nan_a = pc.is_nan(a) if nan_b is not None else None
+    return _spark_cmp(op, a, b, nan_a, nan_b)
+
+
+def _spark_cmp(op: str, a, b, nan_a, nan_b) -> pc.Expression:
+    """``a <op> b`` as Spark compares: for floating types (``nan_a``,
+    ``nan_b`` not None: an expression, or a bool for a literal side) NaN
+    equals NaN and sorts above every other value, where IEEE makes every
+    NaN comparison false. Null in, null out.
+
+    Each float comparison spells out its NaN case with ``is_nan`` even
+    where IEEE agrees: parquet min/max leave NaN out, and a scan that
+    simplifies the filter by them must not fold ``NOT (b < 3)`` to false
+    over a row group [1, 2] that also holds NaN."""
+    plain = _PLAIN_CMP[op](a, b)
+    if nan_a is None:
+        return plain
+    if op == "!=":
+        return ~_spark_cmp("==", a, b, nan_a, nan_b)
+    if op in (">", ">="):
+        return _spark_cmp(op.replace(">", "<"), b, a, nan_b, nan_a)
+    if isinstance(nan_b, bool):
+        if not nan_b:
+            return plain & ~nan_a  # a NaN is neither equal to nor below b
+        return {"==": nan_a, "<": ~nan_a, "<=": nan_a | ~nan_a}[op]
+    if isinstance(nan_a, bool):
+        if nan_a:
+            return {"==": nan_b, "<": plain, "<=": nan_b}[op]
+        return plain & ~nan_b if op == "==" else nan_b | plain
+    # a null side takes ``plain``, so the comparison is null even when the
+    # other side is NaN (Kleene | alone makes null | NaN true)
+    either = (nan_a | nan_b) & pc.is_valid(a) & pc.is_valid(b)
+    return pc.if_else(either, {"==": nan_a & nan_b, "<": ~nan_a & nan_b, "<=": nan_b}[op], plain)
 
 
 def _validate_path(schema: pa.Schema, path: tuple) -> None:

@@ -13,10 +13,14 @@ whole-stage-generated code rather than compiling them into it.
 A distance to a literal query vector is built as one parsed SQL expression
 (``distance_column``, ``cosine_similarity_to_lit``): built from ``F.lit``
 per element, a 64-d query cost ~420 py4j round trips of plan construction.
+:func:`distances` computes the same values on the driver, bit for bit.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -65,16 +69,19 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _cosine_to_lit_sql(col: str, vec: list[float]) -> str:
-    q = [float(v) for v in vec]
+def _lit_norm(q: list[float]) -> float:
     # explicit left fold, NOT builtin sum(): CPython >= 3.12 gives float
     # sum() Neumaier compensation, which would break the bit-identical
     # claim against Spark's plain left-fold aggregate in the last ulp
     qn = 0.0
     for v in q:
         qn += v * v
-    qn **= 0.5
-    return f"({dot_sql(col, vec_sql(q))} / (sqrt({dot_sql(col, col)}) * {sql_literal(qn)}))"
+    return qn**0.5
+
+
+def _cosine_to_lit_sql(col: str, vec: list[float]) -> str:
+    q = [float(v) for v in vec]
+    return f"({dot_sql(col, vec_sql(q))} / (sqrt({dot_sql(col, col)}) * {sql_literal(_lit_norm(q))}))"
 
 
 def cosine_similarity_to_lit(col: str, vec: list[float]) -> Column:
@@ -103,3 +110,49 @@ def distance_column(col: str, vec: list[float], metric: str = "l2sq") -> Column:
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; have {sorted(_METRICS)}")
     return F.expr(_METRICS[metric](quote_ident(col), vec))
+
+
+def distances(vectors: pa.ChunkedArray, vec: list[float], metric: str) -> np.ndarray | None:
+    """:func:`distance_column`'s values over the Arrow array column
+    ``vectors``, in float64 NumPy: each metric is the same left fold over
+    the dimensions, one IEEE operation at a time in the SQL's order, so
+    the values are bit-identical. None where the SQL gives a null or
+    divides by zero, which Spark sorts first or rejects: a null or
+    wrong-length vector, a null element, a zero cosine norm, and element
+    types other than int and float."""
+    q = np.asarray([float(v) for v in vec])
+    arr = vectors.combine_chunks()
+    if metric not in _METRICS or not len(q) or arr.null_count or not pa.types.is_list(arr.type):
+        return None
+    flat = arr.flatten()
+    kind = flat.type
+    if flat.null_count or not (pa.types.is_integer(kind) or pa.types.is_floating(kind)):
+        return None
+    if len(arr) and pc.min_max(pc.list_value_length(arr)).as_py() != {"min": len(q), "max": len(q)}:
+        return None
+    x = flat.to_numpy(zero_copy_only=False).reshape(len(arr), len(q))
+    qn = _lit_norm(q.tolist())
+    out = np.empty(len(arr))
+    # blocks of rows that stay in cache while the fold walks their columns
+    for start in range(0, len(arr), 4096):
+        blk = x[start : start + 4096].astype(np.float64)
+        if metric in ("l2sq", "l2"):
+            d = _fold(np.square(blk - q))
+        elif metric == "ip":
+            d = -_fold(blk * q)
+        else:
+            den = np.sqrt(_fold(np.square(blk))) * qn
+            if (den == 0).any():
+                return None
+            d = 1.0 - _fold(blk * q) / den
+        out[start : start + len(blk)] = d
+    return out
+
+
+def _fold(terms: np.ndarray) -> np.ndarray:
+    """Row sums of ``terms`` as the SQL's ``aggregate(..., 0.0D, (acc, x)
+    -> acc + x)``: from 0.0, left to right (np.sum adds pairwise)."""
+    acc = np.zeros(len(terms))
+    for j in range(terms.shape[1]):
+        acc += terms[:, j]
+    return acc

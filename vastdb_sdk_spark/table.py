@@ -66,7 +66,7 @@ from .errors import (
     ProjectionExists,
     ViewExists,
 )
-from .expr import quote_ident, sql_literal, to_spark_predicate
+from .expr import Expr, quote_ident, sql_literal, to_spark_predicate, validate_predicate
 from .types import (
     arrow_schema_to_spark,
     arrow_type_to_spark,
@@ -135,6 +135,31 @@ RID_LITERAL_MAP_MAX_FILES = 64
 # already holds at plan time, not the write crossover.
 DV_LITERAL_MAX_ROWS = 1000
 
+# Table.select() and exact vector_search() read on the driver with pyarrow,
+# running no Spark job, when the chosen files hold at most this many rows
+# (manifest counts, before the predicate), at most DV_LITERAL_MAX_ROWS
+# deletion-vector rows, and the predicate compiles (Expr.to_arrow).
+# Measured on 4 CPUs, local[4], median of 5 reads after 2 discarded, the
+# Spark route forced with the bound at 0 ("rss": growth of the driver
+# process's peak RSS over the Arrow reads of that size):
+#
+#   read                                    rows   Arrow ms  Spark ms   rss
+#   select, k/v/s in 4 files, 1% match    100 000       7      286     21 MB
+#                                       1 000 000      33      283     41 MB
+#                                       4 000 000     109      390    140 MB
+#   select, lineitem (11 cols), 2%         60 000       9      136       -
+#                                         600 000      30      227       -
+#   select all, 64-d float vectors         20 000      16      192       -
+#                                         250 000     101      535       -
+#   vector_search top-10, 64-d             20 000      34      428     43 MB
+#                                         250 000     310    1 117    179 MB
+#                                         500 000     700    1 600    300 MB
+#
+# The Arrow route wins at every size, so the bound caps driver memory: it
+# holds a file's unfiltered columns while filtering them, and the exact
+# vector search holds every candidate vector, ~600 B a row at 64-d.
+ARROW_READ_MAX_ROWS = 500_000
+
 
 def _json_scalar_value(v):
     import datetime as _dt
@@ -148,6 +173,13 @@ def _json_scalar_value(v):
     return v if isinstance(v, (int, float, str)) and not isinstance(v, bool) else None
 
 
+def _leaf_paths(meta) -> list[str]:
+    """The dotted paths of a parquet footer's leaf columns, in the order
+    ``row_group(i).column(j)`` indexes them: a struct before a column
+    shifts its index past the top-level position."""
+    return [meta.schema.column(j).path for j in range(meta.num_columns)]
+
+
 def _meta_col_stats(meta, stat_cols: list[str], cmap: dict | None = None) -> dict:
     """Per-file [min, max] for ``stat_cols`` from a parquet footer's
     row-group statistics — the ONE implementation behind both the files
@@ -155,13 +187,13 @@ def _meta_col_stats(meta, stat_cols: list[str], cmap: dict | None = None) -> dic
     divergence would give imported and inserted files different pruning
     stats)."""
     out = {}
-    names = meta.schema.to_arrow_schema().names
+    leaves = _leaf_paths(meta)
     inv = {v: k for k, v in (cmap or {}).items()}
     for col in stat_cols:
         fcol = inv.get(col, col)
-        if fcol not in names:
+        if fcol not in leaves:
             continue
-        idx = names.index(fcol)
+        idx = leaves.index(fcol)
         mins, maxs = [], []
         for i in range(meta.num_row_groups):
             st = meta.row_group(i).column(idx).statistics
@@ -465,16 +497,7 @@ class Table:
                 spark_fields.append(T.StructField("__source_file", T.StringType(), True))
             return self.spark.createDataFrame([], T.StructType(spark_fields))
 
-        # group files by (rowid kind, column-name map, partition values)
-        groups: dict[tuple, list[FileEntry]] = {}
-        for fe in file_list:
-            key = (
-                fe.has_physical_row_id,
-                tuple(sorted((fe.column_map or {}).items())) if getattr(fe, "column_map", None) else None,
-                tuple(sorted(fe.partition.items())),
-            )
-            groups.setdefault(key, []).append(fe)
-
+        groups = _file_groups(file_list)
         out_names = [f.name for f in arrow]
         if want_rid:
             out_names.append(INTERNAL_ROW_ID)
@@ -610,10 +633,22 @@ class Table:
         """The scan as a DataFrame — projection/predicate/limit semantics of
         reference ``select()`` (vastdb/table.py:460-534) with Catalyst doing
         the pushdown."""
-        config = config or QueryConfig()
-        arrow = self.arrow_schema
-        source = self._route_scan(columns, predicate, config, internal_row_id)
-        pred_col = to_spark_predicate(predicate, arrow)
+        scan = self._scan_files(columns, predicate, config or QueryConfig(), internal_row_id)
+        return self._scan_df(scan, columns, predicate, internal_row_id, limit_rows)
+
+    def _scan_df(
+        self,
+        scan: tuple[list[FileEntry], pa.Schema],
+        columns: list[str] | None,
+        predicate: Any,
+        internal_row_id: bool,
+        limit_rows: int | None,
+    ) -> DataFrame:
+        """``select_df`` over the ``(files, column types)`` of
+        :meth:`_scan_files`."""
+        files, types = scan
+        source = self.df(internal_row_id=internal_row_id, files=files, column_types=types)
+        pred_col = to_spark_predicate(predicate, self.arrow_schema)
         df = source if pred_col is None else source.filter(pred_col)
         if columns is not None:
             names = [*columns, INTERNAL_ROW_ID] if internal_row_id else columns
@@ -636,8 +671,13 @@ class Table:
         Predicate ``False`` short-circuits to an empty reader with the right
         schema and zero Spark jobs (reference: table.py:485-489).
 
+        Two routes read the same files (:meth:`_scan_files`): a small read
+        (ARROW_READ_MAX_ROWS) runs on the driver with pyarrow and no Spark
+        job (:meth:`_arrow_scan`); any other read is ``select_df``'s Spark
+        job, or spills (``spill_threshold_rows``).
+
         LAZY: the plan — file list, deletion-vector sidecars, pushed
-        predicate — is pinned at construction, but the Spark job runs when
+        predicate — is pinned at construction, but the files are read when
         the first batch is pulled (reference semantics: vastdb/table.py:
         536-569 hands out readers whose work happens on consumption). A
         reader held across a later file-compacting DML (DV rewrite,
@@ -650,13 +690,6 @@ class Table:
             return pa.RecordBatchReader.from_batches(out_schema, iter([]))
 
         cfg = config or QueryConfig()
-        df = self.select_df(
-            columns,
-            predicate,
-            config,
-            internal_row_id=internal_row_id,
-            limit_rows=limit_rows,
-        )
         batch_rows = cfg.limit_rows_per_sub_split
         est_override = self.__dict__.get("_est_rows_override")
         est_rows = (
@@ -666,11 +699,19 @@ class Table:
             if est_override is not None
             else self.entry.num_rows
         )
-        if est_rows > cfg.spill_threshold_rows:
-            return self._spill_reader(df, out_schema, batch_rows)
+        spill = est_rows > cfg.spill_threshold_rows
+        scan = self._scan_files(columns, predicate, cfg, internal_row_id)
+        read = None if spill else self._arrow_scan(
+            *scan, columns, predicate, internal_row_id=internal_row_id, limit_rows=limit_rows
+        )
+        if read is None:
+            df = self._scan_df(scan, columns, predicate, internal_row_id, limit_rows)
+            if spill:
+                return self._spill_reader(df, out_schema, batch_rows)
+            read = df.toArrow
 
         def gen():
-            tbl = cast_table_to_schema(df.toArrow(), out_schema)
+            tbl = cast_table_to_schema(read(), out_schema)
             for b in tbl.to_batches(max_chunksize=batch_rows):
                 yield b
 
@@ -849,29 +890,34 @@ class Table:
         return files if len(files) < len(entry.files) else None
 
     # -- projection routing (SURVEY.md §4: NOT built into Catalyst) -------
-    def _route_scan(
+    def _scan_files(
         self,
         columns: list[str] | None,
         predicate: Any,
         config: QueryConfig,
         internal_row_id: bool,
-    ) -> DataFrame:
+    ) -> tuple[list[FileEntry], pa.Schema]:
+        """The one file choice of a read, which both routes scan: the
+        table's files after manifest, bloom and partition pruning, or a
+        projection's pruned files, with the column types they carry."""
         entry = self.entry
+        arrow = self.arrow_schema
         pruned = self._pruned_files(predicate)
+        table_files = (entry.files if pruned is None else pruned), arrow
         if (
             not entry.projections
             or not config.use_semi_sorted_projections
             or internal_row_id
         ):
-            return self.df(internal_row_id=internal_row_id, files=pruned)
-        needed = set(self.arrow_schema.names if columns is None else columns)
+            return table_files
+        needed = set(arrow.names if columns is None else columns)
         if predicate is not None and not isinstance(predicate, (bool, Column)):
             try:
                 needed |= predicate.root_columns()
             except AttributeError:
-                return self.df(files=pruned)
+                return table_files
         elif isinstance(predicate, Column):
-            return self.df(files=pruned)
+            return table_files
 
         forced = config.semi_sorted_projection_name
         if forced and forced not in entry.projections:
@@ -890,9 +936,9 @@ class Table:
             if match:
                 candidates = match
             else:
-                return self.df(files=pruned)
+                return table_files
         if not candidates:
-            return self.df(files=pruned)
+            return table_files
         # prefer a projection whose sort key is actually filtered on
         pred_cols = set()
         if predicate is not None and not isinstance(predicate, bool):
@@ -912,13 +958,90 @@ class Table:
         if predicate is not None and not isinstance(predicate, (bool, Column)):
             from .plans.pruning import prune_files
 
-            types = {f.name: f.type for f in self.arrow_schema}
+            types = {f.name: f.type for f in arrow}
             for col in proj["sorted"]:
                 files = prune_files(files, col, predicate, col_type=types.get(col))
-        sub_schema = pa.schema(
-            [_resolve_field(self.arrow_schema, n) for n in proj["sorted"] + proj["unsorted"]]
+        return files, pa.schema(
+            [_resolve_field(arrow, n) for n in proj["sorted"] + proj["unsorted"]]
         )
-        return self.df(files=files, column_types=sub_schema)
+
+    def _arrow_scan(
+        self,
+        files: list[FileEntry],
+        types: pa.Schema,
+        columns: list[str] | None,
+        predicate: Any,
+        *,
+        internal_row_id: bool = False,
+        limit_rows: int | None = None,
+    ) -> Callable[[], pa.Table] | None:
+        """The driver-side Arrow route of a small read: a function that
+        returns the rows of ``columns`` (default all, then ``$row_id`` if
+        asked) with their storage types and no Spark job, or None where the
+        read keeps the Spark route: a predicate that is not an Expr or has
+        no exact Arrow twin (Expr.to_arrow), chosen files holding more than
+        ARROW_READ_MAX_ROWS rows or more than DV_LITERAL_MAX_ROWS
+        deletion-vector rows, or a partition value pyarrow does not type
+        as Spark's cast does.
+
+        It reads what df() reads: ``files`` (from :meth:`_scan_files`)
+        with ``types``, in df()'s file groups (:func:`_read_arrow_group`).
+        The plan is pinned now, from deep copies of the file entries; the
+        files are read when the function is called."""
+        if predicate is True:
+            predicate = None
+        if predicate is not None and not isinstance(predicate, Expr):
+            return None
+        if limit_rows is not None and limit_rows < 0:
+            return None
+        arrow = self.arrow_schema
+        names = list(arrow.names if columns is None else columns)
+        if (
+            not set(names) <= set(types.names)
+            or sum(fe.rows for fe in files) > ARROW_READ_MAX_ROWS
+            or sum(fe.dv_rows for fe in files) > DV_LITERAL_MAX_ROWS
+        ):
+            return None
+        storage = storage_arrow_schema(types)
+        if predicate is not None:
+            validate_predicate(predicate, arrow)
+            if predicate.to_arrow(storage) is None:
+                return None
+        pmap = self._physical_map()
+        groups = []
+        for (has_phys_rid, cmap, part_items), fes in _file_groups(files).items():
+            consts = {}
+            for logical, value in part_items:
+                if logical in storage.names:
+                    const = _partition_scalar(value, storage.field(logical).type)
+                    if const is None:
+                        return None
+                    consts[logical] = const
+            file_cols = {
+                f.name: _file_col_for(pmap.get(f.name, f.name), dict(cmap or ()))
+                for f in storage
+                if f.name not in consts
+            }
+            pinned = [FileEntry.from_json(fe.to_json()) for fe in fes]
+            groups.append((pinned, has_phys_rid, file_cols, consts))
+        out = pa.schema(
+            [pa.field(n, storage.field(n).type) for n in names]
+            + ([pa.field(INTERNAL_ROW_ID, pa.int64())] if internal_row_id else [])
+        )
+
+        def read() -> pa.Table:
+            parts, left = [], limit_rows
+            for fes, has_phys_rid, file_cols, consts in groups:
+                if left == 0:
+                    break
+                part = _read_arrow_group(
+                    fes, has_phys_rid, file_cols, consts, storage, out, predicate, left
+                )
+                parts.append(part)
+                left = None if left is None else left - part.num_rows
+            return pa.concat_tables(parts) if parts else out.empty_table()
+
+        return read
 
     # ------------------------------------------------------------------
     # write path
@@ -1136,7 +1259,9 @@ class Table:
 
     def _write_parquet(self, tbl: pa.Table) -> str:
         path = self._state.store.new_data_file(self.schema.name, self.name)
-        pq.write_table(tbl, path, compression="zstd")
+        pq.write_table(
+            tbl, path, compression="zstd", write_statistics=_nan_safe_statistics(tbl)
+        )
         return path
 
     def insert_df(self, df: DataFrame) -> int:
@@ -1208,7 +1333,7 @@ class Table:
         cmap = {pmap.get(c, c): c for c in stat_cols}
         for path, _partition, md in written:
             # min/max row id from the footer stats of the row-id column
-            rid_idx = md.schema.to_arrow_schema().names.index(PHYSICAL_ROW_ID)
+            rid_idx = _leaf_paths(md).index(PHYSICAL_ROW_ID)
             lo = min(
                 md.row_group(i).column(rid_idx).statistics.min for i in range(md.num_row_groups)
             )
@@ -1559,9 +1684,12 @@ class Table:
         # the driver — writing a DV sidecar only for _fold_heavy_dvs to
         # rewrite the file anyway was one full wasted Spark write job per
         # DELETE (r14 measurement: the DV pass was ~40% of delete() wall
-        # on a fold-triggering batch). The bound over-counts (dead ids,
-        # replacement-file id gaps), so it only ever routes a file to the
-        # rewrite a little early — both paths are exact.
+        # on a fold-triggering batch). The bound is trusted only where the
+        # file's id range is dense — a row-id base, or physical ids with
+        # max - min + 1 == rows — so it over-counts by dead ids at most.
+        # A sparse range (a replacement file holding ids 5, 105 and 205)
+        # says nothing of which ids the file holds: such files take the
+        # DV route, and _fold_heavy_dvs folds them on the exact count.
         import bisect
 
         heavy, light = [], []
@@ -1571,7 +1699,8 @@ class Table:
             in_range = bisect.bisect_right(sorted_ids, fhi) - bisect.bisect_left(
                 sorted_ids, flo
             )
-            if fe.rows and (fe.dv_rows + in_range) / fe.rows > self.DV_REWRITE_FRACTION:
+            dense = fhi - flo + 1 == fe.rows
+            if dense and fe.rows and (fe.dv_rows + in_range) / fe.rows > self.DV_REWRITE_FRACTION:
                 heavy.append(fe)
             else:
                 light.append(fe)
@@ -1579,10 +1708,8 @@ class Table:
         # prunes the scan to metadata columns). Up to DV_LITERAL_MAX_ROWS
         # ids a literal filter selects them and the DV route collects the
         # matches once; more ids go through a broadcast join and their
-        # sidecars are written from executors like delete_where. The range
-        # bound is an over-count, so no light file can cross the fraction
-        # — the fold only ever re-checks light files already carrying
-        # earlier DVs
+        # sidecars are written from executors like delete_where. The fold
+        # re-checks light files on their exact DV counts
         small = len(ids) <= DV_LITERAL_MAX_ROWS
         del_df = del_path = None
         if not small:
@@ -3939,7 +4066,11 @@ class Table:
                 df = self.spark.read.parquet(*paths).drop(
                     PHYSICAL_ROW_ID, "centroid_id"
                 )
+        out_cols = columns or [f.name for f in self.arrow_schema]
         if df is None:
+            got = self._vector_search_arrow(vcol, metric, vec, out_cols, limit, predicate)
+            if got is not None:
+                return got
             df = self.df()
 
         pred_col = to_spark_predicate(predicate, self.arrow_schema)
@@ -3948,7 +4079,6 @@ class Table:
         from .functions.vector import distance_column
 
         dist = distance_column(vcol, vec, metric)
-        out_cols = columns or [f.name for f in self.arrow_schema]
         df = (
             df.withColumn(VECTOR_DIST_COL, dist)
             .orderBy(F.col(VECTOR_DIST_COL).asc())
@@ -3956,6 +4086,44 @@ class Table:
             .select(*out_cols, VECTOR_DIST_COL)
         )
         return df.toArrow()
+
+    def _vector_search_arrow(
+        self, vcol: str, metric: str, vec, out_cols: list[str], limit: int, predicate: Any
+    ) -> pa.Table | None:
+        """Exact vector_search on the driver: the rows of ``out_cols`` and
+        ``vcol`` from the Arrow read route, distances from
+        ``functions.vector.distances``, a stable top-``limit``, in the
+        schema the Spark route's ``toArrow()`` gives. None where the search
+        keeps Spark: a read the Arrow route does not take, or a distance
+        the SQL makes null or rejects."""
+        import numpy as np
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .functions.vector import distances
+
+        if limit < 0 or len(set(out_cols)) < len(out_cols) or VECTOR_DIST_COL in out_cols:
+            return None
+        # every file, unpruned, as the Spark route's df(): manifest pruning
+        # by a float sort key's [min, max] would drop NaN rows
+        read = self._arrow_scan(
+            self.entry.files, self.arrow_schema, [*dict.fromkeys([*out_cols, vcol])], predicate
+        )
+        if read is None:
+            return None
+        tbl = read()
+        dist = distances(tbl.column(vcol), vec, metric)
+        if dist is None:
+            return None
+        top = pa.array(np.argsort(dist, kind="stable")[:limit])
+        got = tbl.select(out_cols).take(top).append_column(VECTOR_DIST_COL, pa.array(dist).take(top))
+        spark_schema = T.StructType(
+            [T.StructField(f.name, _as_nullable(arrow_type_to_spark(f.type))) for f in got.schema]
+        )
+        return got.cast(to_arrow_schema(
+            spark_schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=self.spark._jconf.arrowUseLargeVarTypes(),
+        ))
 
     def _vector_search_adc(
         self, vi, kind, vec, columns, limit, predicate, nprobe, rerank
@@ -4438,6 +4606,180 @@ def _rid_in_sql(ids: list[int]) -> str:
     return f"{quote_ident(INTERNAL_ROW_ID)} IN ({', '.join(map(sql_literal, sorted(set(ids))))})"
 
 
+def _nan_safe_statistics(tbl: pa.Table) -> bool | list[str]:
+    """``pq.write_table``'s ``write_statistics`` for ``tbl``. pyarrow's
+    min/max leave NaN out, so a reader that prunes row groups by them
+    (Spark's parquet filter pushdown, a pyarrow dataset scan) drops NaN
+    rows that Spark's ordering, NaN above every value, keeps (``b > 3``
+    over a row group [1, 2] + NaN). A float leaf holding NaN is written
+    without statistics; list and map leaves, which no reader prunes by,
+    lose theirs only then."""
+    import pyarrow.compute as pc
+
+    keep, nan = [], False
+
+    def walk(path: str, arr) -> None:
+        nonlocal nan
+        if pa.types.is_struct(arr.type):
+            for i, f in enumerate(arr.type):
+                walk(f"{path}.{f.name}", pc.struct_field(arr, [i]))
+        elif pa.types.is_floating(arr.type) and pc.any(pc.is_nan(arr)).as_py():
+            nan = True
+        elif not (pa.types.is_list(arr.type) or pa.types.is_map(arr.type)):
+            keep.append(path)
+
+    for name in tbl.column_names:
+        walk(name, tbl.column(name))
+    return keep if nan else True
+
+
+def _file_groups(files: list[FileEntry]) -> dict[tuple, list[FileEntry]]:
+    """df()'s scan groups, keyed ``(has physical row id, column-name map,
+    partition values)``: the files one parquet read with one reader schema
+    covers. The Arrow route reads the same groups."""
+    groups: dict[tuple, list[FileEntry]] = {}
+    for fe in files:
+        key = (
+            fe.has_physical_row_id,
+            tuple(sorted(fe.column_map.items())) if fe.column_map else None,
+            tuple(sorted(fe.partition.items())),
+        )
+        groups.setdefault(key, []).append(fe)
+    return groups
+
+
+def _partition_scalar(value: Any, dt: pa.DataType) -> pa.Scalar | None:
+    """A partition value as a ``dt`` scalar where pyarrow converts it as
+    df()'s ``CAST(<literal> AS <type>)`` does, else None (the read keeps
+    Spark). Out-of-range values, which Spark's ANSI cast rejects, are
+    None too."""
+    import datetime as _dt
+
+    if value is None:
+        return pa.scalar(None, dt)
+    if isinstance(value, bool):
+        ok = pa.types.is_boolean(dt)
+    elif isinstance(value, int):
+        ok = pa.types.is_integer(dt)
+    elif isinstance(value, float):
+        ok = pa.types.is_floating(dt)
+    elif isinstance(value, str):
+        ok = pa.types.is_string(dt)
+    elif isinstance(value, _dt.date) and not isinstance(value, _dt.datetime):
+        ok = pa.types.is_date32(dt)
+    else:
+        ok = False
+    try:
+        return pa.scalar(value, dt) if ok else None
+    except (pa.ArrowInvalid, OverflowError):
+        return None
+
+
+_RAW_ROW_ID = "__raw_row_id"
+
+
+def _read_arrow_group(
+    fes: list[FileEntry],
+    has_phys_rid: bool,
+    file_cols: dict[str, str],
+    consts: dict[str, pa.Scalar],
+    storage: pa.Schema,
+    out: pa.Schema,
+    predicate: Any,
+    limit: int | None,
+) -> pa.Table:
+    """One df() file group read with pyarrow into ``out`` (logical names,
+    storage types). One dataset spans the group's files with df()'s
+    reader schema, so a column a file lacks reads as null; ``file_cols``
+    names each stored column in the files, and partition columns are the
+    group's constants ``consts``. The filter and the limit go into the
+    scan. Deletion vectors and ``$row_id`` need each file's raw row id —
+    the physical column, or the parquet row position counted from the
+    footer's row-group offsets — so those groups are read file by file."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    schema = pa.schema(
+        [pa.field(file_cols[f.name], f.type) for f in storage if f.name in file_cols]
+        + ([pa.field(PHYSICAL_ROW_ID, pa.int64())] if has_phys_rid else [])
+    )
+    refs = {**file_cols, **{n: pc.scalar(v) for n, v in consts.items()}}
+    flt = None if predicate is None else predicate.to_arrow(storage, refs)
+    cols = list(dict.fromkeys(file_cols[f.name] for f in out if f.name in file_cols))
+    dataset = pads.dataset([fe.path for fe in fes], schema=schema, format="parquet")
+    if INTERNAL_ROW_ID in out.names or any(fe.dv_paths for fe in fes):
+        pred_cols = predicate.root_columns() if predicate is not None else set()
+        read_cols = list(dict.fromkeys(cols + [file_cols[c] for c in pred_cols if c in file_cols]))
+
+        def pieces():
+            for fe, frag in zip(fes, dataset.get_fragments()):
+                masked = _dv_raw_ids(fe)
+                for got, keep in _raw_id_chunks(frag, has_phys_rid, schema, cols, read_cols, flt):
+                    if masked:
+                        alive = ~pc.field(_RAW_ROW_ID).isin(masked)
+                        keep = alive if keep is None else keep & alive
+                    if keep is not None:
+                        got = got.filter(keep)
+                    rid = pc.add(got[_RAW_ROW_ID], 0 if has_phys_rid else fe.row_id_base)
+                    yield got.select(cols).append_column(INTERNAL_ROW_ID, rid)
+
+        kept, rows = [], 0
+        for piece in pieces():
+            kept.append(piece)
+            rows += piece.num_rows
+            if limit is not None and rows >= limit:
+                break
+        tbl = pa.concat_tables(kept).slice(0, limit) if kept else None
+    elif limit is None:
+        tbl = dataset.to_table(columns=cols, filter=flt)
+    else:
+        tbl = dataset.head(limit, columns=cols, filter=flt)
+    if tbl is None:
+        return out.empty_table()
+    n = tbl.num_rows
+    return pa.Table.from_arrays(
+        [
+            tbl[INTERNAL_ROW_ID] if f.name == INTERNAL_ROW_ID
+            else pa.chunked_array([pa.repeat(consts[f.name], n)]) if f.name in consts
+            else tbl[file_cols[f.name]]
+            for f in out
+        ],
+        schema=out,
+    )
+
+
+def _raw_id_chunks(frag, has_phys_rid: bool, schema, cols, read_cols, flt):
+    """One file's rows as ``(table, filter still to apply)`` pieces, each
+    table with its raw row id as ``_RAW_ROW_ID``: the physical id, read
+    with the filter pushed down; or the parquet row position, one row
+    group at a time (the footer's statistics skip groups), filtered after
+    the positions are attached."""
+    import numpy as np
+
+    if has_phys_rid:
+        got = frag.to_table(schema=schema, columns=[*cols, PHYSICAL_ROW_ID], filter=flt)
+        yield got.rename_columns([*cols, _RAW_ROW_ID]), None
+        return
+    md = frag.metadata
+    starts = np.cumsum([0] + [md.row_group(i).num_rows for i in range(md.num_row_groups)])
+    for rg in frag.split_by_row_group(flt, schema=schema):
+        start = starts[rg.row_groups[0].id]
+        got = rg.to_table(schema=schema, columns=read_cols)
+        pos = pa.array(np.arange(start, start + got.num_rows, dtype=np.int64))
+        yield got.append_column(_RAW_ROW_ID, pos), flt
+
+
+def _dv_raw_ids(fe: FileEntry) -> list[int]:
+    """The raw row ids ``fe``'s deletion-vector sidecars mask, sorted: the
+    physical id, or the parquet row position (id - ``row_id_base``)."""
+    shift = 0 if fe.has_physical_row_id else fe.row_id_base
+    return sorted(
+        i - shift
+        for p in fe.dv_paths
+        for i in pq.read_table(p, columns=["deleted_row_id"])["deleted_row_id"].to_pylist()
+    )
+
+
 def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
     """SQL condition on a file group's raw scan frame that drops the rows
     masked by the files' deletion vectors, or None when no file has any.
@@ -4454,12 +4796,7 @@ def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
     for fe in fes:
         if not fe.dv_paths:
             continue
-        shift = 0 if phys else fe.row_id_base
-        ids = sorted(
-            i - shift
-            for p in fe.dv_paths
-            for i in pq.read_table(p, columns=["deleted_row_id"])["deleted_row_id"].to_pylist()
-        )
+        ids = _dv_raw_ids(fe)
         group_ids.update(ids)
         path = sql_literal("file:" + os.path.abspath(fe.path))
         whens.append(f"WHEN {path} THEN {raw} IN ({', '.join(map(str, ids))})")
@@ -4469,6 +4806,18 @@ def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
     if len(fes) > 1:
         masked += f" AND CASE _metadata.file_path {' '.join(whens)} ELSE false END"
     return f"NOT ({masked})"
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` as a parquet scan with a given schema reads it: every nested
+    field, array element and map value nullable (Spark's asNullable)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _as_nullable(f.dataType)) for f in dt])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType))
+    return dt
 
 
 def _file_col_for(phys: str, cmap: dict[str, str]) -> str:
