@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -19,6 +20,25 @@ SF_CORRECT = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     return build_spark(EngineConfig(shuffle_partitions=8), app_name="vastdb_tests")
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(action)``: the number of Spark jobs ``action()`` runs,
+    and what it returns."""
+    sc = spark.sparkContext
+
+    def count(action):
+        group = f"jobs-{time.time_ns()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
 
 
 @pytest.fixture()

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -365,6 +364,48 @@ def test_partitions_hive_and_imported(fixed, monkeypatch, tmp_path):
             _assert_routes_agree(monkeypatch, u, predicate=pred, internal_row_id=True)
 
 
+def test_nan_sort_key_is_never_pruned(fixed):
+    """min/max leave NaN out, so a float sort key holding NaN gets no
+    manifest range: ``x > 3`` keeps the NaN row (above every value in
+    Spark's ordering) on every read, before and after compact()."""
+    schema = pa.schema([("x", pa.float64()), ("k", pa.int64())])
+    nan = float("nan")
+    with fixed.transaction() as tx:
+        t = tx.bucket("b").create_schema("s_nan_key").create_table("t", schema, sorting_key=["x"])
+        t.insert(pa.table({"x": [1.0, 2.0, nan], "k": [0, 1, 2]}, schema=schema))
+        t.insert(pa.table({"x": [5.0, 6.0], "k": [3, 4]}, schema=schema))
+        # Spark's writer keeps NaN in its footer range
+        t.insert_df(t.spark.createDataFrame([(nan, 5), (1.0, 6), (0.5, 7)], "x double, k long").coalesce(1))
+
+        def check():
+            assert sorted(t.select(predicate=D.x > 3).read_all()["k"].to_pylist()) == [2, 3, 4, 5]
+            assert t.count_rows(D.x > 3) == 4
+            assert t.select_df().filter("x > 3").count() == 4
+
+        check()
+        assert t.compact(target_file_rows=100) == 2
+        (fe,) = t.entry.files
+        assert "x" not in fe.col_stats
+        check()
+
+
+def test_import_partitioned_rejects_a_date_value(fixed, tmp_path):
+    path = str(tmp_path / "d.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    schema = pa.schema([("k", pa.int64()), ("d", pa.date32())])
+    with fixed.transaction() as tx:
+        tx.bucket("b").create_schema("s_date_part").create_table("t", schema)
+    with fixed.transaction() as tx:
+        t = tx.bucket("b").schema("s_date_part").table("t")
+        with pytest.raises(vastdb.errors.InvalidArgument, match="'d'"):
+            t.import_partitioned_files({path: {"d": dt.date(2021, 1, 1)}})
+        assert t.entry.files == []
+    with fixed.transaction() as tx:
+        t = tx.bucket("b").schema("s_date_part").table("t")
+        assert t.entry.files == [] and t.select().read_all().num_rows == 0
+        assert [r.op for r in t.history().collect()] == ["create_table"]
+
+
 def test_limit_rows(fixed, monkeypatch):
     name = _kv_table(fixed, "s_limit")
     with fixed.transaction() as tx:
@@ -421,15 +462,15 @@ def test_vector_metrics_bit_identical(fixed, monkeypatch, metric):
             assert arrow.schema == via_spark.schema
             # the same rows in the same order, distances equal bit for bit
             assert arrow.to_pylist() == via_spark.to_pylist()
-        # a float sort key whose manifest [min, max] leaves NaN out: both
-        # routes read every file and keep the NaN row of x > 3
+        # a float sort key holding NaN: the file gets no manifest range,
+        # and both routes read every file and keep the NaN row of x > 3
         srt = t.schema.create_table(
             "sorted", pa.schema([("x", pa.float64()), ("e", pa.list_(pa.float32()))]),
             sorting_key=["x"], vector_index={"column": "e", "metric": metric},
         )
         for lo, xs in [(0, [1.0, 2.0, float("nan")]), (3, [5.0, 6.0])]:
             srt.insert(pa.table({"x": xs, "e": [[1.0, float(lo + i + 1)] for i in range(len(xs))]}))
-        assert [f.col_stats["x"] for f in srt.entry.files] == [[1.0, 2.0], [5.0, 6.0]]
+        assert [f.col_stats.get("x") for f in srt.entry.files] == [None, [5.0, 6.0]]
 
         def search():
             return srt.vector_search([1.0, 0.5], columns=["x"], limit=5, predicate=D.x > 3)
@@ -458,20 +499,7 @@ def test_vector_null_or_ragged_vectors_keep_spark(fixed):
 # Spark jobs and snapshots
 
 
-def _jobs(spark, action):
-    """Number of Spark jobs ``action()`` runs."""
-    sc = spark.sparkContext
-    group = f"arrow-jobs-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_small_reads_run_no_spark_job(fixed, monkeypatch):
+def test_small_reads_run_no_spark_job(fixed, monkeypatch, spark_jobs):
     with fixed.transaction() as tx:
         t = tx.bucket("b").create_schema("s_jobs").create_table(
             "t", pa.schema([("k", pa.int64()), ("e", pa.list_(pa.float64()))]),
@@ -487,11 +515,11 @@ def test_small_reads_run_no_spark_job(fixed, monkeypatch):
             lambda: t.vector_search([3.2, 1.0], columns=["k"], limit=3),
         ]
         for read in reads:
-            jobs, got = _jobs(t.spark, read)
+            jobs, got = spark_jobs(read)
             assert jobs == 0
             with monkeypatch.context() as m:
                 m.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
-                jobs_s, via_spark = _jobs(t.spark, read)
+                jobs_s, via_spark = spark_jobs(read)
             assert jobs_s == 1
             assert got.equals(via_spark)
         assert got["k"].to_pylist() == [3, 2, 5]

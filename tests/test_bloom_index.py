@@ -121,6 +121,27 @@ def test_point_lookup_prunes_to_one_file(clean_schema):
         assert got.column("v").to_pylist() == ["s1234"]
 
 
+def test_index_under_a_quoted_path(spark, tmp_path):
+    """Spark percent-encodes a space or ``%`` in ``_metadata.file_path``:
+    the sidecar must still key each file by its plain path, or the file
+    reads as unindexed and gets an all-zero bitmap that prunes it."""
+    import vastdb_sdk_spark as vastdb
+
+    session = vastdb.connect(str(tmp_path / "ws p%20q"), spark=spark)
+    session.create_bucket("bkt")
+    with session.transaction() as tx:
+        tx.bucket("bkt").create_schema("s")
+    _multi_file_table(session, n_files=2, rows_per=10)
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        t.build_column_index("id")
+    with session.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").table("t")
+        assert t.prune_preview(D.id == 12) == {"total_files": 2, "candidate_files": 1}
+        got = t.select(columns=["v"], predicate=(D.id == 12)).read_all()
+        assert got.column("v").to_pylist() == ["s12"]
+
+
 def test_vacuum_keeps_live_sidecars(clean_schema):
     """A column index's sidecar dir is referenced as a whole: vacuum
     deletes none of its files, so the index keeps pruning."""

@@ -220,20 +220,7 @@ def test_dv_literal_route_select_splits(session, tmp_path, monkeypatch):
     assert via_literal["k"].to_pylist() == expect["k"]
 
 
-def _jobs(spark, action):
-    """Number of Spark jobs ``action()`` runs."""
-    sc = spark.sparkContext
-    group = f"dv-jobs-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_dv_literal_route_runs_one_job(session, monkeypatch):
+def test_dv_literal_route_runs_one_job(session, monkeypatch, spark_jobs):
     name = _mk(session, "s_dv_jobs")
     with session.transaction() as tx:
         t = tx.bucket("b").schema(name).table("t")
@@ -241,18 +228,18 @@ def test_dv_literal_route_runs_one_job(session, monkeypatch):
         def read():
             return t.select_df(predicate=t["k"] < 260).toArrow().sort_by("k")
 
-        assert _jobs(t.spark, read) == 1  # before any DV
+        assert spark_jobs(read)[0] == 1  # before any DV
         t.delete_where(t["k"].isin([3, 150, 250]))
         assert 0 < t.entry.live_rows < 300
-        assert _jobs(t.spark, read) == 1
+        assert spark_jobs(read)[0] == 1
         want = [k for k in range(260) if k not in (3, 150, 250)]
         assert read()["k"].to_pylist() == want
         # select() of the same small read: the driver Arrow route, no job
-        assert _jobs(t.spark, lambda: t.select(predicate=t["k"] < 260).read_all()) == 0
+        assert spark_jobs(lambda: t.select(predicate=t["k"] < 260).read_all())[0] == 0
         assert t.select(predicate=t["k"] < 260).read_all().sort_by("k")["k"].to_pylist() == want
         # below the DV row count: the anti-join fallback
         monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 2)
-        assert _jobs(t.spark, read) > 1
+        assert spark_jobs(read)[0] > 1
         assert read()["k"].to_pylist() == want
 
 
@@ -422,10 +409,12 @@ def _route_state(session, name):
 def test_small_dv_statement_route_matches_spark_writes(
     spark, tmp_path, monkeypatch, stmt, case
 ):
-    """A statement masking at most DV_LITERAL_MAX_ROWS rows writes its
-    sidecars and replacement rows from one collect on the driver; the
-    bound at 0 forces every statement onto the Spark writes. Both give
-    the same table."""
+    """With the Arrow route off (ARROW_READ_MAX_ROWS at 0), a statement
+    masking at most DV_LITERAL_MAX_ROWS rows writes its sidecars and
+    replacement rows from one collect on the driver; that bound at 0
+    forces every statement onto the Spark writes. Both give the same
+    table."""
+    monkeypatch.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
     session, name, expect = _route_table(spark, tmp_path / "driver", case, stmt)
     with monkeypatch.context() as m:
         m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
@@ -456,57 +445,170 @@ def test_small_dv_statement_route_matches_spark_writes(
         assert [v[k] for k in keys] == [-9.0] * len(keys)
 
 
-def test_small_dv_statements_run_one_job(session, monkeypatch):
-    """Below DV_LITERAL_MAX_ROWS each statement is one Spark job: the
-    collect of its matched rows. With the bound below the match count the
-    Spark writes run too, to the same rows."""
+# ---------------------------------------------------------------------------
+# the Arrow route: statements and compaction read on the driver
+
+
+def _many(session, tmp_path):
+    """One 5000-row file: 1200 matches pass DV_LITERAL_MAX_ROWS and stay
+    under DV_REWRITE_FRACTION."""
+    return _mk(session, "s_many", n_files=1, rows_per_file=5000), {}
+
+
+_ARROW_CASES = {**_DV_CASES, "many": _many}
+
+# name -> (case, statement): every statement over every DV case, then
+# more than DV_LITERAL_MAX_ROWS matches, delete's heavy route, a DV fold
+# and a compaction into two files
+_ARROW_STMTS = {
+    **{
+        f"{stmt}-{case}": (case, lambda t, s=stmt, c=case: _DV_STMTS[s](t, _DV_STMT_KEYS[c]))
+        for stmt in _DV_STMTS
+        for case in _DV_CASES
+    },
+    "delete_where-many": ("many", lambda t: t.delete_where(t["k"] < 1200)),
+    "update_where-many": ("many", lambda t: t.update_where(t["k"] < 1200, {"v": -9.0})),
+    "delete-heavy": (
+        "multi_file",
+        lambda t: t.delete(pa.table({"$row_id": _ids_of(t, [*range(60), 260])})),
+    ),
+    "fold": ("multi_file", lambda t: t.delete_where(t["k"] < 40)),
+    "compact": ("multi_file", lambda t: t.compact(target_file_rows=150)),
+}
+
+
+def _no_df(*_args, **_kwargs):
+    raise AssertionError("Table.df() called on the Arrow route")
+
+
+def _arrow_route_run(spark, root, key, monkeypatch, spark_jobs, arrow):
+    """State of a fresh warehouse under ``root`` after statement ``key``,
+    and the Spark jobs the statement ran: on the Arrow route with df()
+    disabled, or with ARROW_READ_MAX_ROWS at 0."""
+    case, stmt = _ARROW_STMTS[key]
+    session = vastdb.connect(str(root), spark=spark)
+    session.create_bucket("b")
+    name, _expect = _ARROW_CASES[case](session, root)
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        with monkeypatch.context() as m:
+            if arrow:
+                m.setattr(table_mod.Table, "df", _no_df)
+            else:
+                m.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
+            jobs, _ = spark_jobs(lambda: stmt(t))
+    return _route_state(session, name), jobs
+
+
+@pytest.mark.parametrize("key", sorted(_ARROW_STMTS))
+def test_arrow_route_matches_spark(spark, tmp_path, monkeypatch, spark_jobs, key):
+    """A statement or compaction whose files _arrow_scan accepts runs no
+    Spark job and leaves the same rows, ``$row_id``s, per-file DV counts
+    and audit details as with ARROW_READ_MAX_ROWS at 0."""
+    arrow, jobs = _arrow_route_run(spark, tmp_path / "arrow", key, monkeypatch, spark_jobs, True)
+    via_spark, jobs_s = _arrow_route_run(
+        spark, tmp_path / "spark", key, monkeypatch, spark_jobs, False
+    )
+    assert (jobs, jobs_s > 0) == (0, True)
+    assert arrow.pop("rows").equals(via_spark.pop("rows"))
+    # the driver writes one replacement file per statement, Spark one per
+    # task; compaction keeps its file count on both
+    data_files, data_files_s = arrow.pop("data_files"), via_spark.pop("data_files")
+    assert data_files == data_files_s == 2 if key == "compact" else data_files <= data_files_s
+    assert arrow == via_spark
+
+
+def test_small_dv_statement_job_counts(session, monkeypatch, spark_jobs):
+    """Each small statement runs no Spark job: its matched rows are read
+    on the driver. With ARROW_READ_MAX_ROWS at 0 it is one job, the
+    collect of its matched rows; with DV_LITERAL_MAX_ROWS also below the
+    match count the Spark writes run too. All three leave the same rows."""
 
     def run(name):
         _mk(session, name)
         jobs = {}
         with session.transaction() as tx:
             t = tx.bucket("b").schema(name).table("t")
-            jobs["update_where"] = _jobs(
-                t.spark, lambda: t.update_where(t["k"].isin([5, 105, 205]), {"v": -1.0})
+            jobs["update_where"], _ = spark_jobs(
+                lambda: t.update_where(t["k"].isin([5, 105, 205]), {"v": -1.0})
             )
-            jobs["delete_where"] = _jobs(
-                t.spark, lambda: t.delete_where(t["k"].isin([6, 106, 206]))
+            jobs["delete_where"], _ = spark_jobs(
+                lambda: t.delete_where(t["k"].isin([6, 106, 206]))
             )
             ids = _ids_of(t, [7, 107, 207])  # known before the statement
-            jobs["update"] = _jobs(
-                t.spark, lambda: t.update(pa.table({"$row_id": ids, "v": [-2.0] * 3}))
+            jobs["update"], _ = spark_jobs(
+                lambda: t.update(pa.table({"$row_id": ids, "v": [-2.0] * 3}))
             )
             # outside the replacement files' row-id ranges: a delete whose
             # ids may fill a small file rewrites it (delete's heavy route)
             ids = _ids_of(t, [1, 2, 299])
-            jobs["delete"] = _jobs(t.spark, lambda: t.delete(pa.table({"$row_id": ids})))
+            jobs["delete"], _ = spark_jobs(lambda: t.delete(pa.table({"$row_id": ids})))
         with session.transaction() as tx:
             rows, _count, _plan = _dv_state(tx.bucket("b").schema(name).table("t"))
-        return jobs, rows
+        return jobs, rows.select(["k", "v"])
 
-    jobs, rows = run("s_jobs_driver")
-    assert jobs == dict.fromkeys(jobs, 1)
+    jobs, rows = run("s_jobs_arrow")
+    assert jobs == dict.fromkeys(jobs, 0)
     with monkeypatch.context() as m:
+        m.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
+        jobs_c, rows_c = run("s_jobs_driver")
         m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 2)
         jobs_s, rows_s = run("s_jobs_spark")
+    assert jobs_c == dict.fromkeys(jobs_c, 1)
     assert all(n > 1 for n in jobs_s.values()), jobs_s
-    assert rows.select(["k", "v"]).equals(rows_s.select(["k", "v"]))
+    assert rows.equals(rows_c) and rows.equals(rows_s)
     v = dict(zip(rows["k"].to_pylist(), rows["v"].to_pylist()))
     assert [v[k] for k in (5, 105, 205, 7, 107, 207)] == [-1.0] * 3 + [-2.0] * 3
     assert not {6, 106, 206, 1, 2, 299} & set(v)
 
 
-def test_delete_keeps_sparse_replacement_file(session):
+@pytest.mark.parametrize("route", ["arrow", "driver", "spark"])
+def test_dv_statements_under_a_quoted_path(spark, tmp_path, monkeypatch, route):
+    """Spark's ``_metadata.file_path`` percent-encodes a space or ``%`` in
+    the warehouse path: DV sidecars, the ``$row_id`` map and the source
+    file of both write routes must key files the same way, so both read
+    routes find their rows."""
+    session = vastdb.connect(str(tmp_path / "ws p%20q" / "wh"), spark=spark)
+    session.create_bucket("b")
+    name = _mk(session, "s_quoted", n_files=2, rows_per_file=10)
+    with monkeypatch.context() as m:
+        if route != "arrow":
+            m.setattr(table_mod, "ARROW_READ_MAX_ROWS", 0)
+        if route == "spark":
+            m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+        with session.transaction() as tx:
+            t = tx.bucket("b").schema(name).table("t")
+            t.delete_where(t["k"].isin([1, 14]))
+            t.update_where(t["k"].isin([2, 12]), {"v": -1.0})
+    with session.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        assert sum(fe.dv_rows for fe in t.entry.files) == 4
+        want = [k for k in range(20) if k not in (1, 14)]
+        via_arrow = t.select(internal_row_id=True).read_all().sort_by("k")
+        reads = [t.select_df(internal_row_id=True).toArrow().sort_by("k")]
+        monkeypatch.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)  # the anti-join
+        reads.append(t.select_df(internal_row_id=True).toArrow().sort_by("k"))
+    assert via_arrow["k"].to_pylist() == want
+    v = dict(zip(want, via_arrow["v"].to_pylist()))
+    assert v[2] == v[12] == -1.0 and v[3] == 3.0
+    for rows in reads:
+        assert rows["k"].to_pylist() == want
+        assert rows["v"].to_pylist() == via_arrow["v"].to_pylist()
+        assert rows["$row_id"].to_pylist() == via_arrow["$row_id"].to_pylist()
+
+
+def test_delete_keeps_sparse_replacement_file(session, spark_jobs):
     """A replacement file's row-id range can be far wider than its rows:
     ids inside the range are not its matches, so ``delete`` of other ids
-    takes the DV route (one Spark job) and leaves the file alone."""
+    takes the DV route (on the driver: no Spark job) and leaves the file
+    alone."""
     name = _mk(session, "s_sparse_delete")
     with session.transaction() as tx:
         t = tx.bucket("b").schema(name).table("t")
         t.update_where(t["k"].isin([5, 105, 205]), {"v": -1.0})
         (repl,) = [fe.path for fe in t.entry.files if fe.has_physical_row_id]
         ids = _ids_of(t, [8, 108, 208])
-        assert _jobs(t.spark, lambda: t.delete(pa.table({"$row_id": ids}))) == 1
+        assert spark_jobs(lambda: t.delete(pa.table({"$row_id": ids})))[0] == 0
         assert repl in [fe.path for fe in t.entry.files]
         ks = set(t.select(columns=["k"]).read_all()["k"].to_pylist())
         assert ks == set(range(300)) - {8, 108, 208}

@@ -647,18 +647,26 @@ def validate_predicate(pred: Expr, schema: pa.Schema) -> None:
             _validate_path(schema, node.path)
 
 
+def check_predicate(pred: Any, schema: pa.Schema | None = None) -> None:
+    """Raise what :func:`to_spark_predicate` raises for ``pred`` without
+    building a Column: an unsupported type, or (given ``schema``) a
+    column path the schema lacks."""
+    if isinstance(pred, Expr):
+        if schema is not None:
+            validate_predicate(pred, schema)
+    elif not (pred is None or isinstance(pred, (bool, Column))):
+        raise InvalidArgument(f"unsupported predicate type: {type(pred)!r}")
+
+
 def to_spark_predicate(pred: Any, schema: pa.Schema | None = None) -> Column | None:
     """Compile a predicate (our DSL, bool shortcut, or Spark Column) to a
     Spark Column. ``True`` -> no filter (None), ``False`` -> lit(False)
     (reference shortcut: vastdb/table.py:485-489)."""
+    check_predicate(pred, schema)
     if pred is None or pred is True:
         return None
     if pred is False:
         return F.lit(False)
     if isinstance(pred, Column):
         return pred
-    if isinstance(pred, Expr):
-        if schema is not None:
-            validate_predicate(pred, schema)
-        return pred.to_spark()
-    raise InvalidArgument(f"unsupported predicate type: {type(pred)!r}")
+    return pred.to_spark()

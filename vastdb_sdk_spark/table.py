@@ -66,7 +66,14 @@ from .errors import (
     ProjectionExists,
     ViewExists,
 )
-from .expr import Expr, quote_ident, sql_literal, to_spark_predicate, validate_predicate
+from .expr import (
+    Expr,
+    check_predicate,
+    quote_ident,
+    sql_literal,
+    to_spark_predicate,
+    validate_predicate,
+)
 from .types import (
     arrow_schema_to_spark,
     arrow_type_to_spark,
@@ -202,7 +209,9 @@ def _meta_col_stats(meta, stat_cols: list[str], cmap: dict | None = None) -> dic
                 break
             mins.append(st.min)
             maxs.append(st.max)
-        if mins:
+        # Spark's writer puts NaN in a float range (Double.compare order),
+        # which no pruning comparison can use: record no range
+        if mins and not any(isinstance(v, float) and math.isnan(v) for v in mins + maxs):
             lo = _json_scalar_value(min(mins))
             hi = _json_scalar_value(max(maxs))
             if lo is not None and hi is not None:
@@ -542,10 +551,9 @@ class Table:
                 if has_phys_rid:
                     sel.append(f"{quote_ident(PHYSICAL_ROW_ID)} AS {rid_q}")
                 elif len(fes) <= RID_LITERAL_MAP_MAX_FILES:
-                    # keyed by full file path — basenames may collide across
-                    # directories (e.g. zero-copy imports named alike).
-                    # Spark's _metadata.file_path uses Hadoop's "file:/abs"
-                    # form (single slash), not RFC-8089 file:///
+                    # keyed by full file path (_spark_path) — basenames
+                    # may collide across directories (e.g. zero-copy
+                    # imports named alike).
                     #
                     # literal map lookup: zero extra Spark jobs. The
                     # broadcast-join alternative costs ~0.5 s of fixed
@@ -557,7 +565,7 @@ class Table:
                     # per row, so this path is bounded to small file
                     # counts; larger scans take the join below.
                     kv = ", ".join(
-                        sql_literal("file:" + os.path.abspath(fe.path))
+                        sql_literal(_spark_path(fe.path))
                         + ", " + sql_literal(fe.row_id_base)
                         for fe in fes
                     )
@@ -584,10 +592,7 @@ class Table:
                 sel.append("_metadata.row_index AS __row_index")
             df = df.selectExpr(*sel)
             if rid_join:
-                base_map = [
-                    ("file:" + os.path.abspath(fe.path), fe.row_id_base)
-                    for fe in fes
-                ]
+                base_map = [(_spark_path(fe.path), fe.row_id_base) for fe in fes]
                 base_df = self.spark.createDataFrame(
                     base_map, "__file_path STRING, __rid_base LONG"
                 )
@@ -974,15 +979,18 @@ class Table:
         *,
         internal_row_id: bool = False,
         limit_rows: int | None = None,
+        with_file_path: bool = False,
+        row_ids: pa.Array | None = None,
     ) -> Callable[[], pa.Table] | None:
         """The driver-side Arrow route of a small read: a function that
-        returns the rows of ``columns`` (default all, then ``$row_id`` if
-        asked) with their storage types and no Spark job, or None where the
-        read keeps the Spark route: a predicate that is not an Expr or has
-        no exact Arrow twin (Expr.to_arrow), chosen files holding more than
-        ARROW_READ_MAX_ROWS rows or more than DV_LITERAL_MAX_ROWS
-        deletion-vector rows, or a partition value pyarrow does not type
-        as Spark's cast does.
+        returns the rows of ``columns`` (default all, then ``$row_id`` and
+        df()'s ``__source_file`` if asked; only those whose ``$row_id`` is
+        in ``row_ids`` if given) with their storage types and no Spark
+        job, or None where the read keeps the Spark route: a predicate
+        that is not an Expr or has no exact Arrow twin (Expr.to_arrow),
+        chosen files holding more than ARROW_READ_MAX_ROWS rows or more
+        than DV_LITERAL_MAX_ROWS deletion-vector rows, or a partition
+        value pyarrow does not type as Spark's cast does.
 
         It reads what df() reads: ``files`` (from :meth:`_scan_files`)
         with ``types``, in df()'s file groups (:func:`_read_arrow_group`).
@@ -1013,7 +1021,7 @@ class Table:
             consts = {}
             for logical, value in part_items:
                 if logical in storage.names:
-                    const = _partition_scalar(value, storage.field(logical).type)
+                    const = _literal_scalar(value, storage.field(logical).type)
                     if const is None:
                         return None
                     consts[logical] = const
@@ -1027,6 +1035,7 @@ class Table:
         out = pa.schema(
             [pa.field(n, storage.field(n).type) for n in names]
             + ([pa.field(INTERNAL_ROW_ID, pa.int64())] if internal_row_id else [])
+            + ([pa.field("__source_file", pa.string())] if with_file_path else [])
         )
 
         def read() -> pa.Table:
@@ -1035,7 +1044,7 @@ class Table:
                 if left == 0:
                     break
                 part = _read_arrow_group(
-                    fes, has_phys_rid, file_cols, consts, storage, out, predicate, left
+                    fes, has_phys_rid, file_cols, consts, storage, out, predicate, left, row_ids
                 )
                 parts.append(part)
                 left = None if left is None else left - part.num_rows
@@ -1120,14 +1129,21 @@ class Table:
         return written
 
     def _arrow_col_stats(self, tbl: pa.Table, stat_cols: list[str]) -> dict:
+        """Per-file [min, max] of ``stat_cols`` in ``tbl``. A float column
+        holding NaN gets none: min_max leaves NaN out, and a range without
+        it would prune the NaN rows that Spark's ordering puts above every
+        value (the manifest twin of :func:`_nan_safe_statistics`)."""
         import pyarrow.compute as pc
 
         out = {}
         for col in stat_cols:
             if col not in tbl.schema.names:
                 continue
+            values = tbl.column(col)
+            if pa.types.is_floating(values.type) and pc.any(pc.is_nan(values)).as_py():
+                continue
             try:
-                mm = pc.min_max(tbl.column(col)).as_py()
+                mm = pc.min_max(values).as_py()
             except pa.ArrowNotImplementedError:
                 continue
             lo, hi = _json_scalar_value(mm["min"]), _json_scalar_value(mm["max"])
@@ -1239,8 +1255,8 @@ class Table:
         """Stage ``rows`` (logical columns) as one driver-written file in
         the physical storage schema with ``ids`` as its physical row id,
         registered with its row-id range and column stats: insert with
-        external row ids, and the replacement rows of a DV statement on
-        the driver route (the twin of _rewrite_files)."""
+        external row ids, the replacement rows of a DV statement on the
+        driver route, and the Arrow tables of _rewrite_files."""
         import pyarrow.compute as pc
 
         pmap = self._physical_map()
@@ -1318,16 +1334,33 @@ class Table:
 
     # -- update / delete by row id (reference: vastdb/table.py:779-843) ---
     def _rewrite_files(
-        self, entry: TableEntry, affected: list[FileEntry], new_df: DataFrame, op: str
+        self,
+        entry: TableEntry,
+        affected: list[FileEntry],
+        new: DataFrame | pa.Table,
+        op: str,
+        parts: int | None = None,
     ) -> None:
-        """Replace ``affected`` files with the rows of ``new_df`` (must carry
-        logical columns + $row_id). Written files get a physical row id."""
+        """Replace ``affected`` files with the rows of ``new`` (must carry
+        logical columns + $row_id), written with a physical row id: a Spark
+        frame from executors (``repartition(parts)`` if given), an Arrow
+        table on the driver, in ``parts`` (default 1) files of near-equal
+        row counts by _write_rows_with_ids."""
+        gone = {a.path for a in affected}
+        if isinstance(new, pa.Table):
+            entry.files = [f for f in entry.files if f.path not in gone]
+            step = max(1, -(-new.num_rows // (parts or 1)))
+            for start in range(0, new.num_rows, step):
+                part = new.slice(start, step)
+                self._write_rows_with_ids(entry, part, part.column(INTERNAL_ROW_ID))
+            return
         pmap = self._physical_map()
         arrow = self.arrow_schema
         cols = [F.col(f.name).alias(pmap.get(f.name, f.name)) for f in arrow]
         cols.append(F.col(INTERNAL_ROW_ID).cast("long").alias(PHYSICAL_ROW_ID))
-        written = self._staged_write(new_df.select(*cols), op)
-        gone = {a.path for a in affected}
+        if parts:
+            new = new.repartition(parts)
+        written = self._staged_write(new.select(*cols), op)
         entry.files = [f for f in entry.files if f.path not in gone]
         stat_cols = self._stat_columns(entry)
         cmap = {pmap.get(c, c): c for c in stat_cols}
@@ -1383,12 +1416,14 @@ class Table:
     ) -> None:
         """Update rows keyed by ``$row_id`` (reference: vastdb/table.py:779-817).
 
-        Up to DV_LITERAL_MAX_ROWS ids, one literal ``$row_id IN (...)``
-        filter selects the rows, one collect brings them to the driver,
-        the new values are applied there in Arrow and the DV sidecars and
-        replacement file are written with pyarrow: one Spark job. More ids
-        are staged as a parquet file and broadcast-joined, and both writes
-        run on executors."""
+        When _arrow_scan accepts the affected files they are read on the
+        driver, the rows of the ids picked there, and the new values
+        applied in Arrow: no Spark job. Otherwise, up to
+        DV_LITERAL_MAX_ROWS ids, one literal ``$row_id IN (...)`` filter
+        selects the rows and one collect brings them to the driver: one
+        Spark job. Either way the DV sidecars and replacement file are
+        written with pyarrow. More ids are staged as a parquet file and
+        broadcast-joined, and both writes run on executors."""
         if isinstance(rows, pa.RecordBatch):
             rows = pa.Table.from_batches([rows])
         if INTERNAL_ROW_ID not in rows.schema.names:
@@ -1404,6 +1439,18 @@ class Table:
         # merge-on-read: DV-mask the old row versions and append ONLY the
         # replacement rows (same row ids) as a new file — cost is
         # proportional to matched rows, never to the size of touched files
+        def edit(got: pa.Table) -> pa.Table:
+            return self._with_new_values(got, rows, upd_cols)
+
+        read = self._arrow_scan(
+            affected, self.arrow_schema, None, None,
+            internal_row_id=True, with_file_path=True, row_ids=pa.array(ids, pa.int64()),
+        )
+        if read is not None:
+            self._apply_dv_dml(
+                entry, "update", affected, read(), rewrite_masked=True, edit=edit, rows=len(ids)
+            )
+            return
         base_df = self.df(
             internal_row_id=True, files=affected, with_file_path=True
         )
@@ -1412,9 +1459,7 @@ class Table:
             # collected once; the new values are applied to them in Arrow
             self._apply_dv_dml(
                 entry, "update", affected, base_df.filter(_rid_in_sql(ids)),
-                rewrite_masked=True, bounded=True,
-                edit=lambda got: self._with_new_values(got, rows, upd_cols),
-                rows=len(ids),
+                rewrite_masked=True, bounded=True, edit=edit, rows=len(ids),
             )
             return
         upd_df, upd_path = self._rows_to_df(rows)
@@ -1488,7 +1533,7 @@ class Table:
         nothing about the same id in a replacement file written later."""
         import hashlib
 
-        return hashlib.md5(("file:" + os.path.abspath(fe.path)).encode()).hexdigest()
+        return hashlib.md5(_spark_path(fe.path).encode()).hexdigest()
 
     def _write_dvs_distributed(
         self, affected: list[FileEntry], dv_src: DataFrame
@@ -1549,10 +1594,15 @@ class Table:
         ]
         if not heavy:
             return
-        # df() over the updated entries applies the DV filter, so the
+        # a read over the updated entries applies the DV filter, so the
         # rewrite output is exactly the surviving rows (row ids preserved)
-        keep = self.df(internal_row_id=True, files=heavy)
-        self._rewrite_files(entry, heavy, keep, "dvfold")
+        self._rewrite_files(entry, heavy, self._live_rows(heavy), "dvfold")
+
+    def _live_rows(self, files: list[FileEntry]) -> DataFrame | pa.Table:
+        """The live rows of ``files`` with ``$row_id``, for a rewrite:
+        read on the driver when _arrow_scan accepts the files, else df()."""
+        read = self._arrow_scan(files, self.arrow_schema, None, None, internal_row_id=True)
+        return read() if read else self.df(internal_row_id=True, files=files)
 
     def _affected_files(
         self, entry: TableEntry, *, predicate: Any = None, ids: list[int] | None = None
@@ -1579,8 +1629,8 @@ class Table:
         entry: TableEntry,
         op: str,
         affected: list[FileEntry],
-        masked: DataFrame | None,
-        replacement: DataFrame | None = None,
+        masked: DataFrame | pa.Table | None,
+        replacement: DataFrame | pa.Table | None = None,
         *,
         replaces: list[FileEntry] = (),
         changed: bool = False,
@@ -1592,12 +1642,15 @@ class Table:
         """The one commit order of a deletion-vector DML statement:
 
         1. DV-mask the ``masked`` rows (``$row_id``, ``__source_file``) of
-           ``affected``, on one of two routes:
+           ``affected``, on one of three routes:
 
-           - driver: one collect, ``limit(DV_LITERAL_MAX_ROWS + 1)``, that
-             returns at most DV_LITERAL_MAX_ROWS rows is written with
-             pyarrow, one sidecar per owning file — the statement's only
-             Spark job (timings of both routes at DV_LITERAL_MAX_ROWS);
+           - Arrow: an Arrow table, the rows _arrow_scan read on the
+             driver, is written with pyarrow, one sidecar per owning
+             file, whatever its size — no Spark job;
+           - driver: one collect of a frame, ``limit(DV_LITERAL_MAX_ROWS
+             + 1)``, that returns at most DV_LITERAL_MAX_ROWS rows is
+             written the same way — the statement's only Spark job
+             (timings of both routes at DV_LITERAL_MAX_ROWS);
            - Spark: otherwise the probed frame, persisted so the probe's
              work is reused, is written from executors; matched ids never
              reach the driver.
@@ -1609,10 +1662,10 @@ class Table:
            concurrent writer does not conflict;
         3. write the replacement rows, on the route of step 1: with
            ``rewrite_masked`` the ``masked`` frame also carries the new
-           column values and its rows are the new versions (on the driver
-           route after ``edit``); ``replacement`` is a Spark-written frame:
+           column values and its rows are the new versions (on the Arrow
+           and driver routes after ``edit``); ``replacement`` holds
            merge's new versions, or the survivors of ``replaces``
-           (delete's heavy route);
+           (delete's heavy route), written by _rewrite_files;
         4. fold files whose DVs passed DV_REWRITE_FRACTION;
         5. mark sort state, projections and indexes stale;
         6. stage the commit; a callable ``audit`` value is called with the
@@ -1621,14 +1674,16 @@ class Table:
         ``bounded``: a literal id list bounds ``masked`` to at most
         DV_LITERAL_MAX_ROWS rows, so it is collected whole with no limit
         and no cache (update and delete by few ids); ``edit`` needs it."""
-        cached = masked is not None and not bounded
-        if masked is not None and not rewrite_masked:
+        frame = isinstance(masked, DataFrame)
+        cached = frame and not bounded
+        if frame and not rewrite_masked:
             masked = masked.select(INTERNAL_ROW_ID, "__source_file")
         if cached:
             masked = masked.persist()
         try:
-            got = None  # the collected masked rows on the driver route
-            if bounded and masked is not None:
+            # the masked rows on the driver: read there, or collected
+            got = None if frame else masked
+            if bounded and frame:
                 got = masked.toArrow()
             elif cached:
                 got = masked.limit(DV_LITERAL_MAX_ROWS + 1).toArrow()
@@ -1640,11 +1695,10 @@ class Table:
                 n = 0 if masked is None else self._write_dvs_distributed(affected, masked)
             if not (n or replaces or changed):
                 return 0
-            if rewrite_masked and got is not None:
-                new = edit(got) if edit else got
-                self._write_rows_with_ids(entry, new, new.column(INTERNAL_ROW_ID))
-            elif rewrite_masked:
+            if rewrite_masked and got is None:
                 replacement = masked.drop("__source_file")
+            elif rewrite_masked:
+                replacement = edit(got) if edit else got
             if replacement is not None:
                 self._rewrite_files(entry, list(replaces), replacement, op)
         finally:
@@ -1704,12 +1758,30 @@ class Table:
                 heavy.append(fe)
             else:
                 light.append(fe)
-        # which requested ids are live, and in which light file? (Catalyst
-        # prunes the scan to metadata columns). Up to DV_LITERAL_MAX_ROWS
-        # ids a literal filter selects them and the DV route collects the
-        # matches once; more ids go through a broadcast join and their
-        # sidecars are written from executors like delete_where. The fold
-        # re-checks light files on their exact DV counts
+        # which requested ids are live, and in which light file? Read on
+        # the driver when _arrow_scan accepts both file sets (the light
+        # scan reads no data column: physical ids or row positions)
+        import pyarrow.compute as pc
+
+        arrow = self.arrow_schema
+        id_set = pa.array(ids, pa.int64())
+        matched = self._arrow_scan(
+            light, arrow, [], None, internal_row_id=True, with_file_path=True, row_ids=id_set
+        )
+        keep = self._arrow_scan(heavy, arrow, None, None, internal_row_id=True)
+        if matched and keep:
+            keep = keep()
+            keep = keep.filter(pc.invert(pc.is_in(keep[INTERNAL_ROW_ID], value_set=id_set)))
+            self._apply_dv_dml(
+                entry, "delete", light, matched(), keep, replaces=heavy, rows=len(ids)
+            )
+            return
+        # else Spark (Catalyst prunes the scan to metadata columns). Up to
+        # DV_LITERAL_MAX_ROWS ids a literal filter selects them and the DV
+        # route collects the matches once; more ids go through a broadcast
+        # join and their sidecars are written from executors like
+        # delete_where. The fold re-checks light files on their exact DV
+        # counts
         small = len(ids) <= DV_LITERAL_MAX_ROWS
         del_df = del_path = None
         if not small:
@@ -1747,24 +1819,50 @@ class Table:
     def delete_where(self, predicate: Any) -> None:
         """Predicate DELETE (engine extension). Manifest pruning narrows the
         affected files first; matching row ids are written to per-file
-        deletion-vector sidecars — from one driver collect up to
+        deletion-vector sidecars — read on the driver when _arrow_scan
+        accepts the files and the predicate, else from one collect up to
         DV_LITERAL_MAX_ROWS matches, straight from executors
         (hive-partitioned by source file) beyond — so no data file is
         rewritten and only the predicate columns are read. Files whose DV
         grows past DV_REWRITE_FRACTION are folded. The reference only
         offers row-id DML (vastdb/table.py:819-843); this is the 100
         TB-shaped equivalent of ``DELETE FROM t WHERE ...``."""
-        pred = to_spark_predicate(predicate, self.arrow_schema)
-        if pred is None:
-            raise InvalidArgument("delete_where requires a predicate")
+        self._check_dml_predicate(predicate, "delete_where")
         entry = TableEntry.from_json(self.entry.to_json())
         affected = self._affected_files(entry, predicate=predicate)
         if not affected:
             return
-        matching = self.df(
-            internal_row_id=True, files=affected, with_file_path=True
-        ).filter(pred)
-        self._apply_dv_dml(entry, "delete_where", affected, matching)
+        self._apply_dv_dml(
+            entry, "delete_where", affected, self._matched_rows(affected, predicate, [])
+        )
+
+    def _check_dml_predicate(self, predicate: Any, op: str) -> None:
+        """Raise, before any read, what the Spark route raises for a
+        predicate statement's ``predicate``; builds no Spark Column."""
+        check_predicate(predicate, self.arrow_schema)
+        if predicate is None or predicate is True:
+            raise InvalidArgument(f"{op} requires a predicate")
+
+    def _matched_rows(
+        self,
+        affected: list[FileEntry],
+        predicate: Any,
+        columns: list[str] | None,
+        *,
+        arrow: bool = True,
+    ) -> DataFrame | pa.Table:
+        """The rows of ``affected`` matching ``predicate`` — ``columns``
+        (default all), ``$row_id`` and ``__source_file`` — read on the
+        driver when ``arrow`` and _arrow_scan accepts them, else as a
+        Spark frame."""
+        read = arrow and self._arrow_scan(
+            affected, self.arrow_schema, columns, predicate,
+            internal_row_id=True, with_file_path=True,
+        )
+        if read:
+            return read()
+        df = self.df(internal_row_id=True, files=affected, with_file_path=True)
+        return df.filter(to_spark_predicate(predicate, self.arrow_schema))
 
     def dedup_rows(self, columns: list[str] | None = None) -> None:
         """Exact table dedup (engine extension): keep ONE row per distinct
@@ -2284,15 +2382,16 @@ class Table:
         """Predicate UPDATE (engine extension): ``assignments`` maps column
         names to Spark Columns, engine expressions, or literals, applied to
         rows matching ``predicate``. Only files that can contain matches are
-        scanned. At most DV_LITERAL_MAX_ROWS matched rows are collected once
-        and their DV sidecars and replacement file written on the driver
-        (one Spark job); more matches are written from executors."""
-        from .expr import Expr
-
-        pred = to_spark_predicate(predicate, self.arrow_schema)
-        if pred is None:
-            raise InvalidArgument("update_where requires a predicate")
-        bad = [c for c in assignments if c not in self.arrow_schema.names]
+        scanned. When every assignment is a literal that converts exactly
+        to its column's storage type and _arrow_scan accepts the files and
+        the predicate, the matched rows are read and edited on the driver
+        (no Spark job). Otherwise at most DV_LITERAL_MAX_ROWS matched rows
+        are collected once (one Spark job); either way their DV sidecars
+        and replacement file are written on the driver. More matches are
+        written from executors."""
+        self._check_dml_predicate(predicate, "update_where")
+        arrow = self.arrow_schema
+        bad = [c for c in assignments if c not in arrow.names]
         if bad:
             raise InvalidArgument(f"unknown columns in assignments: {bad}")
         entry = TableEntry.from_json(self.entry.to_json())
@@ -2301,27 +2400,34 @@ class Table:
             return
         # merge-on-read (see update()): only matching rows are written as a
         # replacement file; old versions are DV-masked in place
-        base_df = self.df(
-            internal_row_id=True, files=affected, with_file_path=True
-        ).filter(pred)
-        out_cols = []
-        for f in self.arrow_schema:
-            if f.name in assignments:
-                v = assignments[f.name]
-                if isinstance(v, Expr):
-                    v = v.to_spark()
-                elif not isinstance(v, Column):
-                    v = F.lit(v)
-                # match the column's storage type so the rewritten parquet
-                # stays readable under the table's reader schema
-                v = v.cast(arrow_type_to_spark(storage_arrow_type(f.type)))
-                out_cols.append(v.alias(f.name))
-            else:
-                out_cols.append(F.col(f.name))
-        out_cols.append(F.col(INTERNAL_ROW_ID))
-        out_cols.append(F.col("__source_file"))
+        storage = storage_arrow_schema(arrow)
+        values = {c: _literal_scalar(v, storage.field(c).type) for c, v in assignments.items()}
+        got = self._matched_rows(affected, predicate, None, arrow=None not in values.values())
+        if isinstance(got, pa.Table):
+            for c, value in values.items():
+                got = got.set_column(
+                    got.schema.get_field_index(c), c, pa.repeat(value, got.num_rows)
+                )
+        else:
+            out_cols = []
+            for f in arrow:
+                if f.name in assignments:
+                    v = assignments[f.name]
+                    if isinstance(v, Expr):
+                        v = v.to_spark()
+                    elif not isinstance(v, Column):
+                        v = F.lit(v)
+                    # match the column's storage type so the rewritten
+                    # parquet stays readable under the table's reader schema
+                    v = v.cast(arrow_type_to_spark(storage.field(f.name).type))
+                    out_cols.append(v.alias(f.name))
+                else:
+                    out_cols.append(F.col(f.name))
+            out_cols.append(F.col(INTERNAL_ROW_ID))
+            out_cols.append(F.col("__source_file"))
+            got = got.select(*out_cols)
         self._apply_dv_dml(
-            entry, "update_where", affected, base_df.select(*out_cols),
+            entry, "update_where", affected, got,
             rewrite_masked=True, columns=sorted(assignments),
         )
 
@@ -2747,9 +2853,16 @@ class Table:
                         f"import file {path!r} column {f.name!r} has type "
                         f"{f.type}, table expects {want}"
                     )
-            for pcol in part:
+            for pcol, value in part.items():
                 if pcol not in arrow.names:
                     raise InvalidArgument(f"partition column {pcol!r} not in table schema")
+                try:  # the manifest is JSON: fail here, not at commit
+                    json.dumps(value)
+                except TypeError:
+                    raise InvalidArgument(
+                        f"partition column {pcol!r} value {value!r} is not"
+                        f" JSON-serializable ({type(value).__name__})"
+                    ) from None
             nrows = md.metadata.num_rows
             cmap = {f.name: pmap.get(f.name, f.name) for f in md.schema_arrow}
             if all(k == v for k, v in cmap.items()):
@@ -3146,16 +3259,16 @@ class Table:
         smaller than the target are rewritten together with physical row ids
         preserved; large files are left untouched. Returns the number of
         files compacted away. At scale this is the routine maintenance job
-        that keeps task counts proportional to data, not to insert history."""
+        that keeps task counts proportional to data, not to insert history.
+        Files _arrow_scan accepts are read and rewritten on the driver, with
+        no Spark job."""
         entry = TableEntry.from_json(self.entry.to_json())
         small = [f for f in entry.files if f.rows < target_file_rows]
         if len(small) < min_files:
             return 0
-        df = self.df(internal_row_id=True, files=small)
-        total = sum(f.rows for f in small)
-        n_parts = max(1, total // target_file_rows)
+        n_parts = max(1, sum(f.rows for f in small) // target_file_rows)
         before = len(entry.files)
-        self._rewrite_files(entry, small, df.repartition(n_parts), "compact")
+        self._rewrite_files(entry, small, self._live_rows(small), "compact", n_parts)
         if entry.sorting_key:
             self._mark_unsorted(entry)
         self._mutate(entry, "compact", files_in=len(small))
@@ -3459,6 +3572,7 @@ class Table:
         if not want:
             return 0
         keep = [fe for fe in self.entry.files if os.path.abspath(fe.path) in want]
+        abs_of = {_spark_path(p): p for p in want}
         df = self.df(files=keep, with_file_path=True).select(
             F.col("__source_file").alias("__f"),
             F.col(column).alias("__v"),
@@ -3469,9 +3583,9 @@ class Table:
 
             import pandas as pd
 
-            # _metadata.file_path is Hadoop's "file:/abs" form — key the
-            # sidecar by plain absolute path, the form the pruner probes
-            path = os.path.abspath(pdf["__f"].iloc[0].removeprefix("file:"))
+            # key the sidecar by plain absolute path, the form the pruner
+            # probes, not by the scan's _spark_path
+            path = abs_of[pdf["__f"].iloc[0]]
             vals = pdf["__v"].tolist()
             with _w.catch_warnings():
                 _w.simplefilter("ignore")  # cap warning re-raised driver-side
@@ -4648,11 +4762,12 @@ def _file_groups(files: list[FileEntry]) -> dict[tuple, list[FileEntry]]:
     return groups
 
 
-def _partition_scalar(value: Any, dt: pa.DataType) -> pa.Scalar | None:
-    """A partition value as a ``dt`` scalar where pyarrow converts it as
-    df()'s ``CAST(<literal> AS <type>)`` does, else None (the read keeps
-    Spark). Out-of-range values, which Spark's ANSI cast rejects, are
-    None too."""
+def _literal_scalar(value: Any, dt: pa.DataType) -> pa.Scalar | None:
+    """A Python literal — a partition value, an update_where assignment —
+    as a ``dt`` scalar where pyarrow converts it exactly, as Spark's
+    ``CAST(<literal> AS <type>)`` does, else None (the statement keeps
+    Spark). Out-of-range values, which Spark's ANSI cast rejects, and
+    floats that ``dt`` would round are None too."""
     import datetime as _dt
 
     if value is None:
@@ -4669,10 +4784,15 @@ def _partition_scalar(value: Any, dt: pa.DataType) -> pa.Scalar | None:
         ok = pa.types.is_date32(dt)
     else:
         ok = False
+    if not ok:
+        return None
     try:
-        return pa.scalar(value, dt) if ok else None
+        scalar = pa.scalar(value, dt)
     except (pa.ArrowInvalid, OverflowError):
         return None
+    if isinstance(value, float) and value == value and scalar.as_py() != value:
+        return None
+    return scalar
 
 
 _RAW_ROW_ID = "__raw_row_id"
@@ -4687,15 +4807,18 @@ def _read_arrow_group(
     out: pa.Schema,
     predicate: Any,
     limit: int | None,
+    row_ids: pa.Array | None = None,
 ) -> pa.Table:
     """One df() file group read with pyarrow into ``out`` (logical names,
     storage types). One dataset spans the group's files with df()'s
     reader schema, so a column a file lacks reads as null; ``file_cols``
     names each stored column in the files, and partition columns are the
     group's constants ``consts``. The filter and the limit go into the
-    scan. Deletion vectors and ``$row_id`` need each file's raw row id —
-    the physical column, or the parquet row position counted from the
-    footer's row-group offsets — so those groups are read file by file."""
+    scan. Deletion vectors, ``$row_id`` and a ``row_ids`` selection need
+    each file's raw row id — the physical column, or the parquet row
+    position counted from the footer's row-group offsets — so those
+    groups are read file by file, as are reads asking for
+    ``__source_file``, a per-file constant."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
@@ -4707,21 +4830,31 @@ def _read_arrow_group(
     flt = None if predicate is None else predicate.to_arrow(storage, refs)
     cols = list(dict.fromkeys(file_cols[f.name] for f in out if f.name in file_cols))
     dataset = pads.dataset([fe.path for fe in fes], schema=schema, format="parquet")
-    if INTERNAL_ROW_ID in out.names or any(fe.dv_paths for fe in fes):
+    per_row = {INTERNAL_ROW_ID, "__source_file"} & set(out.names)
+    if per_row or row_ids is not None or any(fe.dv_paths for fe in fes):
         pred_cols = predicate.root_columns() if predicate is not None else set()
         read_cols = list(dict.fromkeys(cols + [file_cols[c] for c in pred_cols if c in file_cols]))
 
         def pieces():
             for fe, frag in zip(fes, dataset.get_fragments()):
+                shift = 0 if has_phys_rid else fe.row_id_base
                 masked = _dv_raw_ids(fe)
+                wanted = None if row_ids is None else pc.subtract(row_ids, shift)
                 for got, keep in _raw_id_chunks(frag, has_phys_rid, schema, cols, read_cols, flt):
                     if masked:
                         alive = ~pc.field(_RAW_ROW_ID).isin(masked)
                         keep = alive if keep is None else keep & alive
+                    if wanted is not None:
+                        hit = pc.field(_RAW_ROW_ID).isin(wanted)
+                        keep = hit if keep is None else keep & hit
                     if keep is not None:
                         got = got.filter(keep)
-                    rid = pc.add(got[_RAW_ROW_ID], 0 if has_phys_rid else fe.row_id_base)
-                    yield got.select(cols).append_column(INTERNAL_ROW_ID, rid)
+                    rid = pc.add(got[_RAW_ROW_ID], shift)
+                    got = got.select(cols).append_column(INTERNAL_ROW_ID, rid)
+                    if "__source_file" in per_row:
+                        source = pa.repeat(pa.scalar(_spark_path(fe.path)), got.num_rows)
+                        got = got.append_column("__source_file", source)
+                    yield got
 
         kept, rows = [], 0
         for piece in pieces():
@@ -4739,7 +4872,7 @@ def _read_arrow_group(
     n = tbl.num_rows
     return pa.Table.from_arrays(
         [
-            tbl[INTERNAL_ROW_ID] if f.name == INTERNAL_ROW_ID
+            tbl[f.name] if f.name in per_row
             else pa.chunked_array([pa.repeat(consts[f.name], n)]) if f.name in consts
             else tbl[file_cols[f.name]]
             for f in out
@@ -4780,6 +4913,29 @@ def _dv_raw_ids(fe: FileEntry) -> list[int]:
     )
 
 
+# the characters java.net.URI leaves as they are in a path, besides
+# letters, digits and non-ASCII characters that are neither space nor
+# control characters
+_URI_PATH_KEEP = frozenset("-_.!~*'();:@&=+$,/")
+
+
+def _spark_path(path: str) -> str:
+    """``path`` as Spark's ``_metadata.file_path`` spells it: Hadoop's
+    single-slash ``file:/abs`` URI, each character java.net.URI quotes in
+    a path (space, ``%``, ``#``, ...) percent-encoded as UTF-8. The one
+    key by which DV sidecars, the ``$row_id`` map and the source-file
+    column of both scan routes name a data file."""
+    import urllib.parse
+
+    return "file:" + "".join(
+        ch
+        if ch.isascii() and (ch.isalnum() or ch in _URI_PATH_KEEP)
+        or not ch.isascii() and ch.isprintable() and not ch.isspace()
+        else urllib.parse.quote(ch, safe="")
+        for ch in os.path.abspath(path)
+    )
+
+
 def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
     """SQL condition on a file group's raw scan frame that drops the rows
     masked by the files' deletion vectors, or None when no file has any.
@@ -4787,9 +4943,9 @@ def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
     file's raw row id: the physical column, or the parquet row position
     (id - ``row_id_base``). DVs are file-scoped, so in a group of several
     files a hit on the group's id set is confirmed against the owning
-    file's own ids, keyed by file path (Hadoop's single-slash
-    ``file:/abs`` form). The set probe comes first: a per-row chain of
-    file-path tests made a 64-file read 2x slower than the anti-join."""
+    file's own ids, keyed by file path (:func:`_spark_path`). The set
+    probe comes first: a per-row chain of file-path tests made a 64-file
+    read 2x slower than the anti-join."""
     phys = fes[0].has_physical_row_id  # a group shares its row-id kind
     raw = quote_ident(PHYSICAL_ROW_ID) if phys else "_metadata.row_index"
     whens, group_ids = [], set()
@@ -4798,7 +4954,7 @@ def _dv_keep_sql(fes: list[FileEntry]) -> str | None:
             continue
         ids = _dv_raw_ids(fe)
         group_ids.update(ids)
-        path = sql_literal("file:" + os.path.abspath(fe.path))
+        path = sql_literal(_spark_path(fe.path))
         whens.append(f"WHEN {path} THEN {raw} IN ({', '.join(map(str, ids))})")
     if not whens:
         return None
