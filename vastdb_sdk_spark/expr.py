@@ -300,6 +300,9 @@ class Not(_Unary):
     def to_sql(self) -> str:
         return f"(NOT {self.inner.to_sql()})"
 
+    def __repr__(self) -> str:
+        return f"(not {self.inner!r})"
+
     def _arrow(self, scope):
         return ~_boolean(self.inner, scope), pa.bool_()
 
@@ -307,6 +310,9 @@ class Not(_Unary):
 class IsNull(_Unary):
     def to_sql(self) -> str:
         return f"({self.inner.to_sql()} IS NULL)"
+
+    def __repr__(self) -> str:
+        return f"({self.inner!r} is null)"
 
     def _arrow(self, scope):
         # NaN is not null, in pc.is_null as in Spark
@@ -321,6 +327,9 @@ class Isin(_Unary):
     def to_sql(self) -> str:
         vals = ", ".join(sql_literal(v) for v in self.values)
         return f"({self.inner.to_sql()} IN ({vals}))"
+
+    def __repr__(self) -> str:
+        return f"({self.inner!r} in {self.values!r})"
 
     def _arrow(self, scope):
         expr, dt = self.inner._arrow(scope)
@@ -352,6 +361,9 @@ class StrOp(_Unary):
 
     def to_sql(self) -> str:  # contains / startswith / endswith are SQL functions too
         return f"{self.op}({self.inner.to_sql()}, {sql_literal(self.arg)})"
+
+    def __repr__(self) -> str:
+        return f"{self.op}({self.inner!r}, {self.arg!r})"
 
     def _arrow(self, scope):
         expr, dt = self.inner._arrow(scope)
