@@ -5,6 +5,7 @@ import pytest
 
 import vastdb_sdk_spark as vastdb
 from vastdb_sdk_spark import _ as D
+from vastdb_sdk_spark import table as table_mod
 from vastdb_sdk_spark.config import QueryConfig
 from vastdb_sdk_spark.sources import create_table_from_files
 
@@ -74,11 +75,25 @@ def test_features(session):
     f.check_imports_table()  # no-raise contract
 
 
-def test_spill_streaming_select(clean_schema):
+def _count_spills(monkeypatch) -> list:
+    """Record each select() that takes the spill path."""
+    spills = []
+    spill_reader = table_mod.Table._spill_reader
+
+    def counted(self, *args):
+        spills.append(self.name)
+        return spill_reader(self, *args)
+
+    monkeypatch.setattr(table_mod.Table, "_spill_reader", counted)
+    return spills
+
+
+def test_spill_streaming_select(clean_schema, monkeypatch):
     """Force the spill path with a tiny threshold and verify bounded
     streaming yields identical data and cleans up after itself."""
     import os
 
+    spills = _count_spills(monkeypatch)
     data = pa.table({"a": pa.array(range(1000), pa.int64())})
     with clean_schema.transaction() as tx:
         t = tx.bucket("bkt").schema("s").create_table("t", data.schema)
@@ -86,10 +101,35 @@ def test_spill_streaming_select(clean_schema):
         cfg = QueryConfig(spill_threshold_rows=10, limit_rows_per_sub_split=128)
         reader = t.select(config=cfg)
         got = reader.read_all()
+        assert spills == ["t"]
         assert sorted(got.column("a").to_pylist()) == list(range(1000))
         tmp_root = os.path.join(tx._state("bkt").store.bucket_path, "_tmp")
         leftovers = os.listdir(tmp_root) if os.path.isdir(tmp_root) else []
         assert leftovers == []  # spill dir removed on exhaustion
+        # the estimate is capped by limit_rows: no spill
+        assert t.select(config=cfg, limit_rows=5).read_all().num_rows == 5
+        assert spills == ["t"]
+
+
+def test_spill_projection_split(clean_schema, monkeypatch):
+    """A projection split reads no base file: its spill estimate is the
+    rows of the projection files it scans."""
+    spills = _count_spills(monkeypatch)
+    with clean_schema.transaction() as tx:
+        t = tx.bucket("bkt").schema("s").create_table(
+            "t", pa.schema([("k", pa.int64()), ("v", pa.float64())])
+        )
+        for i in range(2):
+            ks = range(i * 100, i * 100 + 100)
+            t.insert(pa.table({"k": pa.array(ks, pa.int64()), "v": [float(k) for k in ks]}))
+        t.create_projection("by_k", ["k"], ["v"])
+    with clean_schema.transaction() as tx:
+        proj = tx.bucket("bkt").schema("s").table("t").projection("by_k")
+        cfg = QueryConfig(spill_threshold_rows=10)
+        (reader,) = proj.select_splits(config=cfg, num_splits=1)
+        got = reader.read_all()
+        assert spills == ["t"]
+        assert sorted(got["k"].to_pylist()) == list(range(200))
 
 
 # -- metadata handles & accessors (reference: Table.ref/handle/sorted_table/

@@ -389,6 +389,47 @@ def test_nan_sort_key_is_never_pruned(fixed):
         check()
 
 
+def test_imported_float_sort_key_gets_no_range(fixed, tmp_path):
+    """A parquet footer carries no NaN count and pyarrow writers leave NaN
+    out of a float's min/max, so an imported file's float sort key gets no
+    manifest range and ``x > 3`` keeps its NaN row. With Spark's parquet
+    filter pushdown off (the footer's row-group range drops the row there
+    too), the Spark reads keep it as well."""
+    path = str(tmp_path / "nan.parquet")
+    pq.write_table(pa.table({"x": [1.0, 2.0, float("nan")]}), path)
+    with fixed.transaction() as tx:
+        t = tx.bucket("b").create_schema("s_nan_import").create_table(
+            "t", pa.schema([("x", pa.float64())]), sorting_key=["x"]
+        )
+        t.import_files([path])
+        t.insert(pa.table({"x": [5.0, 6.0]}))
+        (imp,) = [fe for fe in t.entry.files if fe.path == path]
+        assert "x" not in imp.col_stats
+        xs = t.select(predicate=D.x > 3).read_all()["x"].to_pylist()
+        assert sorted(x for x in xs if x == x) == [5.0, 6.0] and len(xs) == 3
+        conf, key = t.spark.conf, "spark.sql.parquet.filterPushdown"
+        pushdown = conf.get(key)
+        conf.set(key, "false")
+        try:
+            assert t.count_rows(D.x > 3) == 3
+            assert t.select_df().filter("x > 3").count() == 3
+        finally:
+            conf.set(key, pushdown)
+
+
+def test_driver_written_files_carry_no_arrow_schema_key(fixed):
+    """Every reader passes its own schema, so driver-written data files
+    and DV sidecars leave pyarrow's ``ARROW:schema`` footer key out."""
+    name = _kv_table(fixed, "s_no_arrow_key", files=1)
+    with fixed.transaction() as tx:
+        t = tx.bucket("b").schema(name).table("t")
+        t.update_where(D.k < 3, {"v": -1.0})
+        (repl,) = [fe for fe in t.entry.files if fe.has_physical_row_id]
+        (dv,) = [p for fe in t.entry.files for p in fe.dv_paths]
+    for path in (repl.path, dv):
+        assert b"ARROW:schema" not in (pq.read_metadata(path).metadata or {})
+
+
 def test_import_partitioned_rejects_a_date_value(fixed, tmp_path):
     path = str(tmp_path / "d.parquet")
     pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)

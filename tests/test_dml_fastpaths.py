@@ -22,7 +22,9 @@
   projection, no orphan file);
 - a statement matching at most DV_LITERAL_MAX_ROWS rows writes its DV
   sidecars and replacement rows from one collect on the driver (one
-  Spark job), and leaves the same table as the Spark writes;
+  Spark job), and leaves the same table as the Spark writes; so do
+  ``merge``, ``dedup_rows`` and ``cap_rows_per_group``, which hand the
+  DV writer a frame, on both sides of its probe;
 - ``_rewrite_files`` stays linear in the table's file count.
 """
 
@@ -47,7 +49,7 @@ def session(spark, tmp_path_factory):
     return s
 
 
-def _mk(session, name, n_files=3, rows_per_file=100):
+def _mk(session, name, n_files=3, rows_per_file=100, value=float):
     with session.transaction() as tx:
         sc = tx.bucket("b").create_schema(name)
         t = sc.create_table(
@@ -62,7 +64,7 @@ def _mk(session, name, n_files=3, rows_per_file=100):
                             range(base, base + rows_per_file), pa.int64()
                         ),
                         "v": pa.array(
-                            [float(i) for i in range(base, base + rows_per_file)],
+                            [value(i) for i in range(base, base + rows_per_file)],
                             pa.float64(),
                         ),
                     }
@@ -443,6 +445,63 @@ def test_small_dv_statement_route_matches_spark_writes(
         assert rows["k"].to_pylist() == expect["k"]
         v = dict(zip(rows["k"].to_pylist(), rows["v"].to_pylist()))
         assert [v[k] for k in keys] == [-9.0] * len(keys)
+
+
+def _frame_value(k):
+    """``v`` of row ``k``: every tenth row of the third file repeats a
+    ``v`` of the second, so dedup and the cap mask rows in two files."""
+    return float(k - 100 if k >= 200 and k % 10 == 0 else k)
+
+
+def _merge_all_clauses(t):
+    from pyspark.sql import functions as F
+
+    source = t.spark.createDataFrame(
+        [(5, -1.0), (6, -2.0), (160, -3.0), (1000, 7.0)], "k long, v double"
+    )
+    return t.merge(
+        source, ["k"],
+        matched_clauses=[("delete", F.expr("s.v = -2.0"), None), ("update", None, None)],
+        not_matched_by_source_clauses=[
+            ("update", F.expr("t.k >= 295"), {"v": F.expr("t.v + 0.5")})
+        ],
+        target_alias="t", source_alias="s",
+    )
+
+
+# statements whose matched rows reach the DV writer only as a Spark frame
+_FRAME_STMTS = {
+    "merge": _merge_all_clauses,
+    "dedup_rows": lambda t: t.dedup_rows(["v"]),
+    "cap_rows_per_group": lambda t: t.cap_rows_per_group(["v"], 1),
+}
+
+
+def _frame_route_run(spark, root, stmt):
+    session = vastdb.connect(str(root), spark=spark)
+    session.create_bucket("b")
+    name = _mk(session, "s_frame", value=_frame_value)
+    with session.transaction() as tx:
+        _FRAME_STMTS[stmt](tx.bucket("b").schema(name).table("t"))
+    return _route_state(session, name)
+
+
+@pytest.mark.parametrize("stmt", sorted(_FRAME_STMTS))
+def test_frame_dv_statement_route_matches_spark_writes(spark, tmp_path, monkeypatch, stmt):
+    """A statement that hands the DV writer a frame leaves the same rows,
+    ``$row_id``s, per-file DV rows and audit details whether its masked
+    rows are collected to the driver (at most DV_LITERAL_MAX_ROWS) or
+    written from executors (that bound at 0)."""
+    driver = _frame_route_run(spark, tmp_path / "driver", stmt)
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "DV_LITERAL_MAX_ROWS", 0)
+        via_spark = _frame_route_run(spark, tmp_path / "spark", stmt)
+    assert driver.pop("rows").equals(via_spark.pop("rows"))
+    # the driver writes one sidecar per owning file, Spark one per task
+    assert 0 < driver.pop("dv_files") <= via_spark.pop("dv_files")
+    assert driver == via_spark
+    ops = [op for op, _details in driver["history"]]
+    assert ops[-1] == stmt
 
 
 # ---------------------------------------------------------------------------

@@ -205,22 +205,6 @@ def _state_aggs(aggs: dict[str, list]) -> list:
     return exprs
 
 
-def _state_cols(aggs: dict[str, list]) -> list[str]:
-    cols = ["_mv_count"]
-    for out, (fn, _src) in aggs.items():
-        if fn == "count" and _src is not None:
-            cols.append(f"_mv_nn_{out}")
-        elif fn in ("sum", "avg"):
-            cols += [f"_mv_sum_{out}", f"_mv_nn_{out}"]
-        elif fn == "min":
-            cols.append(f"_mv_min_{out}")
-        elif fn == "max":
-            cols.append(f"_mv_max_{out}")
-        elif fn == "approx_distinct":
-            cols.append(f"_mv_hll_{out}")
-    return cols
-
-
 class MaterializedView:
     """Handle to one materialized aggregate view of a table."""
 

@@ -18,16 +18,6 @@ from ..functions.text import tokens
 from .parallelism import fan_out
 
 
-def _pos_hash(id_col: str, lo: int, hi: int) -> "F.Column":
-    """48-bit integer from md5(doc_id:pos), hex chars [lo, hi) — the same
-    reproducible-randomness device as the minhash md5 path (DuckDB twin:
-    the nibble polynomial of _mh_base_sql)."""
-    key = F.concat(
-        F.col(id_col).cast("string"), F.lit(":"), F.col("__pos").cast("string")
-    )
-    return F.conv(F.substring(F.md5(key), lo, hi - lo), 16, 10).cast("long")
-
-
 def span_corrupt(
     df: DataFrame,
     text_col: str = "text",

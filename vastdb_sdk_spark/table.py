@@ -36,6 +36,7 @@ file metadata. Inserts via Arrow batches write one parquet file per call
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import json
 import math
@@ -227,8 +228,16 @@ def _footer_scan_payload(path: str, stat_cols: list[str]) -> tuple:
     ``(schema_ipc_bytes, num_rows, size_bytes, col_stats_dict)``."""
     md = pq.ParquetFile(path)
     meta = md.metadata
+    schema = md.schema_arrow
+    # a footer carries no NaN count, and pyarrow writers leave NaN out of a
+    # float's min/max: such a range would prune the NaN rows, so a float
+    # column of an imported file gets none
+    stat_cols = [
+        c for c in stat_cols
+        if c not in schema.names or not pa.types.is_floating(schema.field(c).type)
+    ]
     return (
-        md.schema_arrow.serialize().to_pybytes(),
+        schema.serialize().to_pybytes(),
         meta.num_rows,
         os.path.getsize(path),
         _meta_col_stats(meta, stat_cols),
@@ -696,16 +705,11 @@ class Table:
 
         cfg = config or QueryConfig()
         batch_rows = cfg.limit_rows_per_sub_split
-        est_override = self.__dict__.get("_est_rows_override")
-        est_rows = (
-            limit_rows
-            if limit_rows is not None
-            else est_override
-            if est_override is not None
-            else self.entry.num_rows
-        )
-        spill = est_rows > cfg.spill_threshold_rows
         scan = self._scan_files(columns, predicate, cfg, internal_row_id)
+        est_rows = sum(fe.rows for fe in scan[0])
+        if limit_rows is not None:
+            est_rows = min(est_rows, limit_rows)
+        spill = est_rows > cfg.spill_threshold_rows
         read = None if spill else self._arrow_scan(
             *scan, columns, predicate, internal_row_id=internal_row_id, limit_rows=limit_rows
         )
@@ -1275,8 +1279,10 @@ class Table:
 
     def _write_parquet(self, tbl: pa.Table) -> str:
         path = self._state.store.new_data_file(self.schema.name, self.name)
+        # no ARROW:schema footer key: every reader passes its own schema
         pq.write_table(
-            tbl, path, compression="zstd", write_statistics=_nan_safe_statistics(tbl)
+            tbl, path, compression="zstd", write_statistics=_nan_safe_statistics(tbl),
+            store_schema=False,
         )
         return path
 
@@ -1378,52 +1384,44 @@ class Table:
                 col_stats=_meta_col_stats(md, stat_cols, cmap),
             )
 
-    def _rows_to_df(self, rows: pa.RecordBatch | pa.Table) -> tuple[DataFrame, str]:
+    @contextlib.contextmanager
+    def _rows_to_df(self, rows: pa.Table):
         """Client-supplied rows as a Spark frame, PARQUET-BACKED: a
         ``createDataFrame`` LocalRelation re-ships its rows through the
         Python/Arrow conversion on EVERY action that reads it (~0.3 s of
         fixed cost per action, measured r14) while a parquet-backed frame
         with an explicit schema is plain file-scan input. The file is tiny
-        (the caller's id batch), written once on the driver. Returns
-        ``(df, path)`` — the caller removes ``path`` when its DML actions
-        are done."""
-        if isinstance(rows, pa.RecordBatch):
-            rows = pa.Table.from_batches([rows])
-        # normalize $row_id to long for the join
-        names = [
-            "__update_row_id" if c == INTERNAL_ROW_ID else c for c in rows.schema.names
-        ]
-        rows = rows.rename_columns(names)
-        cols = {}
-        for name in rows.schema.names:
-            col = rows.column(name)
-            if name == "__update_row_id":
-                col = col.cast(pa.int64())
-            cols[name] = col
-        rows = pa.table(cols)
+        (the caller's id batch), written once on the driver, with
+        ``$row_id`` renamed ``__update_row_id`` (a long) for the join, and
+        removed when the ``with`` block exits."""
+        rows = rows.rename_columns(
+            ["__update_row_id" if c == INTERNAL_ROW_ID else c for c in rows.column_names]
+        )
+        idx = rows.schema.get_field_index("__update_row_id")
+        rows = rows.set_column(idx, "__update_row_id", rows.column(idx).cast(pa.int64()))
         path = os.path.join(
             self._state.store.table_data_dir(self.schema.name, self.name),
             f"idstage-{os.getpid()}-{time.time_ns()}.parquet",
         )
         pq.write_table(rows, path, compression="zstd")
-        return (
-            self.spark.read.schema(arrow_schema_to_spark(rows.schema)).parquet(path),
-            path,
-        )
+        try:
+            yield self.spark.read.schema(arrow_schema_to_spark(rows.schema)).parquet(path)
+        finally:
+            with contextlib.suppress(OSError):
+                os.remove(path)
 
     def update(
         self, rows: pa.RecordBatch | pa.Table, columns: list[str] | None = None
     ) -> None:
         """Update rows keyed by ``$row_id`` (reference: vastdb/table.py:779-817).
 
-        When _arrow_scan accepts the affected files they are read on the
-        driver, the rows of the ids picked there, and the new values
-        applied in Arrow: no Spark job. Otherwise, up to
-        DV_LITERAL_MAX_ROWS ids, one literal ``$row_id IN (...)`` filter
-        selects the rows and one collect brings them to the driver: one
-        Spark job. Either way the DV sidecars and replacement file are
-        written with pyarrow. More ids are staged as a parquet file and
-        broadcast-joined, and both writes run on executors."""
+        The matched rows come to the driver when _arrow_scan accepts the
+        affected files (no Spark job), or, up to DV_LITERAL_MAX_ROWS ids,
+        from one collect of a literal ``$row_id IN (...)`` filter (one
+        Spark job); the new values are applied to them in Arrow and their
+        DV sidecars and replacement file written with pyarrow. More ids are
+        staged as a parquet file and broadcast-joined, and both writes run
+        on executors."""
         if isinstance(rows, pa.RecordBatch):
             rows = pa.Table.from_batches([rows])
         if INTERNAL_ROW_ID not in rows.schema.names:
@@ -1439,65 +1437,37 @@ class Table:
         # merge-on-read: DV-mask the old row versions and append ONLY the
         # replacement rows (same row ids) as a new file — cost is
         # proportional to matched rows, never to the size of touched files
-        def edit(got: pa.Table) -> pa.Table:
-            return self._with_new_values(got, rows, upd_cols)
-
         read = self._arrow_scan(
             affected, self.arrow_schema, None, None,
             internal_row_id=True, with_file_path=True, row_ids=pa.array(ids, pa.int64()),
         )
         if read is not None:
-            self._apply_dv_dml(
-                entry, "update", affected, read(), rewrite_masked=True, edit=edit, rows=len(ids)
-            )
-            return
-        base_df = self.df(
-            internal_row_id=True, files=affected, with_file_path=True
+            got = read()
+        else:
+            base_df = self.df(internal_row_id=True, files=affected, with_file_path=True)
+            if len(ids) > DV_LITERAL_MAX_ROWS:
+                # replacement rows and DV sidecars are both written from
+                # executors, like update_where — matched row ids never land
+                # on the driver (a 100x-scale batch through this path used
+                # to materialize every id in driver memory)
+                with self._rows_to_df(rows) as upd_df:
+                    joined = base_df.join(
+                        F.broadcast(upd_df),
+                        base_df[INTERNAL_ROW_ID] == upd_df["__update_row_id"],
+                    )
+                    # an update may set a column to NULL: the cast pins the
+                    # storage type even for all-NULL batches
+                    new = joined.select(
+                        *self._assigned_cols({c: upd_df[c] for c in upd_cols}, base_df)
+                    )
+                    self._apply_dv_dml(entry, "update", affected, new, new, rows=len(ids))
+                return
+            # few ids: a literal filter bounds the matched rows, collected once
+            got = base_df.filter(_rid_in_sql(ids)).toArrow()
+        self._apply_dv_dml(
+            entry, "update", affected, got, self._with_new_values(got, rows, upd_cols),
+            rows=len(ids),
         )
-        if len(ids) <= DV_LITERAL_MAX_ROWS:
-            # few ids: a literal filter bounds the matched rows, which are
-            # collected once; the new values are applied to them in Arrow
-            self._apply_dv_dml(
-                entry, "update", affected, base_df.filter(_rid_in_sql(ids)),
-                rewrite_masked=True, bounded=True, edit=edit, rows=len(ids),
-            )
-            return
-        upd_df, upd_path = self._rows_to_df(rows)
-        joined = base_df.join(
-            F.broadcast(upd_df),
-            base_df[INTERNAL_ROW_ID] == upd_df["__update_row_id"],
-            "inner",
-        )
-        out_cols = []
-        for f in self.arrow_schema:
-            # updated columns take the new value verbatim — an update may
-            # legitimately set a column to NULL (cast pins the storage type
-            # even for all-NULL batches)
-            if f.name in upd_cols:
-                out_cols.append(
-                    upd_df[f.name]
-                    .cast(arrow_type_to_spark(storage_arrow_type(f.type)))
-                    .alias(f.name)
-                )
-            else:
-                out_cols.append(base_df[f.name])
-        out_cols.append(base_df[INTERNAL_ROW_ID])
-        out_cols.append(F.col("__source_file"))
-        try:
-            # more than DV_LITERAL_MAX_ROWS matches: replacement rows and
-            # DV sidecars are both written from executors, like
-            # update_where — matched row ids never land on the driver (a
-            # 100x-scale batch through this path used to materialize every
-            # id in driver memory)
-            self._apply_dv_dml(
-                entry, "update", affected, joined.select(*out_cols),
-                rewrite_masked=True, rows=len(ids),
-            )
-        finally:
-            try:
-                os.remove(upd_path)
-            except OSError:
-                pass
 
     def _with_new_values(
         self, got: pa.Table, rows: pa.Table, upd_cols: list[str]
@@ -1514,6 +1484,8 @@ class Table:
             js = where.get(rid, [])
             left += [i] * len(js)
             right += js
+        # typed indices: an empty list would be a null array, which take rejects
+        left, right = pa.array(left, pa.int64()), pa.array(right, pa.int64())
         out = got.take(left)
         for f in self.arrow_schema:
             if f.name in upd_cols:
@@ -1634,76 +1606,56 @@ class Table:
         *,
         replaces: list[FileEntry] = (),
         changed: bool = False,
-        rewrite_masked: bool = False,
-        bounded: bool = False,
-        edit: Callable[[pa.Table], pa.Table] | None = None,
         **audit,
     ) -> int:
         """The one commit order of a deletion-vector DML statement:
 
         1. DV-mask the ``masked`` rows (``$row_id``, ``__source_file``) of
-           ``affected``, on one of three routes:
+           ``affected``. They come in one of two kinds, and the caller's
+           read decides which:
 
-           - Arrow: an Arrow table, the rows _arrow_scan read on the
-             driver, is written with pyarrow, one sidecar per owning
-             file, whatever its size — no Spark job;
-           - driver: one collect of a frame, ``limit(DV_LITERAL_MAX_ROWS
-             + 1)``, that returns at most DV_LITERAL_MAX_ROWS rows is
-             written the same way — the statement's only Spark job
-             (timings of both routes at DV_LITERAL_MAX_ROWS);
-           - Spark: otherwise the probed frame, persisted so the probe's
-             work is reused, is written from executors; matched ids never
-             reach the driver.
+           - an Arrow table, rows already on the driver, is written with
+             pyarrow, one sidecar per owning file;
+           - a frame is persisted and probed once with
+             ``limit(DV_LITERAL_MAX_ROWS + 1)``: at most
+             DV_LITERAL_MAX_ROWS rows back are written as driver rows the
+             same way, otherwise the frame is written from executors and
+             matched ids never reach the driver.
 
            The masked-row count is the match detector (no pre-count job);
         2. nothing masked, nothing in ``replaces`` and nothing ``changed``
            earlier in the statement (merge's inserts): a TRUE no-op — no
            manifest change or audit event, nothing goes stale, and a
            concurrent writer does not conflict;
-        3. write the replacement rows, on the route of step 1: with
-           ``rewrite_masked`` the ``masked`` frame also carries the new
-           column values and its rows are the new versions (on the Arrow
-           and driver routes after ``edit``); ``replacement`` holds
-           merge's new versions, or the survivors of ``replaces``
-           (delete's heavy route), written by _rewrite_files;
+        3. write ``replacement`` (logical columns and ``$row_id``; other
+           columns are dropped) in place of ``replaces`` with
+           _rewrite_files. A caller whose masked frame also holds the new
+           row versions (update_where, update's join) passes the same
+           object twice, and they are written in the form the masked rows
+           took;
         4. fold files whose DVs passed DV_REWRITE_FRACTION;
         5. mark sort state, projections and indexes stale;
         6. stage the commit; a callable ``audit`` value is called with the
-           masked-row count, which is also the return value.
-
-        ``bounded``: a literal id list bounds ``masked`` to at most
-        DV_LITERAL_MAX_ROWS rows, so it is collected whole with no limit
-        and no cache (update and delete by few ids); ``edit`` needs it."""
-        frame = isinstance(masked, DataFrame)
-        cached = frame and not bounded
-        if frame and not rewrite_masked:
-            masked = masked.select(INTERNAL_ROW_ID, "__source_file")
-        if cached:
-            masked = masked.persist()
+           masked-row count, which is also the return value."""
+        same = replacement is masked
+        cached = masked.persist() if isinstance(masked, DataFrame) else None
         try:
-            # the masked rows on the driver: read there, or collected
-            got = None if frame else masked
-            if bounded and frame:
-                got = masked.toArrow()
-            elif cached:
-                got = masked.limit(DV_LITERAL_MAX_ROWS + 1).toArrow()
-                if got.num_rows > DV_LITERAL_MAX_ROWS:
-                    got = None
-            if got is not None:
-                n = self._write_dvs_collected(affected, got)
+            if cached is not None:
+                got = cached.limit(DV_LITERAL_MAX_ROWS + 1).toArrow()
+                masked = got if got.num_rows <= DV_LITERAL_MAX_ROWS else cached
+            if same:
+                replacement = masked
+            if isinstance(masked, pa.Table):
+                n = self._write_dvs_collected(affected, masked)
             else:
                 n = 0 if masked is None else self._write_dvs_distributed(affected, masked)
             if not (n or replaces or changed):
                 return 0
-            if rewrite_masked and got is None:
-                replacement = masked.drop("__source_file")
-            elif rewrite_masked:
-                replacement = edit(got) if edit else got
             if replacement is not None:
                 self._rewrite_files(entry, list(replaces), replacement, op)
         finally:
-            if cached:
-                masked.unpersist()
+            if cached is not None:
+                cached.unpersist()
         self._fold_heavy_dvs(entry, affected)
         self._mark_unsorted(entry)
         self._mutate(
@@ -1777,44 +1729,39 @@ class Table:
             )
             return
         # else Spark (Catalyst prunes the scan to metadata columns). Up to
-        # DV_LITERAL_MAX_ROWS ids a literal filter selects them and the DV
-        # route collects the matches once; more ids go through a broadcast
+        # DV_LITERAL_MAX_ROWS ids a literal filter selects them and the
+        # light matches are collected once; more ids go through a broadcast
         # join and their sidecars are written from executors like
         # delete_where. The fold re-checks light files on their exact DV
         # counts
         small = len(ids) <= DV_LITERAL_MAX_ROWS
-        del_df = del_path = None
-        if not small:
-            del_df, del_path = self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+        cond = _rid_in_sql(ids) if small else None
+        staged = (
+            contextlib.nullcontext() if small else self._rows_to_df(rows.select([INTERNAL_ROW_ID]))
+        )
+        with staged as del_df:
 
-        def pick(df, how):
-            """``left_semi``: the rows of ``df`` named by ``ids``;
-            ``left_anti``: the others."""
-            if small:
-                cond = _rid_in_sql(ids)
-                return df.filter(cond if how == "left_semi" else f"NOT ({cond})")
-            return df.join(
-                F.broadcast(del_df), df[INTERNAL_ROW_ID] == del_df["__update_row_id"], how
-            )
+            def pick(df, how):
+                """``left_semi``: the rows of ``df`` named by ``ids``;
+                ``left_anti``: the others."""
+                if small:
+                    return df.filter(cond if how == "left_semi" else f"NOT ({cond})")
+                return df.join(
+                    F.broadcast(del_df), df[INTERNAL_ROW_ID] == del_df["__update_row_id"], how
+                )
 
-        try:
             matched = keep = None
             if light:
                 matched = pick(self.df(
                     internal_row_id=True, files=light, with_file_path=True
                 ).select(INTERNAL_ROW_ID, "__source_file"), "left_semi")
+                if small:
+                    matched = matched.toArrow()
             if heavy:
                 keep = pick(self.df(internal_row_id=True, files=heavy), "left_anti")
             self._apply_dv_dml(
-                entry, "delete", light, matched, keep, replaces=heavy,
-                bounded=small, rows=len(ids),
+                entry, "delete", light, matched, keep, replaces=heavy, rows=len(ids)
             )
-        finally:
-            if del_path:
-                try:
-                    os.remove(del_path)
-                except OSError:
-                    pass
 
     def delete_where(self, predicate: Any) -> None:
         """Predicate DELETE (engine extension). Manifest pruning narrows the
@@ -1862,7 +1809,35 @@ class Table:
         if read:
             return read()
         df = self.df(internal_row_id=True, files=affected, with_file_path=True)
-        return df.filter(to_spark_predicate(predicate, self.arrow_schema))
+        df = df.filter(to_spark_predicate(predicate, self.arrow_schema))
+        if columns is None:
+            return df
+        return df.selectExpr(*map(quote_ident, [*columns, INTERNAL_ROW_ID, "__source_file"]))
+
+    def _assigned_cols(self, assignments: dict, base: DataFrame | None = None) -> list[Column]:
+        """The select list of new row versions: each table column named in
+        ``assignments`` takes its value (an Expr through to_spark(), a
+        Column as is, anything else — plain strings too — a literal) cast
+        to the column's storage type, so the written parquet stays
+        readable under the table's reader schema. Any other column is
+        ``base``'s, followed by ``base``'s ``$row_id`` and
+        ``__source_file`` (update_where, update, merge's updates), or NULL
+        without ``base`` (merge's inserts)."""
+        cols = []
+        for f in self.arrow_schema:
+            if f.name in assignments or base is None:
+                v = assignments.get(f.name)
+                if isinstance(v, Expr):
+                    v = v.to_spark()
+                elif not isinstance(v, Column):
+                    v = F.lit(v)
+                spark_t = arrow_type_to_spark(storage_arrow_type(f.type))
+                cols.append(v.cast(spark_t).alias(f.name))
+            else:
+                cols.append(base[f.name])
+        if base is not None:
+            cols += [base[INTERNAL_ROW_ID], base["__source_file"]]
+        return cols
 
     def dedup_rows(self, columns: list[str] | None = None) -> None:
         """Exact table dedup (engine extension): keep ONE row per distinct
@@ -2409,26 +2384,9 @@ class Table:
                     got.schema.get_field_index(c), c, pa.repeat(value, got.num_rows)
                 )
         else:
-            out_cols = []
-            for f in arrow:
-                if f.name in assignments:
-                    v = assignments[f.name]
-                    if isinstance(v, Expr):
-                        v = v.to_spark()
-                    elif not isinstance(v, Column):
-                        v = F.lit(v)
-                    # match the column's storage type so the rewritten
-                    # parquet stays readable under the table's reader schema
-                    v = v.cast(arrow_type_to_spark(storage.field(f.name).type))
-                    out_cols.append(v.alias(f.name))
-                else:
-                    out_cols.append(F.col(f.name))
-            out_cols.append(F.col(INTERNAL_ROW_ID))
-            out_cols.append(F.col("__source_file"))
-            got = got.select(*out_cols)
+            got = got.select(*self._assigned_cols(assignments, got))
         self._apply_dv_dml(
-            entry, "update_where", affected, got,
-            rewrite_masked=True, columns=sorted(assignments),
+            entry, "update_where", affected, got, got, columns=sorted(assignments)
         )
 
     def merge(
@@ -2490,8 +2448,6 @@ class Table:
         (distributed ``insert_df``); no data file is rewritten. Returns
         ``{"updated": n, "deleted": n, "inserted": n}``.
         """
-        from .expr import Expr
-
         arrow = self.arrow_schema
         bad = [k for k in on if k not in arrow.names or k not in source.columns]
         if bad or not on:
@@ -2590,13 +2546,6 @@ class Table:
                 c = base[k].eqNullSafe(source[k])
                 cond = c if cond is None else cond & c
 
-            def _compile(v):
-                if isinstance(v, Expr):
-                    return v.to_spark()
-                if isinstance(v, Column):
-                    return v
-                return F.lit(v)  # plain strings are literals, not SQL
-
             def _route(df_in, clause_list):
                 """Ordered first-TRUE-guard-wins routing shared by all WHEN
                 groups: yields (clause, branch-frame) pairs."""
@@ -2613,20 +2562,6 @@ class Table:
                         prior.append(F.lit(True))
                     yield cl, branch
 
-            def _replacement_cols(asg, default_upd):
-                out_cols = []
-                for f in arrow:
-                    upd = asg if asg is not None else default_upd
-                    if f.name in upd:
-                        v = _compile(upd[f.name])
-                        v = v.cast(arrow_type_to_spark(storage_arrow_type(f.type)))
-                        out_cols.append(v.alias(f.name))
-                    else:
-                        out_cols.append(base[f.name])
-                out_cols.append(base[INTERNAL_ROW_ID])
-                out_cols.append(base["__source_file"])
-                return out_cols
-
             upd_parts, del_parts = [], []
             if clauses:
                 joined = base.join(source, cond, "inner")
@@ -2638,7 +2573,7 @@ class Table:
                 for (action, _g, asg), branch in _route(joined, clauses):
                     if action == "update":
                         upd_parts.append(
-                            branch.select(*_replacement_cols(asg or None, default_upd))
+                            branch.select(*self._assigned_cols(asg or default_upd, base))
                         )
                     else:  # delete
                         del_parts.append(
@@ -2648,7 +2583,7 @@ class Table:
                 tgt_only = base.join(source, cond, "left_anti")
                 for (action, _g, asg), branch in _route(tgt_only, nmbs_clauses):
                     if action == "update":
-                        upd_parts.append(branch.select(*_replacement_cols(asg, {})))
+                        upd_parts.append(branch.select(*self._assigned_cols(asg, base)))
                     else:
                         del_parts.append(
                             branch.select(base[INTERNAL_ROW_ID], base["__source_file"])
@@ -2666,24 +2601,9 @@ class Table:
                 not_matched = source.join(base, cond, "left_anti")
                 ins_parts = []
                 for (_g, asg), branch in _route(not_matched, ins_clauses):
-                    ins_cols = []
-                    for f in arrow:
-                        spark_t = arrow_type_to_spark(storage_arrow_type(f.type))
-                        if asg is not None:
-                            if f.name in asg:
-                                v = _compile(asg[f.name])
-                                ins_cols.append(v.cast(spark_t).alias(f.name))
-                            else:
-                                ins_cols.append(
-                                    F.lit(None).cast(spark_t).alias(f.name)
-                                )
-                        elif f.name in source.columns:
-                            ins_cols.append(
-                                branch[f.name].cast(spark_t).alias(f.name)
-                            )
-                        else:
-                            ins_cols.append(F.lit(None).cast(spark_t).alias(f.name))
-                    ins_parts.append(branch.select(*ins_cols))
+                    if asg is None:  # the full source row
+                        asg = {c: branch[c] for c in source.columns if c in arrow.names}
+                    ins_parts.append(branch.select(*self._assigned_cols(asg)))
                 counts["inserted"] = self.insert_df(
                     reduce(DataFrame.unionByName, ins_parts)
                 )
@@ -2693,9 +2613,9 @@ class Table:
             # computed before the insert), keyed on the copy's entries
             entry = TableEntry.from_json(self.entry.to_json())
             affected = [fe for fe in entry.files if fe.path in pre_paths]
-            masked = [
-                replace_df.select(INTERNAL_ROW_ID, "__source_file")
-            ] if counts["updated"] else []
+            masked = []
+            if counts["updated"]:
+                masked.append(replace_df.select(INTERNAL_ROW_ID, "__source_file"))
             if del_df is not None:
                 masked.append(del_df)
 
@@ -2706,7 +2626,7 @@ class Table:
                 self._apply_dv_dml(
                     entry, "merge", affected,
                     reduce(DataFrame.unionByName, masked) if masked else None,
-                    replace_df.drop("__source_file") if counts["updated"] else None,
+                    replace_df if counts["updated"] else None,
                     changed=counts["inserted"] > 0,
                     updated=counts["updated"],
                     deleted=deleted,
@@ -4623,10 +4543,6 @@ class Projection:
             sub_entry.files = []
             sub_entry.projections = {proj_name: cfg_proj}
             sub._entry_override = sub_entry
-            # spill estimate: entry.num_rows is 0 with base files emptied;
-            # carry the split's real row count so a big split streams
-            # through the bounded-memory spill path instead of toArrow()
-            sub._est_rows_override = sum(f.rows for f in grp)
             yield from sub.select(names, predicate, forced)
 
         return pa.RecordBatchReader.from_batches(out_schema, gen())
